@@ -24,9 +24,11 @@ import traffic
 REL_TOL = 1e-6
 
 
-def corpus_pandas(n_convs: int, seed: int, burst_ids: Sequence[int] = ()) -> pd.DataFrame:
-    """The turns the engine indexed, generated driver-side."""
-    pdf = transcripts.generate_pandas(np.arange(n_convs), seed=seed)
+def corpus_pandas(n_convs: int, seed: int, burst_ids: Sequence[int] = (),
+                  first_conv: int = 0) -> pd.DataFrame:
+    """The turns of conversations [first_conv, n_convs) as the engine
+    indexed them, generated driver-side."""
+    pdf = transcripts.generate_pandas(np.arange(first_conv, n_convs), seed=seed)
     if len(burst_ids):
         burst = pdf["conv_id"].isin([f"conv-{c:08d}" for c in burst_ids])
         pdf.loc[burst, "text"] = pdf.loc[burst, "text"] + traffic.BURST_TEXT

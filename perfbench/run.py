@@ -40,17 +40,24 @@ from stats import summarize  # noqa: E402
 # Sizes are set for a 4-core box; see NOTES.md for how they relate to the
 # engine's caches.
 WORKLOADS = {
-    # persisted index, FIXTURES-shaped requests: per-request overhead dominates
+    # persisted index, FIXTURES-shaped requests: per-request overhead
+    # dominates.  search_p50_ms is the median of the cycle's first
+    # traffic.SERVE_GATED searches, which every run makes.
     "serve": {"n_convs": 2000},
-    # parquet-resident index with hot-term bursts, grown by micro-batch
-    # appends, each followed by high-df reads; then compacted and read again
+    # parquet-resident index with hot-term bursts, grown by a fixed number
+    # of micro-batch appends, each followed by high-df reads; then
+    # compacted and read again
     "ingest": {"n_convs": 1500, "batch_convs": 150, "reads_per_append": 2,
-               "min_appends": 2},
+               "appends": 2},
 }
 SETUP_REPS = 2
 TOP_K = 10
 MAX_CPUS = 4
 DRIVER_MEMORY = "2g"
+# G1 sizes the heap from measured pause times, so the JVM's resident size
+# (and peak_rss_mb) moved by hundreds of MiB between runs of the same
+# seed; the serial collector sizes it from heap occupancy alone
+JVM_GC = "-XX:+UseSerialGC"
 WARM_QUERY = {"match": {"text": "error handling"}}
 
 
@@ -143,16 +150,27 @@ def dir_bytes(path: str) -> int:
 
 
 def git_commit(root: str) -> Optional[str]:
-    head = os.path.join(root, ".git", "HEAD")
+    """HEAD's commit, read from .git (loose or packed ref); None in a plain
+    source tree."""
+    git = os.path.join(root, ".git")
     try:
-        with open(head) as f:
+        with open(os.path.join(git, "HEAD")) as f:
             ref = f.read().strip()
-        if ref.startswith("ref: "):
-            with open(os.path.join(root, ".git", ref[5:])) as f:
+        if not ref.startswith("ref: "):
+            return ref  # detached HEAD
+        ref = ref[5:]
+        loose = os.path.join(git, ref)
+        if os.path.isfile(loose):
+            with open(loose) as f:
                 return f.read().strip()
-        return ref
+        with open(os.path.join(git, "packed-refs")) as f:
+            for line in f:
+                sha, _, name = line.strip().partition(" ")
+                if name == ref:
+                    return sha
     except OSError:
-        return None  # a plain source tree (no git metadata)
+        pass
+    return None
 
 
 class Bench:
@@ -165,7 +183,8 @@ class Bench:
         self.attempted = 0
         self.failures: List[str] = []
         self.lat: Dict[str, List[float]] = {}  # request class -> seconds
-        self.to_check: List[Dict] = []  # {"req", "rows" | "resp"}
+        self.to_check: List[Dict] = []  # {"req", "rows" | "resp", "n_convs"}
+        self.n_indexed = self.cfg["n_convs"]  # conversations the reads see
         self.detail: Dict = {}
         self.spark = None
         self.tracer = None
@@ -188,7 +207,7 @@ class Bench:
         os.environ["SPARK_DRIVER_MEM"] = DRIVER_MEMORY
         os.environ["SPARK_DRIVER_JAVA_OPTS"] = (
             os.environ.get("SPARK_DRIVER_JAVA_OPTS", "")
-            + f" -Djava.io.tmpdir={tmp} -XX:-UsePerfData"
+            + f" -Djava.io.tmpdir={tmp} -XX:-UsePerfData {JVM_GC}"
         )
         from opensearch_spark.session import get_spark
 
@@ -230,15 +249,13 @@ class Bench:
 
         return IndexConfig(n_segments=max(self.n_cpus, 8))
 
-    def corpus_df(self, n_convs: int, first_conv: int = 0):
+    def corpus_df(self, n_convs: int):
         from pyspark.sql import functions as F
 
         import traffic
         from opensearch_spark.transcripts import generate
 
         docs = generate(self.spark, n_convs, seed=self.args.seed, partitions=self.n_cpus)
-        if first_conv:
-            docs = docs.filter(F.col("conv_id") >= f"conv-{first_conv:08d}")
         if self.args.workload == "ingest":
             ids = [f"conv-{c:08d}" for c in self.burst_ids()]
             docs = docs.withColumn(
@@ -248,6 +265,17 @@ class Bench:
                 .otherwise(F.col("text")),
             )
         return docs
+
+    def batch_df(self, lo: int, hi: int):
+        """Conversations [lo, hi) as a local DataFrame, generated driver-side
+        before the append is timed, so the append's jobs read only the
+        batch."""
+        import check
+        from opensearch_spark.transcripts import generate
+
+        schema = generate(self.spark, 0).schema
+        pdf = check.corpus_pandas(hi, self.args.seed, first_conv=lo)
+        return self.spark.createDataFrame(pdf[schema.fieldNames()], schema=schema)
 
     def burst_ids(self) -> List[int]:
         import traffic
@@ -333,10 +361,10 @@ class Bench:
             self.failures.append(f"{rid} {req['cls']}: {traceback.format_exc(limit=3)}")
             return None
         if req["prune"]:
-            self.detail.setdefault("wand", []).append(dict(wand.LAST_PRUNE_STATS))
+            self.detail.setdefault("wand", []).append({"req": rid, **wand.LAST_PRUNE_STATS})
         self.lat.setdefault(req["cls"], []).append(dt)
         if check:
-            self.to_check.append({"req": req, **out})
+            self.to_check.append({"req": req, **out, "n_convs": self.n_indexed})
         return dt
 
     def count_live(self, eng, expected: int, label: str) -> None:
@@ -353,26 +381,49 @@ class Bench:
 
     # -------------------------------------------------------------- workloads
 
-    def closed_loop(self, eng, stream: List[Dict]) -> float:
+    def warm_up(self, eng, reqs: List[Dict]) -> None:
+        """The searches ``reqs`` once each, untimed and unchecked."""
+        for req in reqs:
+            self.attempted += 1
+            try:
+                eng.search(req["body"], size=TOP_K, prune=req["prune"]).collect()
+            except Exception:
+                self.failures.append(f"warm-up {req['cls']}: {traceback.format_exc(limit=3)}")
+
+    def closed_loop(self, eng, stream: List[Dict]) -> Dict:
+        """Requests for the run's seconds, and at least until the cycle's
+        first ``SERVE_GATED`` searches are done; those give the gated
+        median, so every run and every commit measures the same request
+        classes."""
         import numpy as np
+
+        import traffic
 
         rng = np.random.default_rng([self.args.seed, 7])
         seen = set()
+        n_gated = traffic.SERVE_GATED
+        searches: List[Optional[float]] = []
         t0 = time.perf_counter()
         for req in stream:
-            if time.perf_counter() - t0 >= self.args.seconds:
+            if (time.perf_counter() - t0 >= self.args.seconds
+                    and len(searches) >= n_gated):
                 break
             # every class once, then a seeded half of the rest
             check = req["cls"] not in seen or rng.random() < 0.5
             seen.add(req["cls"])
-            self.run_request(eng, req, check)
+            dt = self.run_request(eng, req, check)
+            if req["kind"] == "search":
+                searches.append(dt)
         else:
             raise RuntimeError("request stream exhausted before the time was up")
-        return time.perf_counter() - t0
+        gated = [x for x in searches[:n_gated] if x is not None]
+        return {"window_s": time.perf_counter() - t0, "gated_search_s": gated}
 
     def ingest_loop(self, base: Dict, stream: List[Dict]) -> Dict:
-        """Appends, each followed by a few reads on the reopened index, for
-        the run's seconds; then compaction and a few reads more."""
+        """A fixed number of appends, each followed by a few reads on the
+        reopened index; then compaction and a few reads more.  The count is
+        fixed, not timed, so every run and every commit builds the same
+        index layout and runs the same reads."""
         from opensearch_spark.index.merge import merge_index
         from opensearch_spark.streaming.incremental import append_batch
         from opensearch_spark.transcripts import n_turns
@@ -381,30 +432,24 @@ class Bench:
         n0, bc, d = self.cfg["n_convs"], self.cfg["batch_convs"], base["dir"]
         stream = iter(stream)
         n_reads = self.cfg["reads_per_append"]
-        append_s, appended, batch = [], 0, 0
-        t0 = time.perf_counter()
-        # a fixed minimum keeps the index layout the reads see the same
-        # from run to run; a fast box fits more appends in the time
-        while batch < self.cfg["min_appends"] or time.perf_counter() - t0 < self.args.seconds:
+        append_s, appended = [], 0
+        for batch in range(self.cfg["appends"]):
             lo, hi = n0 + batch * bc, n0 + (batch + 1) * bc
+            docs = self.batch_df(lo, hi)
             self.attempted += 1
             with tr.job_group(self.spark, f"append-{batch}", layer="append"):
                 ta = time.perf_counter()
                 with tr.span("streaming.incremental.append_batch"):
-                    append_batch(self.spark, self.corpus_df(hi, first_conv=lo), d,
-                                 self.index_config(), batch_id=batch)
+                    append_batch(self.spark, docs, d, self.index_config(), batch_id=batch)
                 append_s.append(time.perf_counter() - ta)
             appended += n_turns(hi) - n_turns(lo)
-            batch += 1
+            self.n_indexed = hi
             idx, eng = self.open_engine(d)
             if idx.stats["n_docs"] != n_turns(hi):
-                self.failures.append(f"append {batch}: n_docs {idx.stats['n_docs']} != {n_turns(hi)}")
-            # only the last reads before compaction are checked: the
-            # oracle is built once, over the final corpus
-            self.to_check.clear()
+                self.failures.append(f"append {batch + 1}: n_docs {idx.stats['n_docs']} != {n_turns(hi)}")
             for req in (next(stream) for _ in range(n_reads)):
                 self.run_request(eng, req, check=True)
-        n_final = n0 + batch * bc
+        n_final = n0 + self.cfg["appends"] * bc
         self.count_live(eng, n_turns(n_final), "after the last append")
         merged = d + "-merged"
         with tr.job_group(self.spark, "merge", layer="merge"):
@@ -418,7 +463,7 @@ class Bench:
         self.count_live(eng, n_turns(n_final), "after compaction")
         return {
             "n_convs_final": n_final,
-            "appends": batch,
+            "appends": self.cfg["appends"],
             "append_turns": appended,
             "append_s": append_s,
             "compact_s": compact_s,
@@ -429,16 +474,20 @@ class Bench:
     # ----------------------------------------------------------------- checks
 
     def check_answers(self, n_convs: int) -> Dict:
+        """Checks every kept answer against an oracle over the corpus the
+        read saw (one oracle per corpus size); returns the text bytes of
+        the ``n_convs``-conversation corpus."""
         import check
 
         bursts = self.burst_ids() if self.args.workload == "ingest" else ()
         t0 = time.perf_counter()
-        pdf = check.corpus_pandas(n_convs, self.args.seed, bursts)
-        orc = check.build_oracle(pdf)
+        sizes = sorted({item["n_convs"] for item in self.to_check} | {n_convs})
+        pdfs = {n: check.corpus_pandas(n, self.args.seed, bursts) for n in sizes}
+        oracles = {n: check.build_oracle(pdfs[n]) for n in sizes}
         oracle_s = time.perf_counter() - t0
         checked = 0
         for item in self.to_check:
-            req = item["req"]
+            req, orc = item["req"], oracles[item["n_convs"]]
             if "resp" in item:
                 err = check.agg_mismatch(orc, req, item["resp"])
             else:
@@ -449,7 +498,7 @@ class Bench:
             checked += 1
             if err:
                 self.failures.append(f"{req['cls']} {json.dumps(req['body'])}: {err}")
-        text_bytes = int(pdf["text"].str.encode("utf-8").str.len().sum())
+        text_bytes = int(pdfs[n_convs]["text"].str.encode("utf-8").str.len().sum())
         return {"oracle_build_s": oracle_s, "checked": checked, "text_bytes": text_bytes}
 
     # -------------------------------------------------------------------- run
@@ -473,6 +522,7 @@ class Bench:
 
         meta.update({
             "master": sc.master, "driver_memory": sc.getConf().get("spark.driver.memory"),
+            "jvm_gc": JVM_GC,
             "spark": self.spark.version, "pyarrow": pyarrow.__version__,
             "pandas": pandas.__version__, "index_segments": self.index_config().n_segments,
             **self.cfg,
@@ -484,12 +534,19 @@ class Bench:
         base = self.setup()
         phases["setup"] = time.perf_counter() - t
         t = time.perf_counter()
+        # warm each shape the gated requests use, with requests of their
+        # own, so the gated ones do not pay first-use code generation
+        n_warm = len(traffic.INGEST_CYCLE if wl == "ingest" else traffic.SERVE_HEAD)
+        self.warm_up(base["eng"], traffic.request_stream(
+            wl, self.args.seed, n, n_warm, stream=traffic.WARM_STREAM))
+        phases["warm_up"] = time.perf_counter() - t
+        t = time.perf_counter()
         if wl == "ingest":
             ingest = self.ingest_loop(base, stream)
             n_final = ingest["n_convs_final"]
             index_bytes = ingest["incremental_index_bytes"]
         else:
-            window_s = self.closed_loop(base["eng"], stream)
+            loop = self.closed_loop(base["eng"], stream)
             n_final = n
             index_bytes = dir_bytes(base["dir"])
         peak_rss_mb = rss.stop()
@@ -504,11 +561,14 @@ class Bench:
 
         reads = {c: v for c, v in self.lat.items() if c != "agg"}
         search_lat = [x for v in reads.values() for x in v]
+        # serve gates on its fixed head of searches; ingest's reads are a
+        # fixed set already
+        gated_lat = loop["gated_search_s"] if wl == "serve" else search_lat
         agg_lat = self.lat.get("agg", [])
         all_lat = search_lat + agg_lat
         e2e = {
             "setup_s": (session_s + statistics.median(base["rep_s"]), "s"),
-            "search_p50_ms": (statistics.median(search_lat) * 1e3, "ms"),
+            "search_p50_ms": (statistics.median(gated_lat) * 1e3, "ms"),
             "build_turns_per_s": (n_turns(n) / statistics.median(base["build_s"]), "1/s"),
             "index_bytes_per_text_byte": (index_bytes / checks["text_bytes"], "ratio"),
             "peak_rss_mb": (peak_rss_mb, "MiB"),
@@ -530,7 +590,8 @@ class Bench:
             "failures": self.failures[:20],
         }
         if wl != "ingest":
-            detail["window_s"] = window_s
+            detail["window_s"] = loop["window_s"]
+            detail["gated_search_ms"] = self.summary(gated_lat)
         else:
             detail["ingest"] = {
                 "appends": ingest["appends"],
@@ -648,7 +709,7 @@ class Bench:
         persists = [s["end"] - s["start"] for s in spans if s["name"] == "index.reader.persist"]
         if persists:
             layers["index.reader.persist_s"] = med(persists)
-        wand = self.detail.pop("wand", [])
+        wand = self.detail.get("wand", [])
         if wand:
             total = sum(w.get("total_blocks", 0) for w in wand)
             kept = sum(w.get("kept_blocks", 0) for w in wand)

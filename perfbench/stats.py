@@ -42,9 +42,3 @@ def summarize(samples: Sequence[float]) -> Dict:
             out[f"p{pct:g}"] = v
     return out
 
-
-def iqr_spread(values: Sequence[float]) -> float:
-    """Distance between the first and third quartile as a share of the
-    median (``statistics.quantiles(values, n=4)``)."""
-    q1, med, q3 = statistics.quantiles(values, n=4)
-    return (q3 - q1) / med

@@ -3,8 +3,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import pytest  # noqa: E402
-
 import stats  # noqa: E402
 
 
@@ -24,8 +22,3 @@ def test_summary_always_has_count_and_median():
     s = stats.summarize([float(i) for i in range(200)])
     assert s["n"] == 200 and "p90" in s and "p99" not in s
 
-
-def test_iqr_spread_is_relative_to_the_median():
-    vals = [8.0, 9.0, 10.0, 11.0, 12.0]
-    # statistics.quantiles (exclusive method): q1 = 8.5, q3 = 11.5
-    assert stats.iqr_spread(vals) == pytest.approx(3.0 / 10.0)

@@ -25,8 +25,24 @@ def test_other_seed_other_requests_same_shapes(workload):
     assert [r["cls"] for r in a] == [r["cls"] for r in b]
 
 
+@pytest.mark.parametrize("workload", ["serve", "ingest"])
+def test_warm_up_stream_has_the_shapes_but_other_requests(workload):
+    a = traffic.request_stream(workload, 5, 2000, 12)
+    w = traffic.request_stream(workload, 5, 2000, 12, stream=traffic.WARM_STREAM)
+    assert [r["cls"] for r in a] == [r["cls"] for r in w]
+    assert [r["body"] for r in a] != [r["body"] for r in w]
+
+
+def test_serve_gated_searches_are_the_head_twice():
+    reqs = traffic.request_stream("serve", 1, 2000, 40)
+    searches = [r["cls"] for r in reqs if r["kind"] == "search"]
+    assert searches[:traffic.SERVE_GATED] == 2 * traffic.SERVE_HEAD
+    # at least one aggregation runs before the gated searches are done
+    assert "agg" in [r["cls"] for r in reqs[:traffic.SERVE_GATED]]
+
+
 def test_serve_mix_shares():
-    reqs = traffic.request_stream("serve", 1, 2000, 120)
+    reqs = traffic.request_stream("serve", 1, 2000, 10 * len(traffic.SERVE_CYCLE))
     aggs = [r for r in reqs if r["cls"] == "agg"]
     assert len(aggs) == 20 and all(r["kind"] == "rest" for r in aggs)
     assert {r["cls"] for r in reqs} == set(traffic.SERVE_CYCLE)
@@ -44,10 +60,10 @@ def test_phrases_come_from_the_generated_corpus():
 
 def test_only_hot_term_requests_prune():
     for r in traffic.request_stream("ingest", 2, 1500, 20):
-        assert (r["prune"] is True) == (r["cls"] == "hot_or_pruned")
+        assert (r["prune"] is True) == (r["cls"] == "hot_term_pruned")
 
 
 def test_burst_conversations_are_seeded():
     assert traffic.burst_conv_ids(3, 1500) == traffic.burst_conv_ids(3, 1500)
-    assert len(traffic.burst_conv_ids(3, 1500)) == 1
+    assert len(traffic.burst_conv_ids(3, 1500)) == traffic.MIN_BURST_CONVS
     assert len(traffic.burst_conv_ids(3, 5000)) == 5
