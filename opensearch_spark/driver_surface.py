@@ -197,7 +197,7 @@ def _sql_match_sim(terms: Dict[str, int], per_term: str, op: str, k: int = 10) -
 
 
 # per-term score expressions for the similarity ops (float32-narrowed,
-# mirroring similarities.py score_col exactly)
+# mirroring similarities.py score_sql exactly)
 _SIM_LMD = (
     "CAST(greatest(ln(1 + t.tf / (2000.0 * (c.ttf + 1.0) / (m.sum_dl + 1.0)))"
     " + ln(2000.0 / (q2.qdl + 2000.0)), 0.0) AS REAL)"

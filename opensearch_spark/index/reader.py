@@ -22,9 +22,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from opensearch_spark import sqltext
 from opensearch_spark.analysis import analyzer as ana
 from opensearch_spark.index import codec
 from opensearch_spark.index.builder import _paths
+
+
+def _term_in(terms: Sequence[str]) -> str:
+    """SQL ``term IN (...)`` over literal terms: one parse on the JVM
+    instead of a Column tree, and still pushed into the Parquet scan."""
+    return "term IN (" + ", ".join(sqltext.string(t) for t in terms) + ")"
 
 
 class InvertedIndex:
@@ -240,8 +247,8 @@ class InvertedIndex:
         if missing:
             rows = (
                 self.dictionary()
-                .filter(F.col("term").isin(missing))
-                .select("term", "df", "total_tf", "n_blocks")
+                .where(_term_in(missing))
+                .selectExpr("term", "df", "total_tf", "n_blocks")
                 .collect()
             )
             for r in rows:
@@ -270,7 +277,7 @@ class InvertedIndex:
         terms = sorted(set(terms))
         if not terms:
             return self._empty_postings(with_positions)
-        blocks = self.postings().filter(F.col("term").isin(terms))
+        blocks = self.postings().where(_term_in(terms))
         return self.decode_blocks(blocks, with_positions)
 
     def decode_blocks(
@@ -281,7 +288,7 @@ class InvertedIndex:
         cols = ["term", "base_doc", "n_docs", "docs_bin", "tfs_bin", "norms_bin"]
         if with_positions:
             cols.append("pos_bin")
-        blocks = blocks.select(*cols)
+        blocks = blocks.selectExpr(*cols)
 
         fields = [
             T.StructField("term", T.StringType()),

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import math
 from collections import Counter
-from typing import Dict, List, Optional, Sequence, Tuple
+from typing import Callable, Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 
@@ -33,15 +33,23 @@ class OracleIndex:
         id_cols: Sequence[str] = ("conv_id", "turn_idx"),
         text_col: str = "text",
         stopwords=None,
+        analyzer: Optional[Callable[[str], Tuple[List[str], List[int]]]] = None,
     ):
+        """``analyzer`` (text -> (tokens, positions)) replaces the
+        standard analyzer on both the index and the query side, for
+        indexes built with a custom ``IndexConfig.analyzer`` chain."""
         self.id_cols = list(id_cols)
         self.text_col = text_col
         stop = ana.resolve_stopwords(stopwords)
+        self.analyzer = analyzer
         self.rows = sorted(rows, key=lambda r: tuple(r[c] for c in id_cols))
         self.tokens: List[List[str]] = []
         self.positions: List[List[int]] = []
         for r in self.rows:
-            t, p = ana.tokenize_with_positions(r[text_col], stop)
+            if analyzer is not None:
+                t, p = analyzer(r[text_col])
+            else:
+                t, p = ana.tokenize_with_positions(r[text_col], stop)
             self.tokens.append(t)
             self.positions.append(p)
         self.dl = np.array([len(t) for t in self.tokens], dtype=np.int64)
@@ -78,7 +86,7 @@ class OracleIndex:
         minimum_should_match: Optional[int] = None,
         stopwords=None,
     ) -> Dict[int, float]:
-        toks = ana.tokenize(query, ana.resolve_stopwords(stopwords))
+        toks = self._query_tokens(query, stopwords)
         if not toks:
             return {}
         weights = Counter(toks)
@@ -99,6 +107,11 @@ class OracleIndex:
                 matched[d] = matched.get(d, 0) + w
         return {d: s for d, s in scores.items() if matched[d] >= required}
 
+    def _query_tokens(self, query: str, stopwords) -> List[str]:
+        if self.analyzer is not None:
+            return list(self.analyzer(query)[0])
+        return ana.tokenize(query, ana.resolve_stopwords(stopwords))
+
     def term(self, value: str) -> Dict[int, float]:
         plist = self.post.get(value)
         if not plist:
@@ -110,7 +123,7 @@ class OracleIndex:
         }
 
     def phrase(self, query: str, stopwords=None) -> Dict[int, float]:
-        toks = ana.tokenize(query, ana.resolve_stopwords(stopwords))
+        toks = self._query_tokens(query, stopwords)
         if not toks:
             return {}
         if len(toks) == 1:

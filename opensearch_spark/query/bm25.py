@@ -14,8 +14,13 @@ free, SURVEY.md §3.1).  Per-term scores are computed in float64 and
 rounded to float32 — the same double-compute-then-narrow Lucene does —
 then summed across terms in float64.
 
-The norm decode is a 256-entry literal array evaluated JVM-side
-(``element_at``), so scoring stays inside whole-stage codegen: no Python
+Both the norm decode and the score are SQL text, not Column trees:
+the 256-entry norm table is one constant array literal rendered once at
+import (``NORM_TABLE_SQL``), and ``term_score_sql`` holds the formula
+once for every BM25 clause (term, phrase, span, intervals, WAND bounds).
+A caller puts them into a ``selectExpr``, so a scoring projection costs
+a handful of py4j round trips to build instead of one per literal, and
+the decode (``element_at``) stays inside whole-stage codegen: no Python
 in the per-posting hot path.
 """
 
@@ -24,9 +29,8 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
+from opensearch_spark import sqltext
 from opensearch_spark.analysis import smallfloat as sfl
 
 K1 = 1.2
@@ -38,34 +42,38 @@ def idf(df: int, doc_count: int) -> float:
     return math.log(1.0 + (doc_count - df + 0.5) / (df + 0.5))
 
 
-def norm_decode_col(norm_byte: Column) -> Column:
-    """Quantized doc length from the 1-byte norm, via a JVM-side literal
-    lookup table (element_at is 1-indexed)."""
-    table = F.array(*[F.lit(int(v)) for v in sfl.DECODE_TABLE])
-    return F.element_at(table, norm_byte + 1)
+# the SmallFloat byte4 decode table as ONE constant SQL array: every
+# caller shares this string, so no request re-creates the 256 literals
+NORM_TABLE_SQL = "array(" + ", ".join(str(int(v)) for v in sfl.DECODE_TABLE) + ")"
 
 
-def term_score_col(
-    tf: Column,
-    idf_col: Column,
-    dl: Column,
+def norm_decode_sql(norm_byte: str) -> str:
+    """Quantized doc length from the 1-byte norm column ``norm_byte``
+    (SQL text; element_at is 1-indexed)."""
+    return f"element_at({NORM_TABLE_SQL}, {norm_byte} + 1)"
+
+
+def term_score_sql(
+    tf: str,
+    idf: str,
+    dl: str,
     avgdl: float,
     k1: float = K1,
     b: float = B,
-) -> Column:
-    """Per-(term, doc) BM25 score, float64 math narrowed to float32."""
-    tf_d = tf.cast("double")
-    denom = tf_d + F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * dl.cast("double") / F.lit(float(avgdl))
-    )
-    return (idf_col * F.lit(k1 + 1.0) * tf_d / denom).cast("float")
+) -> str:
+    """Per-(term, doc) BM25 score as SQL text over the expressions
+    ``tf``, ``idf`` and ``dl``: float64 math narrowed to float32."""
+    d = sqltext.double
+    tf_d, dl_d = f"CAST({tf} AS DOUBLE)", f"CAST({dl} AS DOUBLE)"
+    denom = f"({tf_d} + {d(k1)} * ({d(1.0 - b)} + {d(b)} * {dl_d} / {d(avgdl)}))"
+    return f"CAST(({idf}) * {d(k1 + 1.0)} * {tf_d} / {denom} AS FLOAT)"
 
 
 def term_score_np(
     tf: np.ndarray, idf_val: float, dl: np.ndarray, avgdl: float,
     k1: float = K1, b: float = B,
 ) -> np.ndarray:
-    """Numpy twin of term_score_col (used by WAND bounds + the oracle)."""
+    """Numpy twin of term_score_sql (used by WAND bounds + the oracle)."""
     tf = np.asarray(tf, dtype=np.float64)
     dl = np.asarray(dl, dtype=np.float64)
     denom = tf + k1 * (1.0 - b + b * dl / avgdl)

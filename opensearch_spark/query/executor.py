@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import contextlib
 import fnmatch
-import re
 from collections import Counter
 from functools import reduce
 from typing import Dict, List, Optional, Sequence, Tuple
@@ -31,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from opensearch_spark import sqltext
 from opensearch_spark.analysis import smallfloat as sfl
 from opensearch_spark.index.reader import InvertedIndex
 from opensearch_spark.query import bm25
@@ -1528,12 +1528,9 @@ class SearchEngine:
                 cond = cond | (eq & cmp)
                 eq = eq & key_eq
             joined = joined.filter(cond)
-        topk = (
-            joined
-            .orderBy(*order)
-            .limit(from_ + size)
-            .offset(from_)
-        )
+        topk = joined.orderBy(*order).limit(from_ + size)
+        if from_:
+            topk = topk.offset(from_)
         fetch_cols = list(dict.fromkeys(fetch_cols + sort_cols))
         # script_fields (SearchSourceBuilder scriptFields; the fetch-phase
         # projection UDF context of SURVEY §2.9): each value is
@@ -1586,15 +1583,16 @@ class SearchEngine:
         # whenever the formatted field is also a sort key
         def _out(fld):
             # fetched doc-value columns may carry dotted REQUEST names
-            # (struct paths / .keyword aliases) -> address literally
-            _c = F.col(f"`{fld}`") if "." in fld else F.col(fld)
+            # (struct paths / .keyword aliases) -> address literally;
+            # SQL text (one F.expr each), a Column only for the ip UDF
+            c = sqltext.ident(fld)
             fmt = docvalue_fields.get(fld)
             if fmt is None:
                 sf = self._scaled_factor(fld)
                 if sf is not None:
                     # ScaledFloatFieldMapper doc-value fetch decodes
                     # scaled long / factor (:288)
-                    return (_c.cast("double") / F.lit(sf)).alias(fld)
+                    return f"CAST({c} AS DOUBLE) / {sqltext.double(sf)} AS {c}"
                 if self._is_ip_field(fld):
                     # decode the stored 32-hex form back to address text
                     from pyspark.sql.functions import pandas_udf
@@ -1614,24 +1612,34 @@ class SearchEngine:
 
                         return s.map(dec)
 
-                    return _ip_text(_c).alias(fld)
-                return _c.alias(fld) if "." in fld else _c
-            c = _c
+                    return _ip_text(F.expr(c)).alias(fld)
+                return c
             if fmt == "epoch_millis":
-                return F.unix_millis(c.cast("timestamp")).cast("string").alias(fld)
+                return f"CAST(unix_millis(CAST({c} AS TIMESTAMP)) AS STRING) AS {c}"
             if fmt == "epoch_second":
-                return F.unix_seconds(c.cast("timestamp")).cast("string").alias(fld)
-            if re.fullmatch(r"#*\.?0*", fmt):
-                # DecimalFormat-style numeric pattern ('#.0' and kin):
-                # fraction digits = the pattern's zero count
-                digits = len(fmt.split(".")[1]) if "." in fmt else 0
-                return F.format_string(
-                    f"%.{digits}f", c.cast("double")
-                ).alias(fld)
-            return F.date_format(c.cast("timestamp"), fmt).alias(fld)
+                return f"CAST(unix_seconds(CAST({c} AS TIMESTAMP)) AS STRING) AS {c}"
+            dec = sqltext.decimal_pattern(fmt)
+            if dec is not None:
+                # DecimalFormat-style numeric pattern ('0.0', '#,##0.00',
+                # 'Value is ##0.0'): literal text around the number stays
+                prefix, digits, suffix = dec
+                pattern = (
+                    prefix.replace("%", "%%") + f"%.{digits}f" + suffix.replace("%", "%%")
+                )
+                return (
+                    f"format_string({sqltext.string(pattern)}, CAST({c} AS DOUBLE))"
+                    f" AS {c}"
+                )
+            return f"date_format(CAST({c} AS TIMESTAMP), {sqltext.string(fmt)}) AS {c}"
 
+        if extra or script_fields:
+            # the fetch join does not keep the top-k order: sort the k
+            # rows again (a plain top-k is already in order)
+            topk = topk.orderBy(*order)
         out_cols = [_out(c) for c in list(fetch_cols) + list(script_fields)]
-        return topk.orderBy(*order).select(*out_cols, "score")
+        return topk.select(
+            *[F.expr(c) if isinstance(c, str) else c for c in out_cols], "score"
+        )
 
     def scan(self, query, batch_size: int = 500, source_cols=None,
              slice: Optional[Dict] = None):
@@ -2584,17 +2592,6 @@ class SearchEngine:
             )
             for t, df_, ttf_ in zip(stats["term"], stats["df"], stats["total_tf"])
         ]
-        from opensearch_spark.query.similarities import Scripted
-
-        if isinstance(sim, Scripted):
-            score_col = lambda: sim.score_full_col(  # noqa: E731
-                F.col("tf"), F.col("dl"), F.col("df"), F.col("ttf"),
-                float(N), sum_dl, float(avgdl),
-            )
-        else:
-            score_col = lambda: sim.score_col(  # noqa: E731
-                F.col("tf"), F.col("idf"), F.col("dl")
-            )
         post = self.index.postings_for_terms([r[0] for r in rows])
         if len(rows) <= INLINE_STATS_MAX_TERMS:
             # the per-term constants are plan-time literals: inline them
@@ -2606,27 +2603,39 @@ class SearchEngine:
             # query, not two+).  Large expansion sets (wildcard/fuzzy)
             # keep the broadcast join: a 10k-branch CASE would blow up
             # codegen, and there the scan dwarfs the extra job anyway.
-            def _case(idx: int, typ: str):
-                e = F.when(F.col("term") == rows[0][0], F.lit(rows[0][idx]))
-                for r in rows[1:]:
-                    e = e.when(F.col("term") == r[0], F.lit(r[idx]))
-                return e.cast(typ)
-
-            post = (
-                post.withColumn("idf", _case(1, "double"))
-                .withColumn("df", _case(2, "double"))
-                .withColumn("ttf", _case(3, "double"))
-                .withColumn("weight", _case(4, "int"))
+            idf, df, ttf, weight = (
+                sqltext.case_on("term", {r[0]: fmt(r[i]) for r in rows})
+                for i, fmt in (
+                    (1, sqltext.double), (2, sqltext.double),
+                    (3, sqltext.double), (4, str),
+                )
             )
         else:
             stats_df = self.spark.createDataFrame(
                 rows, "term string, idf double, df double, ttf double, weight int"
             )
             post = post.join(F.broadcast(stats_df), "term")
-        return (
-            post.withColumn("dl", bm25.norm_decode_col(F.col("norm_byte")))
-            .withColumn("s", score_col())
-            .select("term", "_docid", "s", "weight")
+            idf, df, ttf, weight = "idf", "df", "ttf", "weight"
+        dl = bm25.norm_decode_sql("norm_byte")
+        from opensearch_spark.query.similarities import Scripted
+
+        if isinstance(sim, Scripted):
+            # a user function of Columns: the constants stay SQL, the
+            # score is the function's own Column tree
+            return post.selectExpr(
+                "term", "_docid", "tf", f"{dl} AS dl", f"{df} AS df",
+                f"{ttf} AS ttf", f"{weight} AS weight",
+            ).select(
+                "term", "_docid",
+                sim.score_full_col(
+                    F.col("tf"), F.col("dl"), F.col("df"), F.col("ttf"),
+                    float(N), sum_dl, float(avgdl),
+                ).alias("s"),
+                "weight",
+            )
+        return post.selectExpr(
+            "term", "_docid", f"{sim.score_sql('tf', idf, dl)} AS s",
+            f"{weight} AS weight",
         )
 
     def _score_common_terms(self, q: "Q.CommonTerms") -> DataFrame:
@@ -2704,13 +2713,17 @@ class SearchEngine:
         per = self._per_term_scores(weights)
         if per is None:
             return self._empty_scored()
-        grouped = per.groupBy("_docid").agg(
-            F.sum(F.col("s").cast("double") * F.col("weight")).alias("score"),
-            F.sum("weight").alias("matched_clauses"),
+        score = F.expr(
+            f"sum(CAST(s AS DOUBLE) * weight) * {sqltext.double(boost)} AS score"
         )
-        out = grouped.filter(F.col("matched_clauses") >= F.lit(int(required)))
-        return out.select(
-            "_docid", (F.col("score") * F.lit(float(boost))).alias("score")
+        grouped = per.groupBy("_docid")
+        if required <= 1:
+            # every grouped doc matched at least one clause (weight >= 1)
+            return grouped.agg(score)
+        return (
+            grouped.agg(score, F.expr("sum(weight) AS matched_clauses"))
+            .where(f"matched_clauses >= {int(required)}")
+            .selectExpr("_docid", "score")
         )
 
     def _score_phrase(self, p: Q.MatchPhrase) -> DataFrame:
@@ -2733,36 +2746,36 @@ class SearchEngine:
         if len(stats) < len(uniq):
             return self._empty_scored()  # some phrase term absent from corpus
         N = self.index.stats["doc_count"]
-        avgdl = self.index.stats["avgdl"]
         idf_sum = float(sum(bm25.idf(int(d), N) for d in stats["df"]))
 
         post = self.index.postings_for_terms(uniq, with_positions=True)
-        agg = (
+        agg = self._term_positions_by_doc(post, len(uniq))
+        return self._phrase_score_from_tp(agg, qpos_by_term, idf_sum, p.boost)
+
+    @staticmethod
+    def _term_positions_by_doc(post: DataFrame, n_terms: int) -> DataFrame:
+        """Per-doc (tp: list<(term, positions)>, norm_byte) over the
+        positional postings ``post``, for docs holding all ``n_terms``
+        distinct query terms."""
+        return (
             post.groupBy("_docid")
             .agg(
-                F.collect_list(F.struct("term", "positions")).alias("tp"),
-                F.min("norm_byte").alias("norm_byte"),
-                F.count("term").alias("nt"),
+                F.expr("collect_list(struct(term, positions)) AS tp"),
+                F.expr("min(norm_byte) AS norm_byte"),
+                F.expr("count(term) AS nt"),
             )
-            .filter(F.col("nt") == F.lit(len(uniq)))
+            .where(f"nt = {int(n_terms)}")
         )
 
-        scored = self._phrase_score_from_tp(agg, qpos_by_term, idf_sum, avgdl)
-        if p.boost != 1.0:
-            scored = scored.withColumn("score", F.col("score") * F.lit(float(p.boost)))
-        return scored
-
     def _phrase_score_from_tp(
-        self, agg: DataFrame, qpos_by_term: dict, idf_sum, avgdl: float
+        self, agg: DataFrame, qpos_by_term: dict, idf, boost: float
     ) -> DataFrame:
         """Shared phrase-frequency scorer: ``agg`` has per-doc
         (tp: list<(term, positions)>, norm_byte); phrase tf = count of
         anchor positions where every query slot's term appears at the
-        right offset (Arrow-batched numpy intersection).  ``idf_sum``
-        may be a Python float or a Column (for plan-time-unknown
-        components like the phrase-prefix expansion df)."""
-        if isinstance(idf_sum, (int, float)):
-            idf_sum = F.lit(float(idf_sum))
+        right offset.  ``idf`` may be a Python float or SQL text over
+        ``agg``'s columns (for plan-time-unknown components like the
+        phrase-prefix expansion df)."""
         # r4 (VERDICT #9): the exact-phrase frequency is pure position
         # algebra with NO sequential data dependency, so it lowers to
         # JVM higher-order functions instead of a per-doc pandas UDF —
@@ -2773,33 +2786,18 @@ class SearchEngine:
         # cost is |starts| × Σ array_contains over per-doc position
         # lists (bounded by tf, typically single digits).
         first_t = next(t for t, qps in qpos_by_term.items() if 0 in qps)
-        pmap = F.map_from_entries("tp")  # term -> positions (unique per doc)
-
-        def _all_slots(s: Column) -> Column:
-            conds = [
-                F.array_contains(pmap[F.lit(t)], s + F.lit(int(qp)))
-                for t, qps in qpos_by_term.items()
-                for qp in qps
-                if not (t == first_t and qp == 0)
-            ]
-            return reduce(lambda a, b: a & b, conds) if conds else F.lit(True)
-
-        ptf_col = F.size(F.filter(pmap[F.lit(first_t)], _all_slots))
-
-        scored = (
-            agg.withColumn("ptf", ptf_col.cast("int"))
-            .filter(F.col("ptf") > 0)
-            .withColumn("dl", bm25.norm_decode_col(F.col("norm_byte")))
-            .withColumn(
-                "s",
-                bm25.term_score_col(
-                    F.col("ptf"), idf_sum, F.col("dl"), avgdl, self.k1, self.b
-                ),
-            )
+        pmap = "map_from_entries(tp)"  # term -> positions (unique per doc)
+        slots = " AND ".join(
+            f"array_contains({pmap}[{sqltext.string(t)}], _s + {int(qp)})"
+            for t, qps in qpos_by_term.items()
+            for qp in qps
+            if not (t == first_t and qp == 0)
+        ) or "true"
+        ptf = (
+            f"CAST(size(filter({pmap}[{sqltext.string(first_t)}],"
+            f" _s -> {slots})) AS INT) AS ptf"
         )
-        return scored.select(
-            "_docid", F.col("s").cast("double").alias("score")
-        )
+        return self._bm25_clause(agg.selectExpr("*", ptf), "ptf", idf, boost)
 
     def _score_match_bool_prefix(self, q: Q.MatchBoolPrefix) -> DataFrame:
         """Bool composition of term clauses + a constant-score prefix
@@ -2819,8 +2817,12 @@ class SearchEngine:
         if not tokens:
             return self._empty_scored()
         fuzz = getattr(q, "fuzziness", None)
+        # each part is a docset (unique _docid) scoring and counting as
+        # _n clauses: a repeated term is one BooleanQuery clause per
+        # occurrence, so it weighs in the score and in the clause count
+        # as many times as it occurs
         parts = []
-        for i, term in enumerate(dict.fromkeys(tokens[:-1])):
+        for term, n in Counter(tokens[:-1]).items():
             if fuzz is not None:
                 exp = sorted(self._expand_terms(Q.Fuzzy(
                     self.text_col, term, fuzziness=fuzz,
@@ -2828,41 +2830,33 @@ class SearchEngine:
                 )))[: getattr(q, "max_expansions", 50)]
                 if not exp:
                     continue
-                clause = self._docset_text_terms(exp).withColumn(
-                    "score", F.lit(1.0)
+                clause = self._docset_text_terms(exp).selectExpr(
+                    "_docid", f"{sqltext.double(n)} AS score"
                 )
             else:
-                clause = self._score_terms_or({term: 1}, required=1)
-            parts.append(clause.withColumn("_clause", F.lit(i)))
-        n_clauses = len(dict.fromkeys(tokens[:-1])) + 1
+                clause = self._score_terms_or({term: n}, required=1)
+            parts.append(clause.selectExpr("_docid", "score", f"{n} AS _n"))
         prefix_terms = self._expand_terms(Q.Prefix(self.text_col, tokens[-1]))
         if prefix_terms:
             parts.append(
                 self._docset_text_terms(prefix_terms)
-                .withColumn("score", F.lit(1.0))
-                .withColumn("_clause", F.lit(n_clauses - 1))
+                .selectExpr("_docid", "1.0D AS score", "1 AS _n")
             )
         if not parts:
             return self._empty_scored()
         if q.operator == "and":
-            required = n_clauses
+            required = len(tokens)
         elif q.minimum_should_match is not None:
             required = int(q.minimum_should_match)
         else:
             required = 1
-        unioned = reduce(DataFrame.unionByName, parts)
-        out = (
-            unioned.groupBy("_docid")
-            .agg(
-                F.sum("score").alias("score"),
-                F.count_distinct("_clause").alias("_nc"),
-            )
-            .filter(F.col("_nc") >= F.lit(required))
-            .drop("_nc")
+        return (
+            reduce(DataFrame.unionByName, parts)
+            .groupBy("_docid")
+            .agg(F.expr("sum(score) AS score"), F.expr("sum(_n) AS _nc"))
+            .where(f"_nc >= {required}")
+            .selectExpr("_docid", f"score * {sqltext.double(q.boost)} AS score")
         )
-        if q.boost != 1.0:
-            out = out.withColumn("score", F.col("score") * F.lit(float(q.boost)))
-        return out
 
     def _score_phrase_prefix(self, q: Q.MatchPhrasePrefix) -> DataFrame:
         """Phrase with last-slot prefix expansion
@@ -2885,7 +2879,6 @@ class SearchEngine:
         if len(stats) < len(uniq_fixed):
             return self._empty_scored()
         N = self.index.stats["doc_count"]
-        avgdl = self.index.stats["avgdl"]
         union_post = self.index.postings_for_terms(expansions, with_positions=True)
         # union df of the expansions (the pseudo-term's document
         # frequency) is computed INSIDE the plan — a 1-row aggregate
@@ -2895,9 +2888,9 @@ class SearchEngine:
         dfu = union_post.agg(
             F.count_distinct(F.col("_docid")).cast("double").alias("_dfu")
         )
-        idf_col = F.lit(fixed_idf) + F.log(
-            F.lit(1.0)
-            + (F.lit(float(N)) - F.col("_dfu") + F.lit(0.5)) / (F.col("_dfu") + F.lit(0.5))
+        idf_sql = (
+            f"{sqltext.double(fixed_idf)} + ln(1.0D + ({sqltext.double(N)}"
+            " - _dfu + 0.5D) / (_dfu + 0.5D))"
         )
         pseudo = "\x00prefix"
         post_fixed = self.index.postings_for_terms(uniq_fixed, with_positions=True)
@@ -2921,17 +2914,10 @@ class SearchEngine:
         qpos_by_term.setdefault(pseudo, []).append(len(tokens) - 1)
         n_slots_terms = len(set(fixed)) + 1
         agg = (
-            post.groupBy("_docid")
-            .agg(
-                F.collect_list(F.struct("term", "positions")).alias("tp"),
-                F.min("norm_byte").alias("norm_byte"),
-                F.count("term").alias("nt"),
-            )
-            .filter(F.col("nt") == F.lit(n_slots_terms))
+            self._term_positions_by_doc(post, n_slots_terms)
             .join(F.broadcast(dfu))
         )
-        scored = self._phrase_score_from_tp(agg, qpos_by_term, idf_col, avgdl)
-        return scored.withColumn("score", F.col("score") * F.lit(float(q.boost)))
+        return self._phrase_score_from_tp(agg, qpos_by_term, idf_sql, q.boost)
 
     def _score_multi_match(self, q: Q.MultiMatch) -> DataFrame:
         """Per-field match clauses combined best_fields (dis_max) or
@@ -3167,18 +3153,9 @@ class SearchEngine:
         if len(stats) < len(uniq):
             return self._empty_scored()
         N = self.index.stats["doc_count"]
-        avgdl = self.index.stats["avgdl"]
         idf_sum = float(sum(bm25.idf(int(d), N) for d in stats["df"]))
         post = self.index.postings_for_terms(uniq, with_positions=True)
-        agg = (
-            post.groupBy("_docid")
-            .agg(
-                F.collect_list(F.struct("term", "positions")).alias("tp"),
-                F.min("norm_byte").alias("norm_byte"),
-                F.count("term").alias("nt"),
-            )
-            .filter(F.col("nt") == F.lit(len(uniq)))
-        )
+        agg = self._term_positions_by_doc(post, len(uniq))
         order_terms = list(terms)
         gap_budget = max_gaps
         want_ordered = ordered
@@ -3262,20 +3239,7 @@ class SearchEngine:
                 "_docid", "norm_byte", interval_tf(F.col("tp")).alias("itf")
             )
 
-        scored = (
-            base.filter(F.col("itf") > 0)
-            .withColumn("dl", bm25.norm_decode_col(F.col("norm_byte")))
-            .withColumn(
-                "s",
-                bm25.term_score_col(
-                    F.col("itf"), F.lit(idf_sum), F.col("dl"), avgdl, self.k1, self.b
-                ),
-            )
-        )
-        return scored.select(
-            "_docid",
-            (F.col("s").cast("double") * F.lit(float(boost))).alias("score"),
-        )
+        return self._bm25_clause(base, "itf", idf_sum, boost)
 
     def _score_intervals_filtered(self, q) -> DataFrame:
         """``intervals`` with a ``filter`` clause (IntervalFilter.java
@@ -3320,7 +3284,6 @@ class SearchEngine:
         if len(stats) < len(buniq):
             return self._empty_scored()
         N = self.index.stats["doc_count"]
-        avgdl = self.index.stats["avgdl"]
         idf_sum = float(sum(bm25.idf(int(d), N) for d in stats["df"]))
         alln = sorted(set(buniq) | set(funiq))
         post = self.index.postings_for_terms(alln, with_positions=True)
@@ -3390,21 +3353,7 @@ class SearchEngine:
         base = agg.select(
             "_docid", "norm_byte", filtered_itf(F.col("tp")).alias("itf")
         )
-        scored = (
-            base.filter(F.col("itf") > 0)
-            .withColumn("dl", bm25.norm_decode_col(F.col("norm_byte")))
-            .withColumn(
-                "s",
-                bm25.term_score_col(
-                    F.col("itf"), F.lit(idf_sum), F.col("dl"),
-                    avgdl, self.k1, self.b,
-                ),
-            )
-        )
-        return scored.select(
-            "_docid",
-            (F.col("s").cast("double") * F.lit(float(q.boost))).alias("score"),
-        )
+        return self._bm25_clause(base, "itf", idf_sum, q.boost)
 
     def _score_sloppy_phrase(
         self, tokens: List[str], slop: int, boost: float
@@ -3427,18 +3376,9 @@ class SearchEngine:
         if len(stats) < len(uniq):
             return self._empty_scored()
         N = self.index.stats["doc_count"]
-        avgdl = self.index.stats["avgdl"]
         idf_sum = float(sum(bm25.idf(int(d), N) for d in stats["df"]))
         post = self.index.postings_for_terms(uniq, with_positions=True)
-        agg = (
-            post.groupBy("_docid")
-            .agg(
-                F.collect_list(F.struct("term", "positions")).alias("tp"),
-                F.min("norm_byte").alias("norm_byte"),
-                F.count("term").alias("nt"),
-            )
-            .filter(F.col("nt") == F.lit(len(uniq)))
-        )
+        agg = self._term_positions_by_doc(post, len(uniq))
         order_terms = list(tokens)
         gap_budget = int(slop)
 
@@ -3564,20 +3504,7 @@ class SearchEngine:
                 "_docid", "norm_byte", sloppy_tf(F.col("tp")).alias("stf")
             )
 
-        scored = (
-            base.filter(F.col("stf") > 0)
-            .withColumn("dl", bm25.norm_decode_col(F.col("norm_byte")))
-            .withColumn(
-                "s",
-                bm25.term_score_col(
-                    F.col("stf"), F.lit(idf_sum), F.col("dl"), avgdl, self.k1, self.b
-                ),
-            )
-        )
-        return scored.select(
-            "_docid",
-            (F.col("s").cast("double") * F.lit(float(boost))).alias("score"),
-        )
+        return self._bm25_clause(base, "stf", idf_sum, boost)
 
     def _score_span_first(self, q: Q.SpanFirst) -> DataFrame:
         """``span_first``: tf = positions of the term with 0-based
@@ -3587,24 +3514,12 @@ class SearchEngine:
         if stats.empty:
             return self._empty_scored()
         N = self.index.stats["doc_count"]
-        avgdl = self.index.stats["avgdl"]
         idf_v = float(bm25.idf(int(stats["df"].iloc[0]), N))
         post = self.index.postings_for_terms([q.term], with_positions=True)
         end = int(q.end)
         tf2 = F.size(F.filter(F.col("positions"), lambda p: p < F.lit(end)))
-        scored = (
-            post.withColumn("tf2", tf2)
-            .filter(F.col("tf2") > 0)
-            .withColumn("dl", bm25.norm_decode_col(F.col("norm_byte")))
-            .withColumn(
-                "s",
-                bm25.term_score_col(
-                    F.col("tf2"), F.lit(idf_v), F.col("dl"), avgdl, self.k1, self.b
-                ),
-            )
-        )
-        return scored.select(
-            "_docid", (F.col("s").cast("double") * F.lit(float(q.boost))).alias("score")
+        return self._bm25_clause(
+            post.withColumn("tf2", tf2), "tf2", idf_v, q.boost
         )
 
     def _score_span_not(self, q: Q.SpanNot) -> DataFrame:
@@ -3616,7 +3531,6 @@ class SearchEngine:
         if stats.empty:
             return self._empty_scored()
         N = self.index.stats["doc_count"]
-        avgdl = self.index.stats["avgdl"]
         idf_v = float(bm25.idf(int(stats["df"].iloc[0]), N))
         inc = self.index.postings_for_terms([q.include], with_positions=True)
         exc = (
@@ -3636,19 +3550,8 @@ class SearchEngine:
                 F.lit(False),
             ),
         )
-        scored = (
-            joined.withColumn("tf2", F.size(surv))
-            .filter(F.col("tf2") > 0)
-            .withColumn("dl", bm25.norm_decode_col(F.col("norm_byte")))
-            .withColumn(
-                "s",
-                bm25.term_score_col(
-                    F.col("tf2"), F.lit(idf_v), F.col("dl"), avgdl, self.k1, self.b
-                ),
-            )
-        )
-        return scored.select(
-            "_docid", (F.col("s").cast("double") * F.lit(float(q.boost))).alias("score")
+        return self._bm25_clause(
+            joined.withColumn("tf2", F.size(surv)), "tf2", idf_v, q.boost
         )
 
     def _score_span_contain(self, q) -> DataFrame:
@@ -3665,18 +3568,9 @@ class SearchEngine:
         if len(stats) < len(terms):
             return self._empty_scored()
         N = self.index.stats["doc_count"]
-        avgdl = self.index.stats["avgdl"]
         idf_sum = float(sum(bm25.idf(int(d), N) for d in stats["df"]))
         post = self.index.postings_for_terms(terms, with_positions=True)
-        agg = (
-            post.groupBy("_docid")
-            .agg(
-                F.collect_list(F.struct("term", "positions")).alias("tp"),
-                F.min("norm_byte").alias("norm_byte"),
-                F.count("term").alias("nt"),
-            )
-            .filter(F.col("nt") == F.lit(len(terms)))
-        )
+        agg = self._term_positions_by_doc(post, len(terms))
         big_seq = [str(t) for t in q.big_terms]
         little = str(q.little)
         slop, in_order = int(q.big_slop), bool(q.big_in_order)
@@ -3812,20 +3706,7 @@ class SearchEngine:
                 "_docid", "norm_byte", contain_tf(F.col("tp")).alias("ctf")
             )
 
-        scored = (
-            base.filter(F.col("ctf") > 0)
-            .withColumn("dl", bm25.norm_decode_col(F.col("norm_byte")))
-            .withColumn(
-                "s",
-                bm25.term_score_col(
-                    F.col("ctf"), F.lit(idf_sum), F.col("dl"), avgdl, self.k1, self.b
-                ),
-            )
-        )
-        return scored.select(
-            "_docid",
-            (F.col("s").cast("double") * F.lit(float(q.boost))).alias("score"),
-        )
+        return self._bm25_clause(base, "ctf", idf_sum, q.boost)
 
     def _score_interval_groups(
         self, groups: List[List[str]], max_gaps: int, ordered: bool, boost: float,
@@ -3864,7 +3745,6 @@ class SearchEngine:
         if any(not (set(g) & present) for g in groups):
             return self._empty_scored()  # a slot with no corpus term
         N = self.index.stats["doc_count"]
-        avgdl = self.index.stats["avgdl"]
         idf_sum = float(sum(bm25.idf(int(d), N) for d in stats["df"]))
         post = self.index.postings_for_terms(sorted(present), with_positions=True)
         agg = post.groupBy("_docid").agg(
@@ -3967,20 +3847,7 @@ class SearchEngine:
                 "_docid", "norm_byte", interval_tf(F.col("tp")).alias("itf")
             )
 
-        scored = (
-            base.filter(F.col("itf") > 0)
-            .withColumn("dl", bm25.norm_decode_col(F.col("norm_byte")))
-            .withColumn(
-                "s",
-                bm25.term_score_col(
-                    F.col("itf"), F.lit(idf_sum), F.col("dl"), avgdl, self.k1, self.b
-                ),
-            )
-        )
-        return scored.select(
-            "_docid",
-            (F.col("s").cast("double") * F.lit(float(boost))).alias("score"),
-        )
+        return self._bm25_clause(base, "itf", idf_sum, boost)
 
     def termvectors(self, doc_id_tuple) -> DataFrame:
         """``_termvectors`` (SURVEY.md §3.3): per-term tf within one doc
@@ -5137,7 +5004,30 @@ class SearchEngine:
         )
 
     def _empty_scored(self) -> DataFrame:
-        return self.spark.createDataFrame([], "_docid long, score double")
+        # a constant-false relation the optimizer can prove empty: it
+        # folds the whole search plan above it to an empty
+        # LocalRelation, so collecting runs no job (an RDD-backed empty
+        # frame still runs its jobs)
+        return self.spark.sql(
+            "SELECT CAST(NULL AS BIGINT) AS _docid, CAST(NULL AS DOUBLE) AS score"
+            " WHERE false"
+        )
+
+    def _bm25_clause(
+        self, base: DataFrame, tf: str, idf, boost: float = 1.0
+    ) -> DataFrame:
+        """Score ``base`` rows (_docid, norm_byte, <tf>) as one BM25
+        clause (_docid, score): rows with tf 0 drop out, ``idf`` is a
+        float or SQL text; one SQL projection, no Column tree."""
+        if not isinstance(idf, str):
+            idf = sqltext.double(idf)
+        s = bm25.term_score_sql(
+            tf, idf, bm25.norm_decode_sql("norm_byte"),
+            self.index.stats["avgdl"], self.k1, self.b,
+        )
+        return base.where(f"{tf} > 0").selectExpr(
+            "_docid", f"CAST({s} AS DOUBLE) * {sqltext.double(boost)} AS score"
+        )
 
     def _pred_docset(self, pred: Column, boost: float) -> DataFrame:
         # positive filter context: Spark's filter() already drops rows

@@ -273,20 +273,6 @@ class MultiFieldEngine:
 
             return tp.map(one).astype("int32")
 
-        avgdl = deng.index.stats["avgdl"]
-        scored = (
-            agg.withColumn("itf", interval_tf(F.col("tp")))
-            .filter(F.col("itf") > 0)
-            .withColumn("dl", bm25.norm_decode_col(F.col("norm_byte")))
-            .withColumn(
-                "s",
-                bm25.term_score_col(
-                    F.col("itf"), F.lit(float(idf_sum)), F.col("dl"), avgdl,
-                    deng.k1, deng.b,
-                ),
-            )
-        )
-        return scored.select(
-            "_docid",
-            (F.col("s").cast("double") * F.lit(float(boost))).alias("score"),
+        return deng._bm25_clause(
+            agg.withColumn("itf", interval_tf(F.col("tp"))), "itf", idf_sum, boost
         )

@@ -20,14 +20,14 @@ they produce live in ``lucene/search/similarities/``:
   independence measures Standardized ``(tf-e)/sqrt(e)``, Saturated
   ``(tf-e)/e``, ChiSquared ``(tf-e)^2/e`` (``Independence*.java``).
 
-Spark-first design: every similarity is a pure Catalyst column
-expression over per-posting ``(tf, dl)`` plus ONE broadcast per-term
-scalar (``tconst``) and engine-level constants — the scoring stays
-inside whole-stage codegen exactly like the BM25 path, and each class
-carries a numpy twin so the pure-Python oracle and WAND-style bound
-checks cannot drift.  Per-term scores are computed in float64 and
-narrowed to float32 (Lucene's SimScorer returns float), then summed in
-float64 across clauses.
+Spark-first design: every similarity is a pure Catalyst expression,
+written as SQL text (``score_sql``), over per-posting ``(tf, dl)`` plus
+ONE per-term scalar (``tconst``) and engine-level constants — the
+scoring stays inside whole-stage codegen exactly like the BM25 path,
+and each class carries a numpy twin so the pure-Python oracle and
+WAND-style bound checks cannot drift.  Per-term scores are computed in
+float64 and narrowed to float32 (Lucene's SimScorer returns float),
+then summed in float64 across clauses.
 
 Scope (documented deviation): the engine applies the configured
 similarity to the term/match scoring family (match, term, terms,
@@ -46,6 +46,7 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from opensearch_spark import sqltext
 from opensearch_spark.query import bm25
 
 _LN2 = math.log(2.0)
@@ -61,12 +62,13 @@ class Similarity:
         """The single per-term broadcast scalar this similarity needs."""
         raise NotImplementedError
 
-    def score_col(self, tf: Column, tconst: Column, dl: Column) -> Column:
-        """float32 per-(term, doc) score, JVM-side."""
+    def score_sql(self, tf: str, tconst: str, dl: str) -> str:
+        """float32 per-(term, doc) score as SQL text over the expressions
+        ``tf``, ``tconst`` and ``dl`` (``sqltext`` renders constants)."""
         raise NotImplementedError
 
     def score_np(self, tf, tconst: float, dl) -> np.ndarray:
-        """Numpy twin of score_col (oracle/tests)."""
+        """Numpy twin of score_sql (oracle/tests)."""
         raise NotImplementedError
 
 
@@ -83,8 +85,8 @@ class BM25(Similarity):
     def term_const(self, df, ttf, n, sum_dl):
         return bm25.idf(int(df), int(n))
 
-    def score_col(self, tf, tconst, dl):
-        return bm25.term_score_col(tf, tconst, dl, self.avgdl, self.k1, self.b)
+    def score_sql(self, tf, tconst, dl):
+        return bm25.term_score_sql(tf, tconst, dl, self.avgdl, self.k1, self.b)
 
     def score_np(self, tf, tconst, dl):
         return bm25.term_score_np(tf, tconst, dl, self.avgdl, self.k1, self.b)
@@ -101,13 +103,13 @@ class LMDirichlet(Similarity):
         # mu * p_c, with DefaultCollectionModel p_c = (ttf+1)/(sum_ttf+1)
         return self.mu * (float(ttf) + 1.0) / (float(sum_dl) + 1.0)
 
-    def score_col(self, tf, tconst, dl):
-        tf_d = tf.cast("double")
-        dl_d = dl.cast("double")
-        raw = F.log(F.lit(1.0) + tf_d / tconst) + F.log(
-            F.lit(self.mu) / (dl_d + F.lit(self.mu))
+    def score_sql(self, tf, tconst, dl):
+        mu = sqltext.double(self.mu)
+        raw = (
+            f"ln(1.0D + CAST({tf} AS DOUBLE) / ({tconst}))"
+            f" + ln({mu} / (CAST({dl} AS DOUBLE) + {mu}))"
         )
-        return F.greatest(raw, F.lit(0.0)).cast("float")
+        return f"CAST(greatest({raw}, 0.0D) AS FLOAT)"
 
     def score_np(self, tf, tconst, dl):
         tf = np.asarray(tf, dtype=np.float64)
@@ -127,14 +129,12 @@ class LMJelinekMercer(Similarity):
     def term_const(self, df, ttf, n, sum_dl):
         return (float(ttf) + 1.0) / (float(sum_dl) + 1.0)  # p_c
 
-    def score_col(self, tf, tconst, dl):
-        tf_d = tf.cast("double")
-        dl_d = dl.cast("double")
-        raw = F.log(
-            F.lit(1.0)
-            + (F.lit(1.0 - self.lam) * tf_d / dl_d) / (F.lit(self.lam) * tconst)
+    def score_sql(self, tf, tconst, dl):
+        raw = (
+            f"ln(1.0D + ({sqltext.double(1.0 - self.lam)} * CAST({tf} AS DOUBLE)"
+            f" / CAST({dl} AS DOUBLE)) / ({sqltext.double(self.lam)} * ({tconst})))"
         )
-        return F.greatest(raw, F.lit(0.0)).cast("float")
+        return f"CAST(greatest({raw}, 0.0D) AS FLOAT)"
 
     def score_np(self, tf, tconst, dl):
         tf = np.asarray(tf, dtype=np.float64)
@@ -153,8 +153,8 @@ class Boolean(Similarity):
     def term_const(self, df, ttf, n, sum_dl):
         return 1.0
 
-    def score_col(self, tf, tconst, dl):
-        return tconst.cast("float")
+    def score_sql(self, tf, tconst, dl):
+        return f"CAST(({tconst}) AS FLOAT)"
 
     def score_np(self, tf, tconst, dl):
         return np.full(np.shape(tf), np.float32(tconst), dtype=np.float32)
@@ -174,8 +174,8 @@ class MatchOnly(Similarity):
     def term_const(self, df, ttf, n, sum_dl):
         return bm25.idf(int(df), int(n))
 
-    def score_col(self, tf, tconst, dl):
-        return tconst.cast("float")
+    def score_sql(self, tf, tconst, dl):
+        return f"CAST(({tconst}) AS FLOAT)"
 
     def score_np(self, tf, tconst, dl):
         return np.full(np.shape(tf), np.float32(tconst), dtype=np.float32)
@@ -200,21 +200,20 @@ class DFI(Similarity):
         # expected = tconst * dl  with  tconst = (ttf+1)/(sum_ttf+1)
         return (float(ttf) + 1.0) / (float(sum_dl) + 1.0)
 
-    def _measure_col(self, tf_d: Column, exp: Column) -> Column:
+    def score_sql(self, tf, tconst, dl):
+        tf_d = f"CAST({tf} AS DOUBLE)"
+        exp = f"(({tconst}) * CAST({dl} AS DOUBLE))"
         if self.measure == "standardized":
-            return (tf_d - exp) / F.sqrt(exp)
-        if self.measure == "saturated":
-            return (tf_d - exp) / exp
-        return (tf_d - exp) * (tf_d - exp) / exp
-
-    def score_col(self, tf, tconst, dl):
-        tf_d = tf.cast("double")
-        exp = tconst * dl.cast("double")
-        m = self._measure_col(tf_d, exp)
-        raw = F.when(tf_d <= exp, F.lit(0.0)).otherwise(
-            F.log(m + F.lit(1.0)) / F.lit(_LN2)
+            m = f"({tf_d} - {exp}) / sqrt({exp})"
+        elif self.measure == "saturated":
+            m = f"({tf_d} - {exp}) / {exp}"
+        else:
+            m = f"({tf_d} - {exp}) * ({tf_d} - {exp}) / {exp}"
+        raw = (
+            f"CASE WHEN {tf_d} <= {exp} THEN 0.0D"
+            f" ELSE ln({m} + 1.0D) / {sqltext.double(_LN2)} END"
         )
-        return raw.cast("float")
+        return f"CAST({raw} AS FLOAT)"
 
     def score_np(self, tf, tconst, dl):
         tf = np.asarray(tf, dtype=np.float64)
@@ -244,7 +243,7 @@ class Scripted(Similarity):
         self._stats = (0.0, 0.0, 1.0)  # n, sum_dl, avgdl (bound by engine)
 
     # scripted needs df and ttf separately: the engine broadcasts both
-    # (score_col receives them as columns via the stats frame).
+    # (score_full_col receives them as columns via the stats frame).
     def term_const(self, df, ttf, n, sum_dl):
         return float(df)  # unused; kept for interface shape
 

@@ -43,6 +43,7 @@ from typing import Dict, List, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from opensearch_spark import sqltext
 from opensearch_spark.query import bm25
 
 
@@ -52,39 +53,22 @@ def block_bounds_df(index, terms: List[str], idf_by_term: Dict[str, float], avgd
     reads the executor-memory-pinned ``block_meta()`` frame (the Lucene
     skip-data-in-heap analog), so repeated metadata passes never re-walk
     the postings parquet."""
-    idf_map = F.create_map(
-        *[x for t in terms for x in (F.lit(t), F.lit(float(idf_by_term[t])))]
-    )
+    idf = sqltext.case_on("term", {t: sqltext.double(idf_by_term[t]) for t in terms})
     meta = index.block_meta()
-    has_ach = "max_tf_norm" in meta.columns
-    blocks = meta.filter(F.col("term").isin(list(terms))).select(
-        "term", "_seg", "block_id", "base_doc", "last_doc", "max_tf", "min_norm",
-        *(["max_tf_norm"] if has_ach else []),
-    )
-    dl_ub = bm25.norm_decode_col(F.col("min_norm"))
-    ub = bm25.term_score_col(
-        F.col("max_tf"), idf_map[F.col("term")], dl_ub, avgdl, k1, b
-    ).cast("double")
-    out = blocks.withColumn("ub", ub)
+
+    def bound(norm: str) -> str:
+        s = bm25.term_score_sql("max_tf", idf, bm25.norm_decode_sql(norm), avgdl, k1, b)
+        return f"CAST({s} AS DOUBLE)"
+
     # ACHIEVABLE per-block score: score(max_tf, dl(max_tf_norm)) — a
     # real doc in the block attains it (metadata_threshold_df's t), so
     # the driver path can derive the rank-safe threshold from the SAME
     # collected rows with no extra job
-    if has_ach:
-        out = out.withColumn(
-            "ach",
-            bm25.term_score_col(
-                F.col("max_tf"),
-                idf_map[F.col("term")],
-                bm25.norm_decode_col(F.col("max_tf_norm")),
-                avgdl,
-                k1,
-                b,
-            ).cast("double"),
-        )
-    else:
-        out = out.withColumn("ach", F.lit(None).cast("double"))
-    return out.drop(*(["max_tf_norm"] if has_ach else []))
+    ach = bound("max_tf_norm") if "max_tf_norm" in meta.columns else "CAST(NULL AS DOUBLE)"
+    return meta.filter(F.col("term").isin(list(terms))).selectExpr(
+        "term", "_seg", "block_id", "base_doc", "last_doc", "max_tf", "min_norm",
+        f"{bound('min_norm')} AS ub", f"{ach} AS ach",
+    )
 
 
 def metadata_threshold_df(engine, present, weights, idf_by_term, avgdl, k: int):
@@ -109,29 +93,19 @@ def metadata_threshold_df(engine, present, weights, idf_by_term, avgdl, k: int):
     post = engine.index.block_meta()
     if "max_tf_norm" not in post.columns:
         return None
-    idf_map = F.create_map(
-        *[x for t in present for x in (F.lit(t), F.lit(float(idf_by_term[t])))]
+    ach = bm25.term_score_sql(
+        "max_tf",
+        sqltext.case_on("term", {t: sqltext.double(idf_by_term[t]) for t in present}),
+        bm25.norm_decode_sql("max_tf_norm"),
+        avgdl,
+        engine.k1,
+        engine.b,
     )
-    w_map = F.create_map(
-        *[x for t in present for x in (F.lit(t), F.lit(float(weights[t])))]
-    )
-    blocks = post.filter(F.col("term").isin(list(present))).select(
-        "term", "max_tf", "max_tf_norm"
-    )
-    ach = (
-        bm25.term_score_col(
-            F.col("max_tf"),
-            idf_map[F.col("term")],
-            bm25.norm_decode_col(F.col("max_tf_norm")),
-            avgdl,
-            engine.k1,
-            engine.b,
-        ).cast("double")
-        * w_map[F.col("term")]
-    )
+    w_sql = sqltext.case_on("term", {t: sqltext.double(weights[t]) for t in present})
     w = Window.partitionBy("term").orderBy(F.desc("a"))
     return (
-        blocks.withColumn("a", ach)
+        post.filter(F.col("term").isin(list(present)))
+        .selectExpr("term", f"CAST({ach} AS DOUBLE) * ({w_sql}) AS a")
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == F.lit(int(k)))
         .agg(F.max("a").alias("_t"))
@@ -648,21 +622,17 @@ def _score_block_frame(
 
 
 def _score_decoded(engine, terms, weights, idf_by_term, avgdl, blocks: DataFrame) -> DataFrame:
-    decoded = engine.index.decode_blocks(blocks)
-    w_map = F.create_map(
-        *[x for t in terms for x in (F.lit(t), F.lit(int(weights[t])))]
+    s = bm25.term_score_sql(
+        "tf",
+        sqltext.case_on("term", {t: sqltext.double(idf_by_term[t]) for t in terms}),
+        bm25.norm_decode_sql("norm_byte"),
+        avgdl,
+        engine.k1,
+        engine.b,
     )
-    idf_map = F.create_map(
-        *[x for t in terms for x in (F.lit(t), F.lit(float(idf_by_term[t])))]
-    )
-    per = decoded.withColumn("dl", bm25.norm_decode_col(F.col("norm_byte"))).withColumn(
-        "s",
-        bm25.term_score_col(
-            F.col("tf"), idf_map[F.col("term")], F.col("dl"), avgdl, engine.k1, engine.b
-        ),
-    )
-    return per.groupBy("_docid").agg(
-        F.sum(F.col("s").cast("double") * w_map[F.col("term")]).alias("score")
+    w_sql = sqltext.case_on("term", {t: str(int(weights[t])) for t in terms})
+    return engine.index.decode_blocks(blocks).groupBy("_docid").agg(
+        F.expr(f"sum(CAST({s} AS DOUBLE) * ({w_sql})) AS score")
     )
 
 
@@ -681,19 +651,4 @@ def _score_blocks(engine, terms, weights, idf_by_term, avgdl, keys) -> DataFrame
         .filter(F.col("term").isin(list(terms)))
         .join(F.broadcast(keys_df), ["term", "block_id", "base_doc"], "semi")
     )
-    decoded = engine.index.decode_blocks(blocks)
-    w_map = F.create_map(
-        *[x for t in terms for x in (F.lit(t), F.lit(int(weights[t])))]
-    )
-    idf_map = F.create_map(
-        *[x for t in terms for x in (F.lit(t), F.lit(float(idf_by_term[t])))]
-    )
-    per = decoded.withColumn("dl", bm25.norm_decode_col(F.col("norm_byte"))).withColumn(
-        "s",
-        bm25.term_score_col(
-            F.col("tf"), idf_map[F.col("term")], F.col("dl"), avgdl, engine.k1, engine.b
-        ),
-    )
-    return per.groupBy("_docid").agg(
-        F.sum(F.col("s").cast("double") * w_map[F.col("term")]).alias("score")
-    )
+    return _score_decoded(engine, terms, weights, idf_by_term, avgdl, blocks)

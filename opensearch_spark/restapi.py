@@ -60,6 +60,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from opensearch_spark import aggs as A
+from opensearch_spark import sqltext
 from opensearch_spark.query import dsl as Q
 from opensearch_spark.query import painless
 
@@ -650,18 +651,13 @@ def _selector_bucket(row, prefix, smetrics, extras) -> dict:
 
 
 def _decimal_format(pattern: str, value) -> str:
-    """Tiny DecimalFormat subset: the numeric subpattern ([#,0]+ with
-    an optional .0# fraction) renders the value in place, literal text
-    around it passes through ("Value is ##0.0" -> "Value is 50.0")."""
-    import re as _re
-
-    m = _re.search(r"[#0][#,0]*(\.[0#]+)?", pattern)
-    if not m:
+    """Render ``value`` with a DecimalFormat pattern (the subset of
+    ``sqltext.decimal_pattern``): "Value is ##0.0" -> "Value is 50.0"."""
+    dec = sqltext.decimal_pattern(pattern)
+    if dec is None:
         return pattern
-    frac = m.group(1)
-    digits = frac.count("0") + frac.count("#") if frac else 0
-    rendered = f"%.{digits}f" % float(value)
-    return pattern[: m.start()] + rendered + pattern[m.end():]
+    prefix, digits, suffix = dec
+    return prefix + f"%.{digits}f" % float(value) + suffix
 
 
 def _terms_order(spec, subs, key_alias: str = "key") -> List:

@@ -1,0 +1,71 @@
+"""Request constants rendered as Spark SQL text.
+
+Plan build goes through py4j: every ``F.lit``/``F.col``/operator node of
+a Column tree is at least one driver<->JVM round trip, while one SQL
+string is parsed JVM-side in a single call.  The scoring plans are
+therefore written as SQL text (``selectExpr`` / ``F.expr``), and these
+helpers render Python constants into it so that each parses back to
+exactly the value given, whatever the session config:
+
+- doubles carry a ``D`` suffix (an unsuffixed ``1.2`` is a DECIMAL
+  literal in Spark SQL, which would change the arithmetic before the
+  float32 narrowing); ``repr`` is the shortest round-trip form, so the
+  parsed double is bit-identical;
+- strings outside a plain identifier alphabet are hex-encoded UTF-8
+  (``CAST(X'..' AS STRING)``): backslash escapes depend on
+  ``spark.sql.parser.escapedStringLiterals`` and Spark SQL has no
+  quote-doubling, a hex literal has neither problem and cannot inject.
+"""
+
+from __future__ import annotations
+
+import math
+import re
+from typing import Mapping, Optional, Tuple
+
+_PLAIN = re.compile(r"[0-9A-Za-z_]*")
+
+
+def double(x: float) -> str:
+    """A DOUBLE literal equal to ``float(x)``."""
+    x = float(x)
+    if not math.isfinite(x):
+        name = "NaN" if math.isnan(x) else ("-Infinity" if x < 0 else "Infinity")
+        return f"CAST('{name}' AS DOUBLE)"
+    r = repr(x)
+    return f"({r}D)" if r.startswith("-") else f"{r}D"
+
+
+def string(s: str) -> str:
+    """A STRING literal equal to ``s``, independent of parser settings."""
+    if _PLAIN.fullmatch(s):
+        return f"'{s}'"
+    return f"CAST(X'{s.encode('utf-8').hex()}' AS STRING)"
+
+
+def ident(name: str) -> str:
+    """A quoted column reference: dots and other characters stay literal."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def case_on(col: str, values: Mapping[str, str]) -> str:
+    """``CASE <col> WHEN <key> THEN <value> ... END`` over string keys;
+    ``values`` maps each key to the SQL text of its result."""
+    whens = " ".join(f"WHEN {string(k)} THEN {v}" for k, v in values.items())
+    return f"CASE {col} {whens} END"
+
+
+_DECIMAL = re.compile(r"[#0][#,0]*(\.[0#]*)?|\.[0#]+")
+
+
+def decimal_pattern(fmt: str) -> Optional[Tuple[str, int, str]]:
+    """DecimalFormat subset: the numeric subpattern (``#``/``0`` digits,
+    ``,`` grouping marks, an optional ``.`` fraction of ``0``/``#``)
+    renders the value with as many fraction digits as the fraction has
+    marks; literal text around it passes through.  Returns
+    ``(prefix, fraction_digits, suffix)``, or None for a pattern with no
+    numeric subpattern (a date pattern)."""
+    m = _DECIMAL.search(fmt)
+    if not m:
+        return None
+    return fmt[: m.start()], len(m.group(0).partition(".")[2]), fmt[m.end():]

@@ -74,6 +74,29 @@ def test_match_bool_prefix_membership(engine, corpus_pdf):
     assert got == expect
 
 
+def test_match_bool_prefix_repeated_term_is_two_clauses(engine, oracle, corpus_pdf):
+    """A repeated query term is one clause per occurrence, as in the
+    reference's BooleanQuery: "error error handl" scores ``error``
+    twice, and ``error`` fills two of the three clauses
+    minimum_should_match asks for."""
+    err = {
+        tuple(oracle.rows[d][c] for c in oracle.id_cols): s
+        for d, s in oracle.term("error").items()
+    }
+    toks = _corpus_tokens(corpus_pdf)
+    handl = {k for k, ts in toks.items() if any(t.startswith("handl") for t in ts)}
+    rows = engine.search(
+        {"match_bool_prefix": {"text": {
+            "query": "error error handl", "minimum_should_match": 3,
+        }}},
+        size=1000,
+    ).collect()
+    got = {(r["conv_id"], r["turn_idx"]): r["score"] for r in rows}
+    assert got and set(got) == set(err) & handl
+    for k, s in got.items():
+        assert s == pytest.approx(2 * err[k] + 1.0, rel=1e-6), k
+
+
 # ------------------------------------------- match_phrase_prefix
 
 def test_match_phrase_prefix_membership(engine, corpus_pdf):

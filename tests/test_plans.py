@@ -24,6 +24,15 @@ def test_postings_term_filter_pushdown(engine):
     assert "In(term" in plan.replace(" ", "") or "In(term," in plan
 
 
+def test_postings_for_terms_sql_filter_pushdown(engine):
+    """The SQL-text ``term IN (...)`` of ``postings_for_terms`` folds its
+    hex-encoded literals (quote, non-ASCII) and still reaches the scan."""
+    plan = _formatted(engine.index.postings_for_terms(["error", "o'neil café"]))
+    pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
+    assert pushed and "In(term" in pushed[0].replace(" ", ""), plan
+    assert "o'neil café" in pushed[0], pushed[0]
+
+
 def test_metadata_pass_prunes_binary_columns(engine):
     """WAND's bounds pass must not read the packed binary columns."""
     meta = (
@@ -75,6 +84,66 @@ def test_term_stats_inline_small_broadcast_large(engine):
     big = engine._score_terms_or({t: 1 for t in terms}, required=1)
     plan = _formatted(big)
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+
+
+def _py4j_round_trips(spark, fn) -> int:
+    """py4j round trips ``fn`` makes, counted by wrapping the gateway
+    client's ``send_command``."""
+    client = spark.sparkContext._gateway._gateway_client
+    orig = client.send_command
+    calls = 0
+
+    def send_command(*args, **kwargs):
+        nonlocal calls
+        calls += 1
+        return orig(*args, **kwargs)
+
+    client.send_command = send_command
+    try:
+        fn()
+    finally:
+        client.send_command = orig
+    return calls
+
+
+def test_match_plan_build_py4j_budget(engine):
+    """Building a 2-term match plan costs at most 300 py4j round trips
+    (it was ~2,000 when the norm table and the per-term CASE blocks were
+    Column trees built one ``F.lit`` at a time).  The term-stats memo
+    is warmed first: a first-sight dictionary lookup is a Spark job,
+    not plan build."""
+    q = {"match": {"text": "error handling"}}
+    engine.search(q, size=10)
+    calls = _py4j_round_trips(engine.spark, lambda: engine.search(q, size=10))
+    assert calls <= 300, calls
+
+
+def _jobs_in_group(spark, group: str, fn) -> int:
+    """Spark jobs ``fn`` runs, tagged with a job group and read back from
+    the status tracker once the listener bus has drained."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_absent_term_runs_no_job(engine):
+    """A term absent from the dictionary (indexed terms are lower-cased)
+    is known empty from the memoized term stats: the optimizer folds the
+    whole search plan to an empty LocalRelation and collecting it runs
+    no Spark job.  A present term in the same harness runs jobs, so the
+    count is not vacuous."""
+    engine.index.term_stats(["Error"])
+    df = engine.search({"term": {"text": "Error"}}, size=10)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation <empty>"), plan
+    assert _jobs_in_group(engine.spark, "absent-term", df.collect) == 0
+    present = engine.search({"term": {"text": "error"}}, size=10)
+    assert _jobs_in_group(engine.spark, "present-term", present.collect) >= 1
 
 
 def test_search_plan_no_cartesian(engine):

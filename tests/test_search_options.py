@@ -95,6 +95,26 @@ def test_docvalue_fields_formats(engine):
     assert int(ms["ts"]) > 1_500_000_000_000  # millis, not seconds
 
 
+@pytest.mark.parametrize(
+    "fmt, digits", [("0.0", 1), ("##0.0", 1), ("#.00#", 3), ("#.0", 1), ("0", 0)]
+)
+def test_docvalue_decimal_formats(engine, fmt, digits):
+    # DecimalFormat spellings with a zero before the dot or '#' fraction
+    # digits render the number, the same subset the REST bucket keys use
+    from opensearch_spark import restapi
+
+    q = {"match": {"text": "the"}}
+    raw = engine.search(q, size=5).collect()
+    got = engine.search(q, size=5, docvalue_fields={"turn_idx": fmt}).collect()
+    assert [r["turn_idx"] for r in got] == [
+        f"{r['turn_idx']:.{digits}f}" for r in raw
+    ]
+    assert [restapi._decimal_format(fmt, r["turn_idx"]) for r in raw] == [
+        r["turn_idx"] for r in got
+    ]
+    assert restapi._decimal_format("Value is ##0.0", 50) == "Value is 50.0"
+
+
 def test_docvalue_format_does_not_break_sort_order(engine):
     # review finding: formatting in place before orderBy sorted by the
     # rendered STRING; the raw value must drive the order

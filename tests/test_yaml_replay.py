@@ -80,6 +80,11 @@ pytestmark = pytest.mark.skipif(
 
 
 def _cases():
+    # parametrize runs at collection, before the skipif above applies:
+    # without the spec checkout there is nothing to load, and the empty
+    # parameter set skips the test instead of failing collection
+    if not os.path.isdir(SPEC_DIR):
+        return []
     out = []
     for rel in FILES:
         for name, steps in load_file(rel):
