@@ -1,7 +1,16 @@
 """Aggregation framework — the reference's agg tree re-expressed as
 native Spark aggregations (SURVEY.md §2.3-2.5).
 
-Every function takes a (possibly query-filtered) DataFrame — the agg
+This module owns every aggregation rule ONCE, as a Column builder:
+field resolution (:func:`field_col`), bucket keys (:func:`terms_key`,
+:func:`histogram_key`, :func:`date_key`), bucket conditions
+(:func:`range_conds`, :func:`bucket_conds`), metric expressions and
+their results (:func:`metric_cols`, :func:`metric_result`) and the
+BucketOrder translation (:func:`bucket_order`).  The REST agg tree
+(``restapi.run_aggs``) compiles onto these builders; the DataFrame
+helpers below are thin wrappers over the same builders.
+
+Every helper takes a (possibly query-filtered) DataFrame — the agg
 context the reference evaluates per shard and reduces on the
 coordinator; Spark's partial/final hash aggregation is exactly that
 split (``SearchPhaseController.reducedQueryPhase``,
@@ -30,11 +39,269 @@ Exactness notes vs the reference, preserved deliberately:
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional, Sequence, Tuple
+import ipaddress
+from typing import Callable, Dict, List, Optional, Sequence, Tuple
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from opensearch_spark import sqltext
+
+# ----------------------------------------------------- column builders
+
+# date_histogram calendar intervals (DateHistogramAggregationBuilder
+# DATE_FIELD_UNITS) -> bucket unit
+_CALENDAR_UNITS = {
+    "second": "second", "1s": "second", "minute": "minute", "1m": "minute",
+    "hour": "hour", "1h": "hour", "day": "day", "1d": "day",
+    "week": "week", "1w": "week", "month": "month", "1M": "month",
+    "quarter": "quarter", "1q": "quarter", "year": "year", "1y": "year",
+}
+_DAY_US = 86_400_000_000
+_FIXED_US = {"second": 1_000_000, "minute": 60_000_000,
+             "hour": 3_600_000_000, "day": _DAY_US}
+_EPOCH_NTZ = "TIMESTAMP_NTZ'1970-01-01 00:00:00'"
+_DEFAULT_PERCENTS = (1.0, 5.0, 25.0, 50.0, 75.0, 95.0, 99.0)
+_STATS = ("count", "min", "max", "sum", "avg")
+_EXTENDED_STATS = _STATS + ("variance", "std_deviation")
+_AGG_FNS = {"count": F.count, "min": F.min, "max": F.max, "sum": F.sum,
+            "avg": F.avg, "variance": F.var_pop,
+            "std_deviation": F.stddev_pop}
+
+
+def field_col(df: DataFrame, field: str) -> Column:
+    """The input Column of an agg on ``field`` (ValuesSourceConfig
+    resolution): the literal column, then the ``__dot__`` multi-field
+    column (mapping.typed_frame), then a dotted path through struct
+    columns.  An unmapped field aggregates as nulls, like the
+    reference's unmapped ValuesSource."""
+    names = df.columns
+    if field in names:
+        return F.col(sqltext.ident(field))
+    mangled = field.replace(".", "__dot__")
+    if mangled in names:
+        return F.col(sqltext.ident(mangled))
+    head, *path = field.split(".")
+    if path and head in names:
+        dtype, col = df.schema[head].dataType, F.col(sqltext.ident(head))
+        for p in path:
+            if not isinstance(dtype, T.StructType) or p not in dtype.names:
+                break
+            dtype, col = dtype[p].dataType, col.getField(p)
+        else:
+            return col
+    return F.lit(None).cast("double")
+
+
+def bucket_count(cond: Column) -> Column:
+    """Docs matching ``cond``, as one conditional aggregate."""
+    return F.count(F.when(cond, 1))
+
+
+def bucket_window(parts: Sequence[Column]) -> Window:
+    """The window over each bucket (rows sharing ``parts``; the whole
+    frame when there are none): per-bucket top-k and totals."""
+    return Window.partitionBy(*parts) if parts else Window.partitionBy(F.lit(1))
+
+
+def terms_key(c: Column, missing=None) -> Column:
+    """``terms`` key: the value, or ``missing`` for docs without one
+    (ValuesSourceAggregationBuilder ``missing``)."""
+    return c if missing is None else F.coalesce(c, F.lit(missing))
+
+
+def histogram_key(c: Column, interval: float) -> Column:
+    """``histogram`` key (HistogramAggregationBuilder):
+    ``floor(v / interval) * interval`` as a double."""
+    interval = float(interval)
+    return (F.floor(c.cast("double") / F.lit(interval)) * F.lit(interval)).cast("double")
+
+
+def _epoch_micros(df: DataFrame, c: Column) -> Column:
+    """Epoch micros of a date value, read the same under any session
+    time zone: date_nanos columns hold epoch nanos, TIMESTAMP_NTZ and
+    DATE values are UTC wall clocks."""
+    dtype = df.select(c).schema.fields[0].dataType
+    if isinstance(dtype, T.DecimalType):
+        return F.floor(c / F.lit(1000)).cast("long")
+    if isinstance(dtype, (T.TimestampNTZType, T.DateType)):
+        return F.timestamp_diff("MICROSECOND", F.expr(_EPOCH_NTZ), c.cast("timestamp_ntz"))
+    return F.unix_micros(c.cast("timestamp"))
+
+
+def date_key(df: DataFrame, c: Column, interval: str) -> Column:
+    """``date_histogram`` key (DateHistogramAggregator.java): epoch
+    millis of the start of the UTC calendar bucket holding the value.
+    Fixed units floor the epoch micros; week/month/quarter/year
+    truncate the UTC date.  No step reads the session time zone."""
+    unit = _CALENDAR_UNITS.get(interval)
+    if unit is None:
+        raise NotImplementedError(
+            f"date_histogram interval {interval!r} (calendar units "
+            f"{sorted(set(_CALENDAR_UNITS.values()))} supported)"
+        )
+    us = _epoch_micros(df, c)
+    if unit in _FIXED_US:
+        start = us - F.pmod(us, F.lit(_FIXED_US[unit]))
+    else:
+        day = ((us - F.pmod(us, F.lit(_DAY_US))) / F.lit(_DAY_US)).cast("int")
+        start = (F.unix_date(F.trunc(F.date_from_unix_date(day), unit)).cast("long")
+                 * F.lit(_DAY_US))
+    return (start / F.lit(1000)).cast("long")
+
+
+def range_conds(kind: str, c: Column, ranges: Sequence[dict]) -> List[Tuple[str, Column, dict]]:
+    """``[from, to)`` buckets of ``range`` / ``date_range`` / ``ip_range``
+    / ``geo_distance`` (RangeAggregator.java and its date / IP / distance
+    variants) over the value Column ``c`` (the distance in km for
+    geo_distance).  ``ranges`` are request dicts (``from``, ``to``,
+    ``key``; ip_range also takes a CIDR ``mask``).  Returns
+    ``[(key, condition, response extras)]`` in request order; a doc
+    without a value is in no bucket."""
+    if kind == "date_range":
+        v, bound = F.to_timestamp(c), lambda b: F.to_timestamp(F.lit(b))
+    elif kind == "ip_range":
+        v, bound = ip_to_long(c), lambda b: ip_to_long(F.lit(b))
+    else:
+        v, bound = c.cast("double"), lambda b: F.lit(float(b))
+    numeric = kind in ("range", "geo_distance")
+    out = []
+    for r in ranges:
+        cond, extras = v.isNotNull(), {}
+        if "mask" in r:  # CIDR -> [network, network + span)
+            base, bits = r["mask"].split("/")
+            span = 1 << (32 - int(bits))
+            net = int(ipaddress.IPv4Address(base)) & ~(span - 1)
+            out.append((r.get("key") or r["mask"],
+                        cond & (v >= net) & (v < net + span), {"mask": r["mask"]}))
+            continue
+        lo, hi = r.get("from"), r.get("to")
+        for name, b, op in (("from", lo, Column.__ge__), ("to", hi, Column.__lt__)):
+            if b is not None:
+                cond = cond & op(v, bound(b))
+                extras[name] = float(b) if numeric else b
+        key = r.get("key") or f"{'*' if lo is None else lo}-{'*' if hi is None else hi}"
+        out.append((key, cond, extras))
+    return out
+
+
+def bucket_conds(kind: str, spec: dict, df: DataFrame,
+                 predicate: Callable[[dict], Column]) -> List[Tuple[str, Column, dict]]:
+    """A selector agg's buckets as ``[(key, condition, response
+    extras)]``: ``filter`` / ``filters`` (query dicts through
+    ``predicate``), ``missing``, and the range family."""
+    if kind == "filter":
+        return [("", predicate(spec), {})]
+    if kind == "filters":
+        return [(n, predicate(q), {}) for n, q in spec["filters"].items()]
+    if kind == "missing":
+        return [("", field_col(df, spec["field"]).isNull(), {})]
+    if kind == "geo_distance":
+        from opensearch_spark.query.executor import _geo_col_names, _haversine_km
+
+        lat, lon = (field_col(df, n) for n in _geo_col_names(spec["field"]))
+        o = spec["origin"]
+        c = _haversine_km(lat, lon, float(o["lat"]), float(o["lon"]))
+    else:
+        c = field_col(df, spec["field"])
+    return range_conds(kind, c, spec["ranges"])
+
+
+def bucket_key(kind: str, spec: dict, df: DataFrame) -> Tuple[Column, Optional[Column]]:
+    """A keyed agg's (key Column, not-null guard or None) for ``terms``
+    / ``histogram`` / ``date_histogram`` request specs."""
+    c = field_col(df, spec["field"])
+    if kind == "terms":
+        missing = spec.get("missing")
+        return terms_key(c, missing), c.isNotNull() if missing is None else None
+    if kind == "histogram":
+        return histogram_key(c, spec["interval"]), c.isNotNull()
+    interval = spec.get("calendar_interval") or spec.get("interval")
+    return date_key(df, c, interval), c.isNotNull()
+
+
+def metric_cols(kind: str, c: Column, arg=None) -> List[Tuple[object, Column]]:
+    """``[(part, aggregate Column)]`` of one metric agg over ``c`` — the
+    one copy of the 10 metric rules.  ``arg`` is the weight Column of
+    ``weighted_avg`` or the percents of ``percentiles``.  Cardinality is
+    the exact distinct count (``cardinality(exact=False)`` is the HLL++
+    scale path)."""
+    if kind == "weighted_avg":
+        v, w = c.cast("double"), arg.cast("double")
+        return [("value", F.sum(v * w) / F.sum(w))]
+    if kind == "value_count":
+        return [("value", F.count(c))]
+    if kind == "cardinality":
+        return [("value", F.count_distinct(c))]
+    if kind == "percentiles":
+        return [(p, F.percentile(c, F.lit(p / 100.0))) for p in arg or _DEFAULT_PERCENTS]
+    d = c.cast("double")
+    if kind in ("avg", "sum", "min", "max"):
+        return [("value", _AGG_FNS[kind](d))]
+    if kind in ("stats", "extended_stats"):
+        return [(p, _AGG_FNS[p](d)) for p in (_STATS if kind == "stats" else _EXTENDED_STATS)]
+    raise NotImplementedError(f"metric agg {kind!r}")
+
+
+def metric_result(kind: str, row, prefix: str, percents=None) -> dict:
+    """The response object of a metric agg whose :func:`metric_cols`
+    parts were aliased ``{prefix}:{part}``."""
+    get = lambda part: row[f"{prefix}:{part}"]  # noqa: E731
+    if kind == "percentiles":
+        return {"values": {f"{float(p):.1f}": get(p) for p in percents or _DEFAULT_PERCENTS}}
+    if kind in ("stats", "extended_stats"):
+        return {p: get(p) for p in (_STATS if kind == "stats" else _EXTENDED_STATS)}
+    return {"value": get("value")}
+
+
+def bucket_order(order: Sequence[Tuple[str, bool]],
+                 sub_col: Callable[[str], Optional[str]], key: str = "key") -> List[Column]:
+    """BucketOrder (BucketOrder.java:63-116) as sort Columns: ``order``
+    is a compound ``[(path, asc)]`` where path is ``_count``, ``_key``
+    (``_time``, the 6.x date_histogram spelling) or a sub-aggregation
+    path that ``sub_col`` maps to its column.  The ``key asc``
+    tie-break TermsAggregationBuilder.java:138 appends closes the
+    list."""
+    cols = []
+    for path, asc in order:
+        name = ("doc_count" if path == "_count" else
+                key if path in ("_key", "_time") else sub_col(path))
+        if name is None:
+            raise ValueError(f"order path {path!r} is not a sub-aggregation")
+        cols.append(F.asc(name) if asc else F.desc(name))
+    return cols + [F.asc(key)]
+
+
+def after_cond(keys: Sequence[Column], after: Sequence) -> Column:
+    """Keyset pagination of ``composite`` (CompositeAggregator.java):
+    bucket key tuples strictly after ``after``."""
+    cond, eq = F.lit(False), F.lit(True)
+    for c, v in zip(keys, after):
+        cond = cond | (eq & (c > F.lit(v)))
+        eq = eq & (c == F.lit(v))
+    return cond
+
+
+def _count_buckets(df: DataFrame, buckets: Sequence[Tuple[str, Column]]) -> DataFrame:
+    """One conditional-count pass over ``[(key, condition)]``, melted to
+    ``(key, doc_count)`` rows in bucket order (empty buckets kept with
+    count 0, like the reference)."""
+    row = df.agg(*[bucket_count(c).alias(f"_b{i}") for i, (_k, c) in enumerate(buckets)])
+    stack = ", ".join(f"{sqltext.string(str(k))}, _b{i}" for i, (k, _c) in enumerate(buckets))
+    return row.selectExpr(f"stack({len(buckets)}, {stack}) as (key, doc_count)")
+
+
+def _count_by(df: DataFrame, key: Column) -> DataFrame:
+    """Doc count per bucket ``key``."""
+    return df.groupBy(key.alias("key")).agg(F.count(F.lit(1)).alias("doc_count"))
+
+
+def _range_buckets(df: DataFrame, kind: str, c: Column, ranges) -> DataFrame:
+    conds = range_conds(kind, c, [{"from": lo, "to": hi} for lo, hi in ranges])
+    return _count_buckets(df, [(k, cond) for k, cond, _x in conds])
+
 
 # ------------------------------------------------------------- bucket
 
@@ -56,19 +323,14 @@ def terms(
     for docs without the field (ValuesSourceAggregationBuilder
     ``missing``), and when unset such docs are simply not bucketed —
     both exactly the reference's semantics."""
-    key = F.col(field)
-    if missing is not None:
-        key = F.coalesce(key, F.lit(missing))
-    else:
-        df = df.filter(F.col(field).isNotNull())
-    out = df.groupBy(key.alias("key")).agg(
-        F.count(F.lit(1)).alias("doc_count")
-    )
+    c = field_col(df, field)
+    if missing is None:
+        df = df.filter(c.isNotNull())
+    out = _count_by(df, terms_key(c, missing))
     if min_doc_count > 1:
         out = out.filter(F.col("doc_count") >= int(min_doc_count))
-    if order_by_key:
-        return out.orderBy(F.asc("key")).limit(size)
-    return out.orderBy(F.desc("doc_count"), F.asc("key")).limit(size)
+    order = [] if order_by_key else [("_count", False)]
+    return out.orderBy(*bucket_order(order, {}.get)).limit(size)
 
 
 def terms_tree(
@@ -101,17 +363,12 @@ def terms_tree(
     aggs_ = [F.count(F.lit(1)).alias("doc_count")] + [
         expr.alias(name) for name, expr in metrics.items()
     ]
-    if order is None:
-        order = [("_count", False)]
-    sort_cols = []
-    for path, asc in order:
-        name = {"_count": "doc_count", "_key": "key"}.get(path, path)
-        if name != "key" and name != "doc_count" and name not in metrics:
-            raise ValueError(f"order path {path!r} is not a sub-aggregation")
-        sort_cols.append(F.asc(name) if asc else F.desc(name))
-    sort_cols.append(F.asc("key"))
+    sort_cols = bucket_order(
+        [("_count", False)] if order is None else order,
+        {m: m for m in metrics}.get,
+    )
     return (
-        df.groupBy(F.col(field).alias("key"))
+        df.groupBy(field_col(df, field).alias("key"))
         .agg(*aggs_)
         .orderBy(*sort_cols)
         .limit(size)
@@ -244,8 +501,7 @@ def rare_terms(df: DataFrame, field: str, max_doc_count: int = 1) -> DataFrame:
     """``rare_terms`` (``RareTermsAggregationBuilder.java``): buckets with
     doc_count <= threshold, key asc."""
     return (
-        df.groupBy(F.col(field).alias("key"))
-        .agg(F.count(F.lit(1)).alias("doc_count"))
+        _count_by(df, field_col(df, field))
         .filter(F.col("doc_count") <= max_doc_count)
         .orderBy(F.asc("key"))
     )
@@ -254,26 +510,19 @@ def rare_terms(df: DataFrame, field: str, max_doc_count: int = 1) -> DataFrame:
 def histogram(df: DataFrame, field: str, interval: float) -> DataFrame:
     """``histogram``: fixed-interval numeric buckets
     (``HistogramAggregationBuilder.java``); key = floor(v/i)*i."""
-    key = (F.floor(F.col(field) / F.lit(interval)) * F.lit(interval)).cast("double")
-    return (
-        df.groupBy(key.alias("key"))
-        .agg(F.count(F.lit(1)).alias("doc_count"))
-        .orderBy(F.asc("key"))
-    )
+    return _count_by(df, histogram_key(field_col(df, field), interval)).orderBy(F.asc("key"))
 
 
 def date_histogram(
     df: DataFrame, field: str, calendar_interval: str = "day"
 ) -> DataFrame:
     """``date_histogram`` with a calendar interval
-    (``DateHistogramAggregator.java``); bucket key as ISO string for
-    engine-neutral comparison."""
-    key = F.date_format(F.date_trunc(calendar_interval, F.col(field)), "yyyy-MM-dd HH:mm:ss")
-    return (
-        df.groupBy(key.alias("key"))
-        .agg(F.count(F.lit(1)).alias("doc_count"))
-        .orderBy(F.asc("key"))
-    )
+    (``DateHistogramAggregator.java``); bucket key as the UTC
+    ``yyyy-MM-dd HH:mm:ss`` string for engine-neutral comparison."""
+    key = date_key(df, field_col(df, field), calendar_interval)
+    # rendered as TIMESTAMP_NTZ: the session time zone never applies
+    utc = F.timestamp_add("MILLISECOND", F.col("key"), F.expr(_EPOCH_NTZ))
+    return _count_by(df, key).withColumn("key", utc.cast("string")).orderBy(F.asc("key"))
 
 
 def range_agg(
@@ -283,40 +532,21 @@ def range_agg(
     buckets, docs can only land in one bucket per range entry; emits one
     row per range in definition order with its doc_count (empty ranges
     included, count 0 — reference keeps empty range buckets)."""
-    aggs = []
-    keys = []
-    for lo, hi in ranges:
-        cond = F.lit(True)
-        if lo is not None:
-            cond = cond & (F.col(field) >= F.lit(lo))
-        if hi is not None:
-            cond = cond & (F.col(field) < F.lit(hi))
-        key = f"{lo if lo is not None else '*'}-{hi if hi is not None else '*'}"
-        keys.append(key)
-        aggs.append(F.sum(F.when(cond, 1).otherwise(0)).cast("long").alias(key))
-    row = df.agg(*aggs)
-    stack = ", ".join(f"'{k}', `{k}`" for k in keys)
-    return row.selectExpr(f"stack({len(keys)}, {stack}) as (key, doc_count)")
+    return _range_buckets(df, "range", field_col(df, field), ranges)
 
 
 def filter_agg(df: DataFrame, cond: Column) -> DataFrame:
     """``filter`` single-bucket agg (``FilterAggregationBuilder.java``):
     one bucket counting docs matching the predicate; sub-aggs run over
     the filtered frame (compose by aggregating ``df.filter(cond)``)."""
-    return df.filter(cond).agg(F.count(F.lit(1)).cast("long").alias("doc_count"))
+    return df.agg(bucket_count(cond).alias("doc_count"))
 
 
 def filters_agg(df: DataFrame, named: Dict[str, Column]) -> DataFrame:
     """``filters`` agg (``FiltersAggregationBuilder.java``): one bucket
     per named predicate; docs may match several (conditional sums — no
     per-filter scans)."""
-    aggs = [
-        F.sum(F.when(cond, 1).otherwise(0)).cast("long").alias(name)
-        for name, cond in named.items()
-    ]
-    row = df.agg(*aggs)
-    stack = ", ".join(f"'{n}', `{n}`" for n in named)
-    return row.selectExpr(f"stack({len(named)}, {stack}) as (key, doc_count)")
+    return _count_buckets(df, list(named.items()))
 
 
 def adjacency_matrix(df: DataFrame, named: Dict[str, Column]) -> DataFrame:
@@ -324,21 +554,11 @@ def adjacency_matrix(df: DataFrame, named: Dict[str, Column]) -> DataFrame:
     doc counts for every filter and every pairwise intersection, one
     conditional-sum pass (keys ``a``, ``a&b`` like the reference)."""
     names = list(named)
-    aggs, keys = [], []
+    buckets = []
     for i, a in enumerate(names):
-        keys.append(a)
-        aggs.append(F.sum(F.when(named[a], 1).otherwise(0)).cast("long").alias(a))
-        for b in names[i + 1 :]:
-            k = f"{a}&{b}"
-            keys.append(k)
-            aggs.append(
-                F.sum(F.when(named[a] & named[b], 1).otherwise(0)).cast("long").alias(k)
-            )
-    row = df.agg(*aggs)
-    stack = ", ".join(f"'{k}', `{k}`" for k in keys)
-    return row.selectExpr(f"stack({len(keys)}, {stack}) as (key, doc_count)").filter(
-        F.col("doc_count") > 0
-    )
+        buckets.append((a, named[a]))
+        buckets += [(f"{a}&{b}", named[a] & named[b]) for b in names[i + 1 :]]
+    return _count_buckets(df, buckets).filter(F.col("doc_count") > 0)
 
 
 def auto_date_histogram(df: DataFrame, field: str, target_buckets: int = 10) -> DataFrame:
@@ -357,20 +577,12 @@ def auto_date_histogram(df: DataFrame, field: str, target_buckets: int = 10) -> 
     ]:
         if span_s / secs <= target_buckets:
             break
-    key = F.date_format(F.date_trunc(unit, F.col(field)), "yyyy-MM-dd HH:mm:ss")
-    return (
-        df.groupBy(key.alias("key"))
-        .agg(F.count(F.lit(1)).alias("doc_count"))
-        .withColumn("interval", F.lit(unit))
-        .orderBy(F.asc("key"))
-    )
+    return date_histogram(df, field, unit).withColumn("interval", F.lit(unit))
 
 
 def missing_agg(df: DataFrame, field: str) -> DataFrame:
     """``missing`` (``MissingAggregationBuilder.java``)."""
-    return df.agg(
-        F.sum(F.when(F.col(field).isNull(), 1).otherwise(0)).cast("long").alias("doc_count")
-    )
+    return df.agg(bucket_count(field_col(df, field).isNull()).alias("doc_count"))
 
 
 def composite(
@@ -382,16 +594,13 @@ def composite(
     """``composite`` agg (``CompositeAggregator.java``): key-ordered
     paginated buckets; ``after`` is the last key tuple of the previous
     page (keyset pagination — in Spark a filter on the sort tuple)."""
-    keys = [F.col(f).alias(f"key_{f}") for f in fields]
-    out = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("doc_count"))
+    keys = [F.col(sqltext.ident(f"key_{f}")) for f in fields]
+    out = df.groupBy(
+        *[field_col(df, f).alias(f"key_{f}") for f in fields]
+    ).agg(F.count(F.lit(1)).alias("doc_count"))
     if after is not None:
-        cond = F.lit(False)
-        eq = F.lit(True)
-        for f, v in zip(fields, after):
-            cond = cond | (eq & (F.col(f"key_{f}") > F.lit(v)))
-            eq = eq & (F.col(f"key_{f}") == F.lit(v))
-        out = out.filter(cond)
-    return out.orderBy(*[F.asc(f"key_{f}") for f in fields]).limit(size)
+        out = out.filter(after_cond(keys, after))
+    return out.orderBy(*[k.asc() for k in keys]).limit(size)
 
 
 def significant_terms(
@@ -486,54 +695,51 @@ def significant_terms(
 # ------------------------------------------------------------- metric
 
 
+_ROUND = {"min": 6, "max": 6, "sum": 4, "avg": 6, "variance": 4, "std_deviation": 6}
+
+
+def _rounded_stats(df: DataFrame, kind: str, field: str, parts: Sequence[str]) -> DataFrame:
+    cols = dict(metric_cols(kind, field_col(df, field)))
+    return df.agg(*[
+        (cols[p] if p == "count" else F.round(cols[p], _ROUND[p])).alias(p)
+        for p in parts
+    ])
+
+
 def stats(df: DataFrame, field: str) -> DataFrame:
     """``stats`` (``StatsAggregator.java``): count/min/max/sum/avg.
     Sum in float64 (the reference uses Kahan compensation,
     ``CompensatedSum.java``; Spark's double sum matches to ulps at
     these magnitudes — documented tolerance)."""
-    c = F.col(field)
-    return df.agg(
-        F.count(c).alias("count"),
-        F.round(F.min(c).cast("double"), 6).alias("min"),
-        F.round(F.max(c).cast("double"), 6).alias("max"),
-        F.round(F.sum(c).cast("double"), 4).alias("sum"),
-        F.round(F.avg(c), 6).alias("avg"),
-    )
+    return _rounded_stats(df, "stats", field, _STATS)
 
 
 def extended_stats(df: DataFrame, field: str) -> DataFrame:
     """``extended_stats`` (``ExtendedStatsAggregator.java``): population
     variance/std-dev like the reference."""
-    c = F.col(field)
-    return df.agg(
-        F.count(c).alias("count"),
-        F.round(F.sum(c).cast("double"), 4).alias("sum"),
-        F.round(F.avg(c), 6).alias("avg"),
-        F.round(F.var_pop(c), 4).alias("variance"),
-        F.round(F.stddev_pop(c), 6).alias("std_deviation"),
-    )
+    return _rounded_stats(df, "extended_stats", field,
+                          ("count", "sum", "avg", "variance", "std_deviation"))
 
 
 def value_count(df: DataFrame, field: str) -> DataFrame:
-    return df.agg(F.count(F.col(field)).alias("value_count"))
+    return df.agg(metric_cols("value_count", field_col(df, field))[0][1].alias("value_count"))
 
 
 def weighted_avg(df: DataFrame, value: str, weight: str) -> DataFrame:
     """``weighted_avg`` (``InternalWeightedAvg.java``):
     sum(v*w)/sum(w)."""
-    v, w = F.col(value).cast("double"), F.col(weight).cast("double")
-    return df.agg(
-        F.round((F.sum(v * w) / F.sum(w)), 6).alias("weighted_avg")
-    )
+    ((_v, wavg),) = metric_cols("weighted_avg", field_col(df, value), field_col(df, weight))
+    return df.agg(F.round(wavg, 6).alias("weighted_avg"))
 
 
 def cardinality(df: DataFrame, field: str, exact: bool = False, rsd: float = 0.01) -> DataFrame:
     """``cardinality`` (``CardinalityAggregator.java``): HLL++ approx
     distinct (precision 14 default ~ rsd 0.01) — same sketch family as
     the reference; ``exact=True`` for the verifiable count."""
+    c = field_col(df, field)
     if exact:
-        return df.agg(F.count_distinct(F.col(field)).alias("cardinality"))
-    return df.agg(F.approx_count_distinct(F.col(field), rsd).alias("cardinality"))
+        return df.agg(metric_cols("cardinality", c)[0][1].alias("cardinality"))
+    return df.agg(F.approx_count_distinct(c, rsd).alias("cardinality"))
 
 
 def percentiles(
@@ -543,14 +749,13 @@ def percentiles(
     (verifiable against SQL ``quantile_cont``), or the sketch-based
     scale path (``percentile_approx``, the analog of the reference's
     t-digest)."""
-    fn = "percentile" if exact else "percentile_approx"
-    aggs = [
-        F.round(
-            F.expr(f"{fn}({field}, {p / 100.0})").cast("double"), 4
-        ).alias(f"p{str(p).replace('.', '_')}")
-        for p in percents
-    ]
-    return df.agg(*aggs)
+    c = field_col(df, field)
+    cols = (metric_cols("percentiles", c, percents) if exact else
+            [(p, F.percentile_approx(c, p / 100.0)) for p in percents])
+    return df.agg(*[
+        F.round(e.cast("double"), 4).alias(f"p{str(p).replace('.', '_')}")
+        for p, e in cols
+    ])
 
 
 def median_absolute_deviation(df: DataFrame, field: str) -> DataFrame:
@@ -576,11 +781,8 @@ def top_hits(
     order = [F.asc(sort_col) if ascending else F.desc(sort_col)]
     if tie_col:
         order.append(F.asc(tie_col))
-    w = Window.partitionBy(bucket).orderBy(*order)
-    return (
-        df.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    rank = F.row_number().over(bucket_window([F.col(bucket)]).orderBy(*order))
+    return df.withColumn("rank", rank).filter(F.col("rank") <= k)
 
 
 # ----------------------------------------------------------- pipeline
@@ -727,14 +929,7 @@ def avg_bucket(buckets: DataFrame, value: str = "doc_count") -> DataFrame:
 def stats_bucket(buckets: DataFrame, value: str = "doc_count") -> DataFrame:
     """``stats_bucket`` / ``min/max/sum_bucket`` family
     (AvgBucketPipelineAggregator.java siblings)."""
-    c = F.col(value).cast("double")
-    return buckets.agg(
-        F.count(c).alias("count"),
-        F.round(F.min(c), 6).alias("min"),
-        F.round(F.max(c), 6).alias("max"),
-        F.round(F.sum(c), 4).alias("sum"),
-        F.round(F.avg(c), 6).alias("avg"),
-    )
+    return _rounded_stats(buckets, "stats", value, _STATS)
 
 
 def extended_stats_bucket(
@@ -774,13 +969,10 @@ def percentiles_bucket(
     buckets: DataFrame, value: str = "doc_count", percents: Sequence[float] = (50, 95)
 ) -> DataFrame:
     """``percentiles_bucket``: exact quantiles over the bucket series."""
-    aggs_ = [
-        F.round(F.expr(f"percentile({value}, {p / 100.0})").cast("double"), 4).alias(
-            f"p{int(p)}"
-        )
-        for p in percents
-    ]
-    return buckets.agg(*aggs_)
+    return buckets.agg(*[
+        F.round(e.cast("double"), 4).alias(f"p{int(p)}")
+        for p, e in metric_cols("percentiles", field_col(buckets, value), percents)
+    ])
 
 
 # ------------------------------------------- round-2 breadth operators
@@ -793,20 +985,7 @@ def date_range_agg(
     ``DateRangeAggregationBuilder``): [from, to) buckets over a timestamp
     column, bounds as ISO strings; one conditional-sum pass like
     ``range_agg`` (empty buckets kept, count 0)."""
-    aggs, keys = [], []
-    c = F.col(field)
-    for lo, hi in ranges:
-        cond = F.lit(True)
-        if lo is not None:
-            cond = cond & (c >= F.to_timestamp(F.lit(lo)))
-        if hi is not None:
-            cond = cond & (c < F.to_timestamp(F.lit(hi)))
-        key = f"{lo or '*'}-{hi or '*'}"
-        keys.append(key)
-        aggs.append(F.sum(F.when(cond, 1).otherwise(0)).cast("long").alias(key))
-    row = df.agg(*aggs)
-    stack = ", ".join(f"'{k}', `{k}`" for k in keys)
-    return row.selectExpr(f"stack({len(keys)}, {stack}) as (key, doc_count)")
+    return _range_buckets(df, "date_range", field_col(df, field), ranges)
 
 
 def ip_to_long(col: Column) -> Column:
@@ -830,20 +1009,7 @@ def ip_range_agg(
 ) -> DataFrame:
     """``ip_range`` agg (``IpRangeAggregationBuilder``): [from, to)
     buckets over a dotted-quad IPv4 string column, compared numerically."""
-    v = ip_to_long(F.col(field))
-    aggs, keys = [], []
-    for lo, hi in ranges:
-        cond = F.col(field).isNotNull()
-        if lo is not None:
-            cond = cond & (v >= ip_to_long(F.lit(lo)))
-        if hi is not None:
-            cond = cond & (v < ip_to_long(F.lit(hi)))
-        key = f"{lo or '*'}-{hi or '*'}"
-        keys.append(key)
-        aggs.append(F.sum(F.when(cond, 1).otherwise(0)).cast("long").alias(key))
-    row = df.agg(*aggs)
-    stack = ", ".join(f"'{k}', `{k}`" for k in keys)
-    return row.selectExpr(f"stack({len(keys)}, {stack}) as (key, doc_count)")
+    return _range_buckets(df, "ip_range", field_col(df, field), ranges)
 
 
 def variable_width_histogram(df: DataFrame, field: str, buckets: int = 5) -> DataFrame:
@@ -1236,12 +1402,7 @@ def geotile_grid(
         "/", F.lit(str(precision)), clamp(x).cast("string"),
         clamp(y).cast("string")
     )
-    return (
-        df.groupBy(key.alias("key"))
-        .agg(F.count(F.lit(1)).cast("long").alias("doc_count"))
-        .orderBy(F.desc("doc_count"), F.asc("key"))
-        .limit(size)
-    )
+    return _count_by(df, key).orderBy(*bucket_order([("_count", False)], {}.get)).limit(size)
 
 
 def geohash_grid(
@@ -1262,12 +1423,7 @@ def geohash_grid(
     arithmetic, unrolled here into one whole-stage-codegen expression
     (no UDF, no Python in the hot path)."""
     key = geohash_key(precision, lat_col, lon_col)
-    return (
-        df.groupBy(key.alias("key"))
-        .agg(F.count(F.lit(1)).cast("long").alias("doc_count"))
-        .orderBy(F.desc("doc_count"), F.asc("key"))
-        .limit(size)
-    )
+    return _count_by(df, key).orderBy(*bucket_order([("_count", False)], {}.get)).limit(size)
 
 
 def geo_distance_agg(
@@ -1284,10 +1440,8 @@ def geo_distance_agg(
     shape as ``range_agg``."""
     from opensearch_spark.query.executor import _haversine_km
 
-    km = _haversine_km(F.col(lat_col), F.col(lon_col), origin_lat, origin_lon)
-    # same [from, to) bucket semantics, keys and melt as range_agg —
-    # delegate over the computed distance column instead of duplicating
-    return range_agg(df.withColumn("_gd_km", km), "_gd_km", ranges)
+    km = _haversine_km(field_col(df, lat_col), field_col(df, lon_col), origin_lat, origin_lon)
+    return _range_buckets(df, "geo_distance", km, ranges)
 
 
 def percentile_ranks(

@@ -5147,29 +5147,38 @@ def _parse_time_value(v, out_unit: str) -> float:
 
 def _parse_nanos(value: str, formats) -> int:
     """A date_nanos string -> epoch nanoseconds (UTC), trying the
-    field's format list (java patterns translated to strptime)."""
+    field's format list (java patterns translated to strptime).  strptime
+    reads only the part up to the seconds: a ``Z`` / ``+HH:MM`` suffix
+    and up to nine fraction digits after the seconds are read here."""
     import calendar
+    import re
     from datetime import datetime
 
+    zone = re.search(r"(Z|([+-])(\d\d):(\d\d))$", value)
+    head = value[: zone.start()] if zone else value
+    frac = re.search(r"(?<=:\d\d)[.,](\d{1,9})$", head)
+    if frac:
+        head = head[: frac.start()]
+    offset_s = 0
+    if zone and zone.group(2):
+        sign = 1 if zone.group(2) == "+" else -1
+        offset_s = sign * (int(zone.group(3)) * 3600 + int(zone.group(4)) * 60)
     reps = [("yyyy", "%Y"), ("MM", "%m"), ("dd", "%d"), ("HH", "%H"),
-            ("mm", "%M"), ("ss", "%S"), ("SSSSSSSSS", "%f"),
-            ("SSSSSS", "%f"), ("SSS", "%f")]
+            ("mm", "%M"), ("ss", "%S")]
     for fmt in list(formats) + ["strict_date_optional_time"]:
         py = fmt
         if fmt == "strict_date_optional_time":
-            py = "%Y-%m-%dT%H:%M:%S.%f" if "." in value else (
-                "%Y-%m-%dT%H:%M:%S" if "T" in value else "%Y-%m-%d")
+            py = "%Y-%m-%dT%H:%M:%S" if "T" in head else "%Y-%m-%d"
         else:
+            py = re.sub(r"[.,]S+", "", py)
             for a, b in reps:
                 py = py.replace(a, b)
         try:
-            dt = datetime.strptime(value, py)
+            dt = datetime.strptime(head, py)
         except ValueError:
             continue
-        return (
-            calendar.timegm(dt.timetuple()) * 1_000_000_000
-            + dt.microsecond * 1_000
-        )
+        nanos = int(frac.group(1).ljust(9, "0")) if frac else 0
+        return (calendar.timegm(dt.timetuple()) - offset_s) * 1_000_000_000 + nanos
     raise ValueError(f"cannot parse date_nanos value {value!r}")
 
 

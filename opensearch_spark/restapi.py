@@ -23,21 +23,23 @@ verbatim and returns a reference-shaped response dict —
     resp["hits"]["hits"][0]["_score"], resp["aggregations"]["roles"]
 
 Every body key maps onto an already-oracle-verified engine path; the
-adapter adds no scoring/bucketing logic of its own.  Aggregations run
-over the query's FULL matched docset (not the top-k page), exactly like
-the reference's aggregation phase.
+adapter adds no scoring/bucketing logic of its own: the ``aggs`` tree
+walk compiles every field, key, condition, metric and order onto the
+``aggs.py`` Column builders.  Aggregations run over the query's FULL
+matched docset (not the top-k page), exactly like the reference's
+aggregation phase.
 
 Scale notes: the hits page, every bucket list, and the aggregation
 results are size-capped by construction (`size`, terms `size`,
 histogram bucket counts) — the only ``collect()``s are on those capped
 frames (terms caps per-parent via a distributed row_number window
 BEFORE collecting).  The matched-docset frame feeding ``aggs`` stays
-distributed; sibling top-level metric aggs share ONE ``agg()`` pass,
-keyed bucket NESTING costs one ``groupBy`` per level (grouping keys
-accumulate — the reference's per-level bucket collectors have the same
-shuffle profile), and selector sub-aggs (filter/filters/missing/range)
-fold into their parent's pass as conditional aggregates: zero extra
-jobs.
+distributed; the request root is a keyless bucket whose metric and
+selector aggs share ONE ``agg()`` pass, keyed bucket NESTING costs one
+``groupBy`` per level (grouping keys accumulate — the reference's
+per-level bucket collectors have the same shuffle profile), and
+selector sub-aggs (filter/filters/missing/range) fold into their
+parent's pass as conditional aggregates: zero extra jobs.
 
 Scope guards (documented, raise NotImplementedError): selector-kind
 aggs carrying KEYED bucket children of their own under a bucket parent
@@ -52,12 +54,14 @@ envelope.
 
 from __future__ import annotations
 
+import datetime
 import json
 import time
 from typing import Dict, List, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from opensearch_spark import aggs as A
 from opensearch_spark import sqltext
@@ -74,13 +78,7 @@ _BUCKET_KINDS = _KEYED_NESTABLE + _SELECTOR_KINDS + ("global",)
 _METRIC_KINDS = ("avg", "sum", "min", "max", "value_count", "cardinality",
                  "stats", "extended_stats", "percentiles", "weighted_avg")
 _PIPELINE_KINDS = ("derivative", "cumulative_sum")
-
-_CAL_TRUNC = {"second": "second", "1s": "second", "minute": "minute",
-              "1m": "minute", "hour": "hour", "1h": "hour", "day": "day",
-              "1d": "day", "week": "week", "1w": "week", "month": "month",
-              "1M": "month", "quarter": "quarter", "1q": "quarter",
-              "year": "year", "1y": "year"}
-
+_TIMESTAMP = T.TimestampType()
 
 # ------------------------------------------------------------ body parse
 
@@ -262,9 +260,12 @@ def _docvalue_fields(body) -> Optional[Dict[str, Optional[str]]]:
 
 
 # ----------------------------------------------------------- aggregations
+# The tree walk only: parse each node, plan its children, run ONE pass
+# per node and build the response JSON.  Every field, key, condition,
+# metric and ordering rule is an ``aggs.py`` Column builder.
 
-def _agg_column(spec: dict):
-    """ValuesSourceAggregationBuilder: ``field`` or ``script`` input;
+def _values_source(spec: dict, frame: DataFrame):
+    """ValuesSourceAggregationBuilder input: ``script`` or ``field``;
     ``missing`` substitutes for docs without a value."""
     if "script" in spec:
         s = spec["script"]
@@ -273,77 +274,29 @@ def _agg_column(spec: dict):
         return painless.script_expr(
             s["source"], s.get("lang"), params=s.get("params")
         )
-    col = F.col("`" + spec["field"] + "`")
+    col = A.field_col(frame, spec["field"])
     if "missing" in spec:
         col = F.coalesce(col, F.lit(spec["missing"]))
     return col
 
 
-def _metric_exprs(kind: str, spec: dict, prefix: str, mask=None) -> List:
-    """One metric agg -> aliased Column expressions (prefixed so many
-    sibling metrics share one ``agg()`` pass).  ``mask`` gates the
-    input to a selector bucket's docs (NULL outside — every aggregate
-    here ignores NULLs, so the masked metric equals the filtered one)."""
-    p = prefix
+def _metric_aggs(kind: str, spec: dict, frame: DataFrame, prefix: str,
+                 mask=None) -> List:
+    """One metric agg -> its aggregate Columns aliased
+    ``{prefix}:{part}``, so sibling metrics share one ``agg()`` pass.
+    ``mask`` gates the input to a selector bucket's docs (NULL outside;
+    every metric ignores NULLs, so the masked metric is the filtered
+    one)."""
+    def value(s):
+        c = _values_source(s, frame)
+        return c if mask is None else F.when(mask, c)
+
     if kind == "weighted_avg":
-        v = _agg_column(spec["value"]).cast("double")
-        w = _agg_column(spec["weight"]).cast("double")
-        if mask is not None:
-            v, w = F.when(mask, v), F.when(mask, w)
-        return [(F.sum(v * w) / F.sum(w)).alias(f"{p}:value")]
-    c = _agg_column(spec)
-    if mask is not None:
-        c = F.when(mask, c)
-    if kind not in ("value_count", "cardinality", "percentiles"):
-        c = c.cast("double")
-    if kind == "avg":
-        return [F.avg(c).alias(f"{p}:value")]
-    if kind == "sum":
-        return [F.sum(c).alias(f"{p}:value")]
-    if kind == "min":
-        return [F.min(c).alias(f"{p}:value")]
-    if kind == "max":
-        return [F.max(c).alias(f"{p}:value")]
-    if kind == "value_count":
-        return [F.count(c).alias(f"{p}:value")]
-    if kind == "cardinality":
-        # exact distinct (the verifiable path; the HLL++ sketch lives in
-        # aggs.cardinality(exact=False) for the 100TB scale path)
-        return [F.count_distinct(_agg_column(spec)).alias(f"{p}:value")]
-    if kind == "stats":
-        return [F.count(c).alias(f"{p}:count"), F.min(c).alias(f"{p}:min"),
-                F.max(c).alias(f"{p}:max"), F.sum(c).alias(f"{p}:sum"),
-                F.avg(c).alias(f"{p}:avg")]
-    if kind == "extended_stats":
-        return [F.count(c).alias(f"{p}:count"), F.min(c).alias(f"{p}:min"),
-                F.max(c).alias(f"{p}:max"), F.sum(c).alias(f"{p}:sum"),
-                F.avg(c).alias(f"{p}:avg"),
-                F.var_pop(c).alias(f"{p}:variance"),
-                F.stddev_pop(c).alias(f"{p}:std_deviation")]
-    if kind == "percentiles":
-        pts = spec.get("percents", [1.0, 5.0, 25.0, 50.0, 75.0, 95.0, 99.0])
-        return [F.percentile(c, F.lit(pt / 100.0)).alias(f"{p}:pct:{pt}")
-                for pt in pts]
-    raise NotImplementedError(f"metric agg {kind!r}")
-
-
-def _metric_result(kind: str, row, prefix: str) -> dict:
-    g = lambda k: row[f"{prefix}:{k}"]
-    if kind in ("avg", "sum", "min", "max", "value_count", "cardinality",
-                "weighted_avg"):
-        return {"value": g("value")}
-    if kind == "stats":
-        return {k: g(k) for k in ("count", "min", "max", "avg", "sum")}
-    if kind == "extended_stats":
-        return {k: g(k) for k in ("count", "min", "max", "avg", "sum",
-                                  "variance", "std_deviation")}
-    if kind == "percentiles":
-        vals = {}
-        for name in row.__fields__:
-            if name.startswith(f"{prefix}:pct:"):
-                vals[f"{float(name.rsplit(':', 1)[1]):.1f}"] = row[name]
-        return {"values": vals}
-    raise NotImplementedError(kind)
+        c, arg = value(spec["value"]), value(spec["weight"])
+    else:
+        c, arg = value(spec), spec.get("percents")
+    return [e.alias(f"{prefix}:{part}")
+            for part, e in A.metric_cols(kind, c, arg)]
 
 
 def _split_agg(spec: dict) -> Tuple[str, dict, dict]:
@@ -355,21 +308,35 @@ def _split_agg(spec: dict) -> Tuple[str, dict, dict]:
     return kinds[0], spec[kinds[0]], sub
 
 
-def _plan_children(sub_aggs: dict, engine):
-    """Split one node's children into (metrics, selectors, keyed).
+def _filter_predicate(engine):
+    """Query dict -> the engine's columnar docmap predicate."""
+    def pred(qd):
+        p = engine._predicate(Q.from_dict(qd)) if engine is not None else None
+        if p is None:
+            raise NotImplementedError(
+                "aggregation filters must be term-level (columnar) "
+                "queries; full-text scoring filters via aggs.py"
+            )
+        return p
+    return pred
+
+
+def _plan_children(sub_aggs: dict, frame: DataFrame, engine):
+    """Split one node's children into (metrics, selectors, keyed, hits).
 
     metrics:   [(name, kind, spec)]
-    selectors: [(name, kind, spec, conds, child_metrics,
-               child_selectors)] — filter / filters / missing / range
-               children become CONDITIONAL aggregates inside the
-               parent's own groupBy pass (zero extra jobs;
-               FiltersAggregator's sub-collector analog).  Selector-in-
-               selector nesting composes by AND-ing the masks down the
-               recursion (a filter inside a filter is just the
-               conjunction), still inside the ONE pass.
+    selectors: [(name, kind, conds, children)] — filter / filters /
+               missing / range-family children become CONDITIONAL
+               aggregates inside the node's own pass (zero extra jobs;
+               FiltersAggregator's sub-collector analog).  ``children``
+               is the selector's own plan; selector-in-selector nesting
+               ANDs the masks down, still inside the ONE pass.  Keyed
+               children of a selector run over the selector's docs, at
+               the request root only (:func:`_root_only_keyed`).
     keyed:     [(name, kind, spec, sub)] — terms / histogram /
                date_histogram children recurse with one groupBy per
                nesting level, keys accumulating
+    hits:      [(name, spec)] — top_hits children
     """
     metrics, selectors, keyed, hits = [], [], [], []
     for name, body in sub_aggs.items():
@@ -383,107 +350,83 @@ def _plan_children(sub_aggs: dict, engine):
         elif kind in _KEYED_NESTABLE:
             keyed.append((name, kind, spec, sub))
         elif kind in _SELECTOR_KINDS:
-            sm, ss, sk, sh = _plan_children(sub, engine)
-            if sk or sh:
-                raise NotImplementedError(
-                    "selector aggs nested under a bucket agg support "
-                    "metric/selector children only (flatten via aggs.py)"
-                )
-            conds = _selector_conds(kind, spec, engine)
-            selectors.append((name, kind, spec, conds, sm, ss))
+            children = _plan_children(sub, frame, engine)
+            _root_only_keyed(children[1])
+            conds = A.bucket_conds(kind, spec, frame, _filter_predicate(engine))
+            selectors.append((name, kind, conds, children))
         else:
             raise NotImplementedError(f"sub-agg {kind!r} under a bucket agg")
     return metrics, selectors, keyed, hits
 
 
-def _selector_conds(kind: str, spec: dict, engine):
-    """Selector-kind agg -> [(bucket_label, boolean Column, extras)]."""
-    def pred(qd):
-        p = engine._predicate(Q.from_dict(qd)) if engine is not None else None
-        if p is None:
-            raise NotImplementedError(
-                "aggregation filters must be term-level (columnar) "
-                "queries; full-text scoring filters via aggs.py"
-            )
-        return p
+def _root_only_keyed(selectors) -> None:
+    """Selector aggs nested in a bucket carry no keyed children."""
+    if any(ch[2] or ch[3] for *_s, ch in selectors):
+        raise NotImplementedError(
+            "selector aggs nested under a bucket agg support "
+            "metric/selector children only (flatten via aggs.py)"
+        )
 
-    if kind == "filter":
-        return [("", pred(spec), {})]
-    if kind == "filters":
-        return [(n, pred(qd), {}) for n, qd in spec["filters"].items()]
-    if kind == "missing":
-        return [("", F.col(spec["field"]).isNull(), {})]
-    if kind == "geo_distance":
-        # GeoDistanceAggregationBuilder: [from, to) rings in km around
-        # an origin — haversine reuses the geo_distance QUERY's exact
-        # Catalyst expression (executor._haversine_km)
-        from opensearch_spark.query.executor import _geo_cols, _haversine_km
 
-        origin = spec["origin"]
-        lat_c, lon_c = _geo_cols(spec["field"])
-        km = _haversine_km(lat_c, lon_c,
-                           float(origin["lat"]), float(origin["lon"]))
-        out = []
-        for rng in spec["ranges"]:
-            lo, hi = rng.get("from"), rng.get("to")
-            cond = km.isNotNull()
-            extras = {}
-            if lo is not None:
-                cond = cond & (km >= float(lo))
-                extras["from"] = float(lo)
-            if hi is not None:
-                cond = cond & (km < float(hi))
-                extras["to"] = float(hi)
-            key = rng.get("key") or (
-                f"{lo if lo is not None else '*'}-"
-                f"{hi if hi is not None else '*'}"
-            )
-            out.append((key, cond, extras))
-        return out
-    if kind in ("range", "date_range", "ip_range"):
-        # all three are [from, to) selector families over one column;
-        # date_range compares timestamps (DateRangeAggregationBuilder),
-        # ip_range compares the uint32 form of dotted quads
-        # (IpRangeAggregationBuilder / IpFieldMapper points)
-        out = []
-        if kind == "range":
-            fld = F.col(spec["field"]).cast("double")
-            conv = float
-        elif kind == "date_range":
-            fld = F.to_timestamp(F.col(spec["field"]))
-            conv = lambda v: F.to_timestamp(F.lit(v))  # noqa: E731
-        else:
-            fld = A.ip_to_long(F.col(spec["field"]))
-            conv = lambda v: A.ip_to_long(F.lit(v))  # noqa: E731
-        for rng in spec["ranges"]:
-            lo, hi = rng.get("from"), rng.get("to")
-            if kind == "ip_range" and "mask" in rng:
-                # CIDR -> [network, network + span)
-                import ipaddress
+def _child_exprs(frame: DataFrame, metrics, selectors, prefix: str = "",
+                 mask=None) -> List:
+    """Aggregate Columns of one node's metric and selector children:
+    each selector bucket is a conditional count plus its own children
+    under the bucket's mask, so the whole subtree is one pass."""
+    exprs = [e for mn, mk, ms in metrics
+             for e in _metric_aggs(mk, ms, frame, prefix + mn, mask)]
+    for sname, _kind, conds, (smetrics, ssel, _k, _h) in selectors:
+        for label, cond, _extras in conds:
+            full = cond if mask is None else (mask & cond)
+            p = f"{prefix}{sname}@{label}"
+            exprs.append(A.bucket_count(full).alias(f"{p}:doc_count"))
+            exprs += _child_exprs(frame, smetrics, ssel, f"{p}:", full)
+    return exprs
 
-                base, bits = rng["mask"].split("/")
-                span = 1 << (32 - int(bits))
 
-                net = int(ipaddress.IPv4Address(base)) & ~(span - 1)
-                cond = fld.isNotNull() & (fld >= net) & (fld < net + span)
-                out.append((rng.get("key") or rng["mask"], cond,
-                            {"mask": rng["mask"]}))
-                continue
-            cond = fld.isNotNull()
-            extras = {}
-            if lo is not None:
-                cond = cond & (fld >= (conv(lo) if kind != "range" else float(lo)))
-                extras["from"] = float(lo) if kind == "range" else lo
-            if hi is not None:
-                cond = cond & (fld < (conv(hi) if kind != "range" else float(hi)))
-                extras["to"] = float(hi) if kind == "range" else hi
-            key = rng.get("key") or (
-                f"{lo if lo is not None else '*'}-"
-                f"{hi if hi is not None else '*'}"
-            )
-            out.append((key, cond, extras))
-        return out
-    raise NotImplementedError(kind)
+def _attach_children(b: dict, row, metrics, selectors, prefix: str = "",
+                     frame: Optional[DataFrame] = None, engine=None) -> None:
+    """Slot one node's metric and selector results (read from its pass
+    ``row``) into the response object ``b``."""
+    for mn, mk, ms in metrics:
+        b[mn] = A.metric_result(mk, row, prefix + mn, ms.get("percents"))
+    for sname, skind, conds, (smetrics, ssel, skeyed, shits) in selectors:
+        def bucket(label, cond, extras):
+            p = f"{prefix}{sname}@{label}"
+            bb = {**extras, "doc_count": int(row[f"{p}:doc_count"])}
+            _attach_children(bb, row, smetrics, ssel, f"{p}:")
+            if skeyed or shits:
+                # a root selector's keyed children run over its docs
+                _attach_keyed(bb, (), *_run_keyed(
+                    frame.filter(cond), skeyed, shits, engine, []))
+            return bb
+
+        if skind in ("filter", "missing"):
+            b[sname] = bucket(*conds[0])
+        elif skind == "filters":
+            b[sname] = {"buckets": {c[0]: bucket(*c) for c in conds}}
+        else:  # range family
+            b[sname] = {"buckets": [{"key": c[0], **bucket(*c)} for c in conds]}
+
+
+def _run_keyed(frame: DataFrame, keyed, hits, engine, pkeys):
+    """Run a node's keyed and top_hits children ONCE for the whole
+    level, grouped by the accumulated parent keys ``pkeys``."""
+    parts = [c for _a, c in pkeys]
+    return ([(n, k, _exec_keyed(frame, k, s, sub, engine, pkeys))
+             for n, k, s, sub in keyed],
+            [(n, _exec_top_hits(frame, s, engine, parts)) for n, s in hits])
+
+
+def _attach_keyed(b: dict, key: tuple, kmaps, hmaps) -> None:
+    """Slot the keyed / top_hits child results of bucket ``key``."""
+    for n, kind, m in kmaps:
+        b[n] = m.get(key) or (
+            {"doc_count_error_upper_bound": 0, "sum_other_doc_count": 0,
+             "buckets": []} if kind == "terms" else {"buckets": []})
+    for n, m in hmaps:
+        b[n] = {"hits": {"total": {"value": b["doc_count"], "relation": "eq"},
+                         "hits": m.get(key, [])}}
 
 
 def _exec_top_hits(frame: DataFrame, spec: dict, engine,
@@ -492,22 +435,11 @@ def _exec_top_hits(frame: DataFrame, spec: dict, engine,
     ONE row_number window over the bucket keys — no per-bucket jobs.
     Returns ``{bucket_key_tuple: [hit dicts]}`` (empty tuple = global).
     """
-    from pyspark.sql.window import Window
-
     if engine is None:
         raise ValueError("top_hits needs the engine (for _id columns)")
     k = int(spec.get("size", 3))
-    sort_raw = spec.get("sort", [{"_score": "desc"}])
-    if isinstance(sort_raw, (str, dict)):
-        sort_raw = [sort_raw]
     order, sort_fields = [], []
-    for entry in sort_raw:
-        if isinstance(entry, str):
-            fld, d = entry, "desc" if entry == "_score" else "asc"
-        else:
-            fld = next(iter(entry))
-            spec_d = entry[fld]
-            d = spec_d if isinstance(spec_d, str) else spec_d.get("order", "asc")
+    for fld, d in _sort_spec({"sort": spec.get("sort", [{"_score": "desc"}])}):
         if fld == "_score" and "score" not in frame.columns:
             raise ValueError(
                 "top_hits _score sort needs the scored frame (run_aggs "
@@ -525,18 +457,14 @@ def _exec_top_hits(frame: DataFrame, spec: dict, engine,
                 [src] if isinstance(src, str) else list(src))
     src_cols = [c for c in src_cols if c in frame.columns]
     aliases = [f"__h{i}" for i in range(len(part_cols))]
-    w = (Window.partitionBy(*[F.col(a) for a in aliases])
-         if aliases else Window.partitionBy(F.lit(1)))
     sel = frame.select(
         *[c.alias(a) for c, a in zip(part_cols, aliases)],
         *dict.fromkeys(list(engine.id_cols) + src_cols + sort_fields
                        + (["score"] if "score" in frame.columns else [])),
     )
-    rows = (
-        sel.withColumn("__rk", F.row_number().over(w.orderBy(*order)))
-        .filter(F.col("__rk") <= k)
-        .collect()
-    )
+    w = A.bucket_window([F.col(a) for a in aliases]).orderBy(*order)
+    rows = (sel.withColumn("__rk", F.row_number().over(w))
+            .filter(F.col("__rk") <= k).collect())
     out: Dict[tuple, List[dict]] = {}
     for r in rows:
         key = tuple(r[a] for a in aliases)
@@ -546,108 +474,6 @@ def _exec_top_hits(frame: DataFrame, spec: dict, engine,
             "_source": {c: r[c] for c in src_cols},
         })
     return out
-
-
-def _keyed_key_col(kind: str, spec: dict, frame: Optional[DataFrame] = None):
-    """Keyed-kind agg -> (key Column, not-null guard Column | None).
-    Field names are addressed LITERALLY (backticked), so multi-field
-    sub-columns like ``date.nanos`` resolve; agg specs never address
-    struct members by dotted path (nested aggs have their own path
-    machinery)."""
-    field = spec["field"]
-    phys = field
-    if frame is not None and field not in frame.columns and "." in field:
-        mangled = field.replace(".", "__dot__")
-        if mangled in frame.columns:
-            # multi-field sub-column (see mapping.typed_frame)
-            phys = mangled
-    c = F.col(f"`{phys}`")
-    if kind == "terms":
-        if "missing" in spec:
-            return F.coalesce(c, F.lit(spec["missing"])), None
-        return c, c.isNotNull()
-    if kind == "histogram":
-        interval = float(spec["interval"])
-        key = F.floor(c.cast("double") / interval) * F.lit(interval)
-        return key, c.isNotNull()
-    if kind == "date_histogram":
-        cal = spec.get("calendar_interval") or spec.get("interval")
-        if cal not in _CAL_TRUNC:
-            raise NotImplementedError(
-                f"date_histogram interval {cal!r} (calendar units "
-                f"{sorted(set(_CAL_TRUNC.values()))} supported)"
-            )
-        tcol = c
-        if frame is not None and phys in frame.columns:
-            import pyspark.sql.types as _T
-
-            if isinstance(frame.schema[phys].dataType, _T.DecimalType):
-                # a date_nanos column stores epoch nanos
-                tcol = (c.cast("decimal(25,0)") / F.lit(1_000_000_000)
-                        ).cast("double").cast("timestamp")
-        return (F.date_trunc(_CAL_TRUNC[cal], tcol), c.isNotNull())
-    raise NotImplementedError(kind)
-
-
-def _selector_exprs(prefix: str, selectors, parent_mask=None) -> List:
-    """Conditional-aggregate expressions for a selector subtree; masks
-    AND down the nesting so arbitrarily deep selector-in-selector trees
-    stay inside the parent's single pass."""
-    exprs: List = []
-    for sname, _skind, _sspec, conds, smetrics, ssel in selectors:
-        for label, cond, _extras in conds:
-            full = cond if parent_mask is None else (parent_mask & cond)
-            p = f"{prefix}{sname}@{label}"
-            exprs.append(
-                F.sum(F.when(full, 1).otherwise(0)).alias(f"{p}:doc_count")
-            )
-            exprs += [e for mn, mk, ms in smetrics
-                      for e in _metric_exprs(mk, ms, f"{p}:{mn}", mask=full)]
-            exprs += _selector_exprs(f"{p}:", ssel, full)
-    return exprs
-
-
-def _child_exprs(metrics, selectors) -> List:
-    """Aggregate expressions for one node's metric + selector children
-    (selector metrics are mask-gated into the same pass)."""
-    exprs = [e for mn, mk, ms in metrics for e in _metric_exprs(mk, ms, mn)]
-    return exprs + _selector_exprs("", selectors)
-
-
-def _attach_selectors(b: dict, row, prefix: str, selectors) -> None:
-    for sname, skind, _sspec, conds, smetrics, ssel in selectors:
-        def mk(label, extras):
-            p = f"{prefix}{sname}@{label}"
-            bb = _selector_bucket(row, p, smetrics, extras)
-            _attach_selectors(bb, row, f"{p}:", ssel)
-            return bb
-
-        if skind == "filter" or skind == "missing":
-            label, _c, _e = conds[0]
-            b[sname] = mk(label, {})
-        elif skind == "filters":
-            b[sname] = {"buckets": {
-                label: mk(label, {}) for label, _c, _e in conds
-            }}
-        else:  # range family
-            b[sname] = {"buckets": [
-                {"key": label, **mk(label, extras)}
-                for label, _c, extras in conds
-            ]}
-
-
-def _attach_children(b: dict, row, metrics, selectors) -> None:
-    for mn, mk, _ms in metrics:
-        b[mn] = _metric_result(mk, row, mn)
-    _attach_selectors(b, row, "", selectors)
-
-
-def _selector_bucket(row, prefix, smetrics, extras) -> dict:
-    b = dict(extras)
-    b["doc_count"] = int(row[f"{prefix}:doc_count"] or 0)
-    for mn, mk, _ms in smetrics:
-        b[mn] = _metric_result(mk, row, f"{prefix}:{mn}")
-    return b
 
 
 def _decimal_format(pattern: str, value) -> str:
@@ -660,30 +486,25 @@ def _decimal_format(pattern: str, value) -> str:
     return prefix + f"%.{digits}f" % float(value) + suffix
 
 
-def _terms_order(spec, subs, key_alias: str = "key") -> List:
-    """BucketOrder (TermsAggregationBuilder.order): _count/_key/sub-agg
-    path, compound list supported, key-asc tie-break appended."""
+def _order(spec: dict, metrics, key_alias: str) -> List:
+    """The request's BucketOrder (``order``: one ``{path: dir}`` or a
+    list of them) over this node's columns: a metric child ``m`` is
+    ``m:value``, a dotted path ``m.part`` is ``m:part``."""
     raw = spec.get("order", {"_count": "desc"})
-    if isinstance(raw, dict):
-        raw = [raw]
-    cols = []
-    sub_names = {n for n, _k, _s in subs}
-    for entry in raw:
-        ((path, direction),) = entry.items()
-        if path == "_count":
-            col = "doc_count"
-        elif path in ("_key", "_time"):
-            # _time: the 6.x date_histogram spelling of _key
-            col = key_alias
-        else:
-            base = path.split(".", 1)[0]
-            if base not in sub_names:
-                raise ValueError(f"order path {path!r} is not a sub-agg")
-            # dotted path agg.metric -> the prefixed alias
-            col = path.replace(".", ":") if "." in path else f"{base}:value"
-        cols.append(F.asc(col) if direction == "asc" else F.desc(col))
-    cols.append(F.asc(key_alias))
-    return cols
+    order = [(path, d == "asc") for e in ([raw] if isinstance(raw, dict) else raw)
+             for path, d in e.items()]
+    names = {mn for mn, _k, _s in metrics}
+
+    def sub_col(path):
+        base, _dot, part = path.partition(".")
+        return f"{base}:{part or 'value'}" if base in names else None
+    return A.bucket_order(order, sub_col, key_alias)
+
+
+def _millis_iso(ms: int) -> str:
+    """Epoch millis -> ``yyyy-MM-ddTHH:mm:ss.SSSZ`` (UTC)."""
+    d = datetime.datetime(1970, 1, 1) + datetime.timedelta(milliseconds=ms)
+    return d.strftime("%Y-%m-%dT%H:%M:%S.") + f"{ms % 1000:03d}Z"
 
 
 def _exec_keyed(frame: DataFrame, kind: str, spec: dict, sub_aggs: dict,
@@ -699,157 +520,61 @@ def _exec_keyed(frame: DataFrame, kind: str, spec: dict, sub_aggs: dict,
     total for ``sum_other_doc_count`` without a second job.  Returns
     ``{parent_key_tuple: node_result_dict}``.
     """
-    from pyspark.sql.window import Window
-
-    key_col, nn = _keyed_key_col(kind, spec, frame)
-    f = frame if nn is None else frame.filter(nn)
-    metrics, selectors, keyed_children, hits_children = _plan_children(
-        sub_aggs, engine
-    )
+    key_col, guard = A.bucket_key(kind, spec, frame)
+    f = frame if guard is None else frame.filter(guard)
+    metrics, selectors, keyed, hits = _plan_children(sub_aggs, f, engine)
+    _root_only_keyed(selectors)
     galias = f"__k{len(pkeys)}"
-    group_cols = [c.alias(a) for a, c in pkeys] + [key_col.alias(galias)]
-    grouped = f.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).alias("doc_count"),
-        *_child_exprs(metrics, selectors),
+    parents = [a for a, _c in pkeys]
+    grouped = f.groupBy(*[c.alias(a) for a, c in pkeys], key_col.alias(galias)).agg(
+        F.count(F.lit(1)).alias("doc_count"), *_child_exprs(f, metrics, selectors)
     )
-    parent_aliases = [a for a, _c in pkeys]
     mdc = int(spec.get("min_doc_count", 1))
     if mdc > 1 or (kind != "terms" and mdc > 0):
         grouped = grouped.filter(F.col("doc_count") >= mdc)
     if kind == "terms":
-        size = int(spec.get("size", 10))
-        pw = (Window.partitionBy(*parent_aliases) if parent_aliases
-              else Window.partitionBy(F.lit(1)))
-        order_cols = _terms_order(spec, metrics, key_alias=galias)
-        grouped = (
-            grouped
-            .withColumn("__tot", F.sum("doc_count").over(pw))
-            .withColumn("__rk", F.row_number().over(pw.orderBy(*order_cols)))
-            .filter(F.col("__rk") <= size)
+        pw = A.bucket_window([F.col(a) for a in parents])
+        rows = sorted(
+            grouped.withColumn("__tot", F.sum("doc_count").over(pw))
+            .withColumn("__rk", F.row_number().over(
+                pw.orderBy(*_order(spec, metrics, galias))))
+            .filter(F.col("__rk") <= int(spec.get("size", 10)))
+            .collect(),
+            key=lambda r: r["__rk"],
         )
-        rows = grouped.collect()
-    elif "order" in spec:
-        # histogram/date_histogram accept the same BucketOrder grammar
-        # (incl. the deprecated _time alias for _key)
-        rows = grouped.orderBy(
-            *[F.asc(a) for a in parent_aliases],
-            *_terms_order(spec, metrics, key_alias=galias),
-        ).collect()
     else:
-        rows = grouped.orderBy(*[F.asc(a) for a in parent_aliases],
-                               F.asc(galias)).collect()
+        # histogram/date_histogram accept the same BucketOrder grammar
+        # (incl. the deprecated _time alias for _key); default key asc
+        order = (_order(spec, metrics, galias) if "order" in spec
+                 else [F.asc(galias)])
+        rows = grouped.orderBy(*[F.asc(a) for a in parents], *order).collect()
 
-    # assemble per parent tuple
-    per_parent: Dict[tuple, List] = {}
-    for r in rows:
-        per_parent.setdefault(
-            tuple(r[a] for a in parent_aliases), []
-        ).append(r)
-    # recurse keyed children ONCE for the whole level (their groupBy
-    # carries this level's key), then slot results under each bucket
-    child_maps = {
-        cname: _exec_keyed(f, ckind, cspec, csub, engine,
-                           pkeys + [(galias, key_col)])
-        for cname, ckind, cspec, csub in keyed_children
-    }
-    hits_maps = {
-        hname: _exec_top_hits(f, hspec, engine,
-                              [c for _a, c in pkeys] + [key_col])
-        for hname, hspec in hits_children
-    }
+    # keyed children run ONCE for the whole level (their groupBy
+    # carries this level's key); results slot under each bucket
+    kmaps, hmaps = _run_keyed(f, keyed, hits, engine,
+                              pkeys + [(galias, key_col)])
     out: Dict[tuple, dict] = {}
-    for ptuple, prows in per_parent.items():
-        buckets = []
-        for r in sorted(prows, key=lambda x: x["__rk"]) if kind == "terms" else prows:
-            raw_key = r[galias]
-            if kind == "date_histogram":
-                import calendar as _cal
-
-                b = {"key_as_string": (
-                        raw_key.strftime("%Y-%m-%dT%H:%M:%S.")
-                        + f"{raw_key.microsecond // 1000:03d}Z"),
-                     "key": int(_cal.timegm(raw_key.timetuple()) * 1000
-                                + raw_key.microsecond // 1000),
-                     "doc_count": int(r["doc_count"])}
-            else:
-                b = {"key": raw_key, "doc_count": int(r["doc_count"])}
-                if kind == "histogram" and spec.get("format"):
-                    b["key_as_string"] = _decimal_format(
-                        spec["format"], raw_key)
-            _attach_children(b, r, metrics, selectors)
-            for cname, cmap in child_maps.items():
-                ckind = next(k for n, k, _s, _u in keyed_children if n == cname)
-                b[cname] = cmap.get(
-                    ptuple + (raw_key,),
-                    {"buckets": []} if ckind != "terms" else
-                    {"doc_count_error_upper_bound": 0,
-                     "sum_other_doc_count": 0, "buckets": []},
-                )
-            for hname, hmap in hits_maps.items():
-                hh = hmap.get(ptuple + (raw_key,), [])
-                b[hname] = {"hits": {
-                    "total": {"value": b["doc_count"], "relation": "eq"},
-                    "hits": hh,
-                }}
-            buckets.append(b)
+    for r in rows:
+        ptuple, raw_key = tuple(r[a] for a in parents), r[galias]
+        b = {"key": raw_key, "doc_count": int(r["doc_count"])}
+        if kind == "date_histogram":
+            b = {"key_as_string": _millis_iso(raw_key), **b}
+        elif kind == "histogram" and spec.get("format"):
+            b["key_as_string"] = _decimal_format(spec["format"], raw_key)
+        _attach_children(b, r, metrics, selectors)
+        _attach_keyed(b, ptuple + (raw_key,), kmaps, hmaps)
+        buckets = out.setdefault(ptuple, {"buckets": []})["buckets"]
+        buckets.append(b)
         if kind == "terms":
-            total = int(prows[0]["__tot"]) if prows else 0
+            # single logical shard -> exact counts, like the reference
+            # on one shard (InternalTerms doc_count_error)
             out[ptuple] = {
-                # single logical shard -> exact counts, like the
-                # reference on one shard (InternalTerms doc_count_error)
                 "doc_count_error_upper_bound": 0,
                 "sum_other_doc_count":
-                    total - sum(b["doc_count"] for b in buckets),
+                    int(r["__tot"]) - sum(x["doc_count"] for x in buckets),
                 "buckets": buckets,
             }
-        else:
-            out[ptuple] = {"buckets": buckets}
     return out
-
-
-def _exec_selector_root(frame: DataFrame, kind: str, spec: dict,
-                        sub_aggs: dict, engine) -> dict:
-    """A top-level selector agg (filter / filters / missing / range):
-    every selector bucket's doc_count + metric children evaluate as
-    conditional aggregates in ONE pass; keyed children run per selector
-    bucket on the filtered frame (bucket count is small and fixed)."""
-    metrics, selectors, keyed_children, hits_children = _plan_children(
-        sub_aggs, engine
-    )
-    conds = _selector_conds(kind, spec, engine)
-    exprs = []
-    for label, cond, _extras in conds:
-        p = f"__self@{label}"
-        exprs.append(F.sum(F.when(cond, 1).otherwise(0)).alias(f"{p}:doc_count"))
-        exprs += [e for mn, mk, ms in metrics
-                  for e in _metric_exprs(mk, ms, f"{p}:{mn}", mask=cond)]
-        # selector children nest by AND-ing masks — still one pass
-        exprs += _selector_exprs(f"{p}:", selectors, cond)
-    row = frame.agg(*exprs).collect()[0]
-
-    def bucket(label, cond, extras) -> dict:
-        b = _selector_bucket(row, f"__self@{label}", metrics, extras)
-        _attach_selectors(b, row, f"__self@{label}:", selectors)
-        for cname, ckind, cspec, csub in keyed_children:
-            b[cname] = _exec_keyed(
-                frame.filter(cond), ckind, cspec, csub, engine, []
-            ).get((), {"buckets": []})
-        for hname, hspec in hits_children:
-            hh = _exec_top_hits(frame.filter(cond), hspec, engine, []).get((), [])
-            b[hname] = {"hits": {
-                "total": {"value": b["doc_count"], "relation": "eq"},
-                "hits": hh,
-            }}
-        return b
-
-    if kind in ("filter", "missing"):
-        label, cond, extras = conds[0]
-        return bucket(label, cond, extras)
-    if kind == "filters":
-        return {"buckets": {label: bucket(label, cond, extras)
-                            for label, cond, extras in conds}}
-    return {"buckets": [{"key": label, **bucket(label, cond, extras)}
-                        for label, cond, extras in conds]}
 
 
 def _run_pipeline(kind: str, spec: dict, results: dict) -> dict:
@@ -876,47 +601,38 @@ def _run_pipeline(kind: str, spec: dict, results: dict) -> dict:
     return {"buckets": buckets}
 
 
+def _resolve_fields(frame: DataFrame, tree: dict) -> DataFrame:
+    """Materialize each ``field`` of the agg tree that the frame lacks
+    as a literal column through ``aggs.field_col`` (multi-field column,
+    struct path, or nulls when unmapped), so every agg kind addresses
+    it by name."""
+    for b in (tree or {}).values():
+        for k, v in (b.items() if isinstance(b, dict) else ()):
+            if k in ("aggs", "aggregations"):
+                frame = _resolve_fields(frame, v)
+            elif isinstance(v, dict) and isinstance(v.get("field"), str) \
+                    and v["field"] not in frame.columns:
+                frame = frame.withColumn(v["field"], A.field_col(frame, v["field"]))
+    return frame
+
+
 def run_aggs(frame: DataFrame, aggs_spec: dict, engine=None,
              full_frame: Optional[DataFrame] = None) -> dict:
     """Execute a reference ``aggs`` sub-tree over ``frame``.
 
-    Sibling TOP-LEVEL metric aggs share one ``agg()`` job; each keyed
-    bucket agg costs one ``groupBy`` per nesting level; selector
-    sub-aggs fold into their parent's pass as conditional aggregates;
-    pipeline aggs post-process sibling bucket lists driver-side.
+    The request root is a keyless bucket: its metric and selector
+    children share ONE ``agg()`` pass (selectors as conditional
+    aggregates); each keyed bucket agg costs one ``groupBy`` per nesting
+    level; pipeline aggs post-process sibling bucket lists driver-side.
     ``global`` (GlobalAggregator.java) re-roots its sub-tree on
     ``full_frame`` — the whole index, ignoring the query."""
-    # unmapped-field aggregations: any referenced field absent from the
-    # frame aggregates over nulls (the reference's unmapped
-    # ValuesSource; the agg's own `missing` param then substitutes)
-    def _referenced_fields(tree: dict, out: set) -> set:
-        for _n, b in (tree or {}).items():
-            if not isinstance(b, dict):
-                continue
-            for k, v in b.items():
-                if k in ("aggs", "aggregations"):
-                    _referenced_fields(v, out)
-                elif isinstance(v, dict) and isinstance(v.get("field"), str):
-                    out.add(v["field"])
-        return out
-
-    for f in _referenced_fields(aggs_spec, set()):
-        if f not in frame.columns and "." not in f:
-            frame = frame.withColumn(f, F.lit(None).cast("double"))
-            if full_frame is not None and f not in full_frame.columns:
-                full_frame = full_frame.withColumn(
-                    f, F.lit(None).cast("double")
-                )
-
-    metric_plan, bucket_plan, pipe_plan, global_plan = [], [], [], []
-    special_plan = []
+    frame = _resolve_fields(frame, aggs_spec)
+    if full_frame is not None:
+        full_frame = _resolve_fields(full_frame, aggs_spec)
+    tree, pipe_plan, global_plan, special_plan = {}, [], [], []
     for name, body in aggs_spec.items():
         kind, spec, sub = _split_agg(body)
-        if kind in _METRIC_KINDS:
-            if sub:
-                raise ValueError(f"metric agg {name!r} cannot have sub-aggs")
-            metric_plan.append((name, kind, spec))
-        elif kind in _PIPELINE_KINDS:
+        if kind in _PIPELINE_KINDS:
             pipe_plan.append((name, kind, spec))
         elif kind == "global":
             global_plan.append((name, sub))
@@ -924,28 +640,18 @@ def run_aggs(frame: DataFrame, aggs_spec: dict, engine=None,
                       "median_absolute_deviation", "rare_terms",
                       "multi_terms"):
             special_plan.append((name, kind, spec, sub))
-        elif kind in _BUCKET_KINDS:
-            bucket_plan.append((name, kind, spec, sub))
+        elif kind in _METRIC_KINDS or kind in _BUCKET_KINDS:
+            tree[name] = body
         else:
             raise NotImplementedError(
                 f"agg {kind!r} — available via aggs.py combinators"
             )
     results: dict = {}
-    if metric_plan:
-        exprs = [e for name, k, s in metric_plan
-                 for e in _metric_exprs(k, s, name)]
-        row = frame.agg(*exprs).collect()[0]
-        for name, k, _s in metric_plan:
-            results[name] = _metric_result(k, row, name)
-    for name, kind, spec, sub in bucket_plan:
-        if kind in _KEYED_NESTABLE:
-            results[name] = _exec_keyed(frame, kind, spec, sub, engine, []).get(
-                (),
-                {"doc_count_error_upper_bound": 0, "sum_other_doc_count": 0,
-                 "buckets": []} if kind == "terms" else {"buckets": []},
-            )
-        else:
-            results[name] = _exec_selector_root(frame, kind, spec, sub, engine)
+    metrics, selectors, keyed, _hits = _plan_children(tree, frame, engine)
+    exprs = _child_exprs(frame, metrics, selectors)
+    row = frame.agg(*exprs).collect()[0] if exprs else None
+    _attach_children(results, row, metrics, selectors, frame=frame, engine=engine)
+    _attach_keyed(results, (), *_run_keyed(frame, keyed, [], engine, []))
     for name, sub in global_plan:
         if full_frame is None:
             raise ValueError("global agg needs the full index frame")
@@ -973,11 +679,9 @@ def run_aggs(frame: DataFrame, aggs_spec: dict, engine=None,
             fields = [t["field"] for t in spec["terms"]]
             # MultiTermsAggregator: a doc missing ANY key field is not
             # bucketed (each terms source needs a value)
-            f2 = frame
-            for fld in fields:
-                f2 = f2.filter(F.col(fld).isNotNull())
             rows = A.multi_terms(
-                f2, fields, size=int(spec.get("size", 10))
+                frame.dropna(subset=fields), fields,
+                size=int(spec.get("size", 10)),
             ).collect()
             results[name] = {"buckets": [
                 {"key": [r[f"key_{f}"] for f in fields],
@@ -1023,39 +727,31 @@ def _run_composite(frame: DataFrame, spec: dict, sub_aggs: dict,
     buckets over multiple named sources (terms / histogram /
     date_histogram) — one groupBy, keyset ``after`` filter, metric
     sub-aggs in the same pass."""
-    metrics, selectors, keyed, hits = _plan_children(sub_aggs, engine)
+    metrics, selectors, keyed, hits = _plan_children(sub_aggs, frame, engine)
     if selectors or keyed or hits:
         raise NotImplementedError("composite supports metric sub-aggs")
     names, key_cols = [], []
     for src in spec["sources"]:
         ((sname, sbody),) = src.items()
         ((skind, sspec),) = sbody.items()
-        col, _nn = _keyed_key_col(skind, sspec)
         names.append(sname)
-        key_cols.append(col)
+        key_cols.append(A.bucket_key(skind, sspec, frame)[0])
+    aliases = [f"__c_{n}" for n in names]
     grouped = frame.groupBy(
-        *[c.alias(f"__c_{n}") for n, c in zip(names, key_cols)]
-    ).agg(F.count(F.lit(1)).alias("doc_count"), *_child_exprs(metrics, []))
+        *[c.alias(a) for c, a in zip(key_cols, aliases)]
+    ).agg(F.count(F.lit(1)).alias("doc_count"),
+          *_child_exprs(frame, metrics, []))
     after = spec.get("after")
     if after is not None:
-        # keyset pagination: strictly-after in the composite key order
-        cond = F.lit(False)
-        eq = F.lit(True)
-        for n in names:
-            c = F.col(f"__c_{n}")
-            cond = cond | (eq & (c > F.lit(after[n])))
-            eq = eq & (c == F.lit(after[n]))
-        grouped = grouped.filter(cond)
+        grouped = grouped.filter(
+            A.after_cond([F.col(a) for a in aliases], [after[n] for n in names]))
     size = int(spec.get("size", 10))
-    rows = grouped.orderBy(
-        *[F.asc(f"__c_{n}") for n in names]
-    ).limit(size).collect()
+    rows = grouped.orderBy(*aliases).limit(size).collect()
     buckets = []
     for r in rows:
-        b = {"key": {n: r[f"__c_{n}"] for n in names},
+        b = {"key": {n: r[a] for n, a in zip(names, aliases)},
              "doc_count": int(r["doc_count"])}
-        for mn, mk, _ms in metrics:
-            b[mn] = _metric_result(mk, r, mn)
+        _attach_children(b, r, metrics, [])
         buckets.append(b)
     out = {"buckets": buckets}
     if len(buckets) == size:
@@ -1360,8 +1056,6 @@ def search_request(engine, body: dict) -> dict:
         if flds:
             hit["fields"] = flds
         if sort is not None:
-            import calendar
-            import datetime as _dt
             import decimal
 
             keys = []
@@ -1373,11 +1067,12 @@ def search_request(engine, body: dict) -> dict:
                     if isinstance(v, decimal.Decimal):
                         # unsigned_long doc values render as integers
                         v = int(v)
-                    elif isinstance(v, _dt.datetime):
+                    elif isinstance(v, datetime.datetime):
                         # date sort keys are epoch millis (DocValueFormat
-                        # RAW over the date field's long doc values)
-                        v = (calendar.timegm(v.utctimetuple()) * 1000
-                             + v.microsecond // 1000)
+                        # RAW over the date field's long doc values);
+                        # PySpark collects naive LOCAL datetimes, which
+                        # its own TimestampType converts back exactly
+                        v = _TIMESTAMP.toInternal(v) // 1000
                     keys.append(v)
             hit["sort"] = keys
         hid = hit["_id"]

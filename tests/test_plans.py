@@ -88,14 +88,20 @@ def test_term_stats_inline_small_broadcast_large(engine):
 
 def _py4j_round_trips(spark, fn) -> int:
     """py4j round trips ``fn`` makes, counted by wrapping the gateway
-    client's ``send_command``."""
+    client's ``send_command``.  Only the calling thread's sends count:
+    py4j's FinalizerWorker thread releases garbage-collected JVM
+    references through the same client whenever it wakes, so its sends
+    in the window depend on timing, not on ``fn``."""
+    import threading
+
     client = spark.sparkContext._gateway._gateway_client
     orig = client.send_command
+    caller = threading.get_ident()
     calls = 0
 
     def send_command(*args, **kwargs):
         nonlocal calls
-        calls += 1
+        calls += threading.get_ident() == caller
         return orig(*args, **kwargs)
 
     client.send_command = send_command
@@ -144,6 +150,34 @@ def test_absent_term_runs_no_job(engine):
     assert _jobs_in_group(engine.spark, "absent-term", df.collect) == 0
     present = engine.search({"term": {"text": "error"}}, size=10)
     assert _jobs_in_group(engine.spark, "present-term", present.collect) >= 1
+
+
+def test_root_selectors_share_the_metric_pass(engine):
+    """The request root is a keyless bucket: root filter and range aggs
+    are conditional aggregates in the root metrics' one agg() pass, and
+    metric + filter children of terms ride the terms groupBy — neither
+    shape runs more jobs than its bare counterpart."""
+    from opensearch_spark import restapi
+
+    dm = engine.docmap()
+
+    def jobs(group, spec):
+        run = lambda: restapi.run_aggs(dm, spec, engine=engine)  # noqa: E731
+        run()  # warm: first-use costs are not the shape's
+        return _jobs_in_group(engine.spark, group, run)
+
+    avg = {"a": {"avg": {"field": "dl"}}}
+    mixed = {**avg,
+             "f": {"filter": {"term": {"role": "user"}}},
+             "r": {"range": {"field": "dl",
+                             "ranges": [{"to": 20}, {"from": 20}]}}}
+    assert jobs("root-mixed", mixed) == jobs("root-avg", avg)
+    terms = {"t": {"terms": {"field": "role"}}}
+    nested = {"t": {"terms": {"field": "role"}, "aggs": {
+        "m": {"avg": {"field": "dl"}},
+        "f": {"filter": {"term": {"tool": "grep"}}},
+    }}}
+    assert jobs("terms-nested", nested) == jobs("terms-bare", terms)
 
 
 def test_search_plan_no_cartesian(engine):

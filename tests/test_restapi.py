@@ -726,3 +726,96 @@ def test_analyze_request_body():
     assert [(t["token"], t["position"]) for t in r2["tokens"]] == [
         ("R163", 0), ("R163", 1), ("A261", 2),
     ]
+
+
+def test_run_aggs_struct_paths(spark):
+    """Agg fields that address struct members by dotted path resolve
+    through the struct for every kind (terms, avg, range, missing,
+    histogram, a composite source); an unmapped dotted field aggregates
+    as nulls, like any unmapped field."""
+    df = spark.createDataFrame(
+        [(1, ("ann", 30)), (2, ("bob", 41)), (3, ("ann", 17)),
+         (4, (None, None)), (5, None)],
+        "id int, user struct<name:string,age:int>",
+    )
+    a = restapi.run_aggs(df, {
+        "names": {"terms": {"field": "user.name"}},
+        "age": {"avg": {"field": "user.age"}},
+        "bands": {"range": {"field": "user.age",
+                            "ranges": [{"to": 30}, {"from": 30}]}},
+        "no_name": {"missing": {"field": "user.name"}},
+        "decades": {"histogram": {"field": "user.age", "interval": 10}},
+        "comp": {"composite": {"sources": [
+            {"n": {"terms": {"field": "user.name"}}},
+            {"a": {"histogram": {"field": "user.age", "interval": 20}}},
+        ]}},
+        "ghost_terms": {"terms": {"field": "user.email"}},
+        "ghost_avg": {"avg": {"field": "user.email"}},
+        "ghost_missing": {"missing": {"field": "user.email"}},
+    })
+    assert [(b["key"], b["doc_count"]) for b in a["names"]["buckets"]] == [
+        ("ann", 2), ("bob", 1)]
+    assert a["age"]["value"] == pytest.approx((30 + 41 + 17) / 3)
+    assert [b["doc_count"] for b in a["bands"]["buckets"]] == [1, 2]
+    assert a["no_name"]["doc_count"] == 2
+    assert [(b["key"], b["doc_count"]) for b in a["decades"]["buckets"]] == [
+        (10.0, 1), (30.0, 1), (40.0, 1)]
+    comp = [(b["key"]["n"], b["key"]["a"], b["doc_count"])
+            for b in a["comp"]["buckets"] if b["key"]["n"] is not None]
+    assert comp == [("ann", 0.0, 1), ("ann", 20.0, 1), ("bob", 40.0, 1)]
+    assert a["ghost_terms"]["buckets"] == []
+    assert a["ghost_avg"]["value"] is None
+    assert a["ghost_missing"]["doc_count"] == 5
+
+
+def test_date_keys_ignore_time_zones(engine):
+    """date_histogram keys and date sort keys are epoch millis of UTC
+    instants whatever the time zone of the Python process or of the
+    Spark session.  Asia/Kolkata's half-hour offset moves every hour
+    boundary, so any leak of either zone changes the buckets."""
+    import os
+    import time
+
+    aggs_body = {
+        "size": 0,
+        "query": {"match": {"text": "error handling"}},
+        "aggs": {
+            "by_role": {"terms": {"field": "role"}},
+            "per_hour": {"date_histogram": {"field": "ts",
+                                            "calendar_interval": "hour"}},
+            "avg_turn": {"avg": {"field": "turn_idx"}},
+        },
+    }
+    sort_body = {"query": {"match": {"text": "error"}}, "size": 5,
+                 "sort": [{"ts": "asc"}], "_source": ["ts"]}
+
+    def run():
+        return (restapi.search_request(engine, aggs_body)["aggregations"],
+                [h["sort"] for h in
+                 restapi.search_request(engine, sort_body)["hits"]["hits"]])
+
+    utc = run()
+    keys = [b["key"] for b in utc[0]["per_hour"]["buckets"]]
+    assert keys and all(k % 3_600_000 == 0 for k in keys)
+    assert utc[0]["per_hour"]["buckets"][0]["key_as_string"].endswith(
+        ":00:00.000Z")
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "Asia/Kolkata"
+    time.tzset()
+    try:
+        py_local = run()
+    finally:
+        if old_tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    conf = engine.spark.conf
+    old_session = conf.get("spark.sql.session.timeZone")
+    conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    try:
+        session_local = run()
+    finally:
+        conf.set("spark.sql.session.timeZone", old_session)
+    assert py_local == utc
+    assert session_local == utc

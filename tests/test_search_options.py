@@ -310,3 +310,51 @@ def test_highlight_fragments_case_punct_and_spacing(spark, tmp_path):
         {"term": {"doc_id": 2}}, size=5, no_match_size=30
     ).collect()
     assert [(r["doc_id"], r["frag"]) for r in nm] == [(2, -1)]
+
+
+def test_date_nanos_search_after_string_keys(spark, tmp_path):
+    """search_after on a date_nanos sort key takes the emitted epoch
+    nanos back, and the field's string renderings parse to exact epoch
+    nanos: nine fraction digits with or without ``Z``, three digits, and
+    a ``+HH:MM`` offset."""
+    import json as _json
+
+    from opensearch_spark import restapi
+    from opensearch_spark.index.mapping import Mappings, create_index_from_json
+    from opensearch_spark.index.reader import InvertedIndex
+    from opensearch_spark.query.executor import SearchEngine, _parse_nanos
+
+    base = 1540815132 * 10**9  # 2018-10-29T12:12:12Z
+    iso = ["strict_date_optional_time"]
+    assert _parse_nanos("2018-10-29T12:12:12.123456789Z", iso) == base + 123456789
+    assert _parse_nanos("2018-10-29T12:12:12.123456789", iso) == base + 123456789
+    assert _parse_nanos("2018-10-29T12:12:12.123Z", iso) == base + 123000000
+    assert _parse_nanos("2018-10-29T17:42:12.5+05:30", iso) == base + 500000000
+    assert _parse_nanos("2018-10-29", iso) == base - 43932 * 10**9
+
+    stamps = ["2018-10-29T12:12:11.5Z", "2018-10-29T12:12:12.123456Z",
+              "2018-10-29T12:12:13Z"]
+    df = spark.createDataFrame(
+        [(_json.dumps({"doc_id": i, "text": "row", "t": t}),)
+         for i, t in enumerate(stamps)], "_source string")
+    d = str(tmp_path / "nanos")
+    create_index_from_json(spark, df, d, id_fields=("doc_id",),
+                           mappings=Mappings({"t": {"type": "date_nanos"}}))
+    eng = SearchEngine(InvertedIndex(spark, d))
+
+    def page(after=None, size=3):
+        body = {"query": {"match": {"text": "row"}}, "size": size,
+                "sort": [{"t": "asc"}]}
+        if after is not None:
+            body["search_after"] = [after]
+        hits = restapi.search_request(eng, body)["hits"]["hits"]
+        return [(h["_id"], h["sort"][0]) for h in hits]
+
+    first = page(size=1)
+    assert first == [("0", base - 500000000)]
+    rest = page(first[0][1])
+    assert [i for i, _s in rest] == ["1", "2"]
+    assert page("2018-10-29T12:12:11.5Z") == rest
+    assert page("2018-10-29T12:12:12.123Z") == rest
+    assert page("2018-10-29T12:12:12.123456789Z") == rest[1:]
+    assert page("2018-10-29T12:12:12.123456789") == rest[1:]
