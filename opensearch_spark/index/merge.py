@@ -140,28 +140,13 @@ def _repack_partition(
         )
     n_docs_in = pdf["n_docs"].to_numpy(np.int64)
     bc = codec.get_codec(codec_name)
-
-    docs = np.concatenate(
-        [
-            np.cumsum(bc.decode(r.docs_bin, int(r.n_docs)).astype(np.int64))
-            + np.int64(r.base_doc)
-            for r in pdf.itertuples()
-        ]
+    docs, tfs, norms, pos = codec.decode_blocks(
+        bc,
+        pdf["base_doc"].to_numpy(np.int64),
+        n_docs_in,
+        *(codec.bytes_binary(pdf[c]) for c in ("docs_bin", "tfs_bin", "norms_bin")),
+        codec.bytes_binary(pdf["pos_bin"]) if with_pos else None,
     )
-    tfs_list = [
-        bc.decode(r.tfs_bin, int(r.n_docs)).astype(np.int64) for r in pdf.itertuples()
-    ]
-    tfs = np.concatenate(tfs_list)
-    norms = np.concatenate(
-        [np.frombuffer(r.norms_bin, dtype=np.uint8) for r in pdf.itertuples()]
-    )
-    if with_pos:
-        pos = np.concatenate(
-            [
-                codec.positions_from_deltas(bc.decode(r.pos_bin, int(t.sum())), t)
-                for r, t in zip(pdf.itertuples(), tfs_list)
-            ]
-        )
 
     terms_b = pdf["term"].to_numpy(object)
     salts_b = pdf["_salt"].to_numpy(np.int64)

@@ -4,9 +4,13 @@ The decode path is the analog of Lucene's postings enumeration: block rows
 for the query's terms are scanned (Parquet predicate pushdown prunes by the
 ``term`` column — blocks are written term-sorted so row-group min/max stats
 make this effective), then unpacked Arrow-native in a ``mapInArrow``
-into (term, doc_id, tf, norm_byte[, positions]) rows for scoring; the
-positions column is built as one ListArray from flat values + offsets,
-so the decode does per-BLOCK Python and per-POSTING numpy only.
+into (term, doc_id, tf, norm_byte[, positions]) rows for scoring.  The
+decode is per-BATCH (``codec.decode_record_batch``): one vectorized pass
+over each Arrow batch of blocks, no per-block Python.
+
+``persist()`` runs that decode once for the whole index and pins the
+result, so a persisted index serves postings from a JVM-only filter over
+cached columnar batches; unpersisted indexes decode on read.
 """
 
 from __future__ import annotations
@@ -34,6 +38,25 @@ def _term_in(terms: Sequence[str]) -> str:
     return "term IN (" + ", ".join(sqltext.string(t) for t in terms) + ")"
 
 
+_POSTING_FIELDS = [
+    T.StructField("term", T.StringType()),
+    T.StructField("_docid", T.LongType()),
+    T.StructField("tf", T.IntegerType()),
+    T.StructField("norm_byte", T.IntegerType()),
+]
+# decoded postings schema, keyed by with_positions
+_POSTINGS_SCHEMA = {
+    False: T.StructType(_POSTING_FIELDS),
+    True: T.StructType(
+        _POSTING_FIELDS + [T.StructField("positions", T.ArrayType(T.LongType()))]
+    ),
+}
+
+
+# frames pinned by InvertedIndex.persist, in materialization order
+_PINS = ("_postings_df", "_docmap_df", "_dictionary_df", "_decoded_df")
+
+
 class InvertedIndex:
     """Handle to an index directory produced by ``build_index``."""
 
@@ -59,35 +82,48 @@ class InvertedIndex:
     # ---- raw tables ----
 
     def persist(self) -> "InvertedIndex":
-        """Pin the index tables in executor memory/disk (the reference's
+        """Pin the index in executor memory/disk (the reference's
         filesystem-cache-resident postings; BASELINE.md measures query
-        latency warm).  Returns self."""
+        latency warm).  Returns self.
+
+        Pins four frames: the packed block rows (WAND's ``block_meta()``
+        and its pruned decode read them), the docmap, the dictionary,
+        and the DECODED postings — every block unpacked once here, with
+        positions when the index stores them.  From then on
+        :meth:`postings_for_terms`, positional queries included, reads
+        the decoded pin with a JVM-only ``term IN (...)`` scan instead
+        of decoding blocks in a Python worker per query."""
         from pyspark import StorageLevel
 
-        self.__dict__["_postings_df"] = (
-            self.spark.read.parquet(self.paths["postings"])
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        self.__dict__["_docmap_df"] = self.docmap().persist(StorageLevel.MEMORY_AND_DISK)
-        self.__dict__["_dictionary_df"] = (
-            self.dictionary().persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # materialize
-        self.__dict__["_postings_df"].count()
-        self.__dict__["_docmap_df"].count()
-        self.__dict__["_dictionary_df"].count()
+        level = StorageLevel.MEMORY_AND_DISK
+        pins = self.__dict__
+        pins["_postings_df"] = self.postings().persist(level)
+        pins["_docmap_df"] = self.docmap().persist(level)
+        pins["_dictionary_df"] = self.dictionary().persist(level)
+        pins["_decoded_df"] = self.decode_blocks(
+            pins["_postings_df"], with_positions=self.has_positions
+        ).persist(level)
+        for key in _PINS:
+            pins[key].count()  # materialize
         return self
 
     def unpersist(self) -> "InvertedIndex":
-        """Release the pinned tables (the cache-eviction twin of
-        :meth:`persist`) — benches that walk multiple index sizes in
-        one JVM must drop the previous size's cache or the unroll of
-        the next one OOMs the shared local heap."""
-        for key in ("_postings_df", "_docmap_df", "_dictionary_df"):
+        """Release every pinned frame, the ``block_meta()`` pin included
+        (the cache-eviction twin of :meth:`persist`) — benches that walk
+        multiple index sizes in one JVM must drop the previous size's
+        cache or the unroll of the next one OOMs the shared local heap.
+        Frames derived from the block pin go first: uncaching a frame
+        re-plans the cached frames built on it."""
+        for key in ("_block_meta_df",) + _PINS[::-1]:
             df = self.__dict__.pop(key, None)
             if df is not None:
                 df.unpersist()
         return self
+
+    @property
+    def has_positions(self) -> bool:
+        """Whether the blocks carry term positions (``store_positions``)."""
+        return bool(self.plan.get("store_positions", True))
 
     def postings(self) -> DataFrame:
         cached = self.__dict__.get("_postings_df")
@@ -268,15 +304,22 @@ class InvertedIndex:
     def postings_for_terms(
         self, terms: Sequence[str], with_positions: bool = False
     ) -> DataFrame:
-        """Decode posting blocks for ``terms`` -> DataFrame
+        """Postings of ``terms`` -> DataFrame
         (term, _docid, tf, norm_byte[, positions array]).
 
-        The ``term isin`` filter is pushed down into the Parquet scan of
-        the block table; only matching blocks are decoded.
+        On a persisted index this is a ``term IN (...)`` filter over the
+        decoded pin (cached-batch term stats skip the other batches).
+        Otherwise the filter is pushed down into the Parquet scan of the
+        block table and only matching blocks are decoded.
         """
         terms = sorted(set(terms))
         if not terms:
             return self._empty_postings(with_positions)
+        decoded = self.__dict__.get("_decoded_df")
+        if decoded is not None and (self.has_positions or not with_positions):
+            return decoded.where(_term_in(terms)).select(
+                *_POSTINGS_SCHEMA[with_positions].fieldNames()
+            )
         blocks = self.postings().where(_term_in(terms))
         return self.decode_blocks(blocks, with_positions)
 
@@ -284,105 +327,21 @@ class InvertedIndex:
         self, blocks: DataFrame, with_positions: bool = False
     ) -> DataFrame:
         """Unpack an arbitrary block-row DataFrame (e.g. a WAND-pruned
-        subset) into per-posting rows."""
+        subset) into per-posting rows: one ``mapInArrow`` whose
+        :func:`codec.decode_record_batch` decodes each Arrow batch of
+        blocks in one vectorized pass."""
         cols = ["term", "base_doc", "n_docs", "docs_bin", "tfs_bin", "norms_bin"]
         if with_positions:
             cols.append("pos_bin")
         blocks = blocks.selectExpr(*cols)
 
-        fields = [
-            T.StructField("term", T.StringType()),
-            T.StructField("_docid", T.LongType()),
-            T.StructField("tf", T.IntegerType()),
-            T.StructField("norm_byte", T.IntegerType()),
-        ]
-        if with_positions:
-            fields.append(T.StructField("positions", T.ArrayType(T.LongType())))
-        schema = T.StructType(fields)
-
         bc = codec.get_codec(self.plan.get("codec", "varint"))
-        out_names = [f.name for f in fields]
 
         def decode(batches):
-            # Arrow-native decode: per-BLOCK Python (thousands of rows),
-            # per-POSTING numpy only.  The positions column is assembled
-            # as ONE ListArray from flat values + offsets — no per-doc
-            # Python list slicing and no pandas object-column round-trip
-            # (that slicing was ~55% of a position query's wall time on
-            # a 4M-turn corpus).
-            import pyarrow as pa
-
             for rb in batches:
-                nb = rb.num_rows
-                if nb == 0:
-                    continue
-                names = rb.schema.names
-                col = lambda nm: rb.column(names.index(nm))
-                terms_b = col("term").to_pylist()
-                bases = col("base_doc").to_pylist()
-                nds = col("n_docs").to_pylist()
-                docs_bins = col("docs_bin").to_pylist()
-                tfs_bins = col("tfs_bin").to_pylist()
-                norms_bins = col("norms_bin").to_pylist()
-                pos_bins = col("pos_bin").to_pylist() if with_positions else None
-                doc_p, tf_p, norm_p, term_p = [], [], [], []
-                pv_p, pl_p = [], []
-                pv_total = 0
+                yield from codec.decode_record_batch(rb, bc, with_positions)
 
-                def flush():
-                    arrays = [
-                        pa.array(np.concatenate(term_p), type=pa.string()),
-                        pa.array(np.concatenate(doc_p), type=pa.int64()),
-                        pa.array(np.concatenate(tf_p), type=pa.int32()),
-                        pa.array(np.concatenate(norm_p), type=pa.int32()),
-                    ]
-                    if with_positions:
-                        lens = np.concatenate(pl_p)
-                        offsets = np.concatenate(([0], np.cumsum(lens))).astype(
-                            np.int32
-                        )
-                        arrays.append(
-                            pa.ListArray.from_arrays(
-                                pa.array(offsets, type=pa.int32()),
-                                pa.array(np.concatenate(pv_p), type=pa.int64()),
-                            )
-                        )
-                    return pa.RecordBatch.from_arrays(arrays, names=out_names)
-
-                for j in range(nb):
-                    n = int(nds[j])
-                    gaps = bc.decode(docs_bins[j], n).astype(np.int64)
-                    docs = np.cumsum(gaps) + np.int64(bases[j])
-                    tfs = bc.decode(tfs_bins[j], n).astype(np.int64)
-                    norms = np.frombuffer(norms_bins[j], dtype=np.uint8)
-                    doc_p.append(docs)
-                    tf_p.append(tfs.astype(np.int32))
-                    norm_p.append(norms.astype(np.int32))
-                    term_p.append(np.repeat(terms_b[j], n))
-                    if with_positions:
-                        npos = int(tfs.sum())
-                        deltas = bc.decode(pos_bins[j], npos)
-                        pv_p.append(
-                            codec.positions_from_deltas(deltas, tfs).astype(
-                                np.int64
-                            )
-                        )
-                        pl_p.append(tfs)
-                        pv_total += npos
-                        # ListArray offsets are int32: flush well before
-                        # 2^31 total positions (also bounds memory)
-                        if pv_total >= (1 << 28):
-                            yield flush()
-                            doc_p, tf_p, norm_p, term_p = [], [], [], []
-                            pv_p, pl_p = [], []
-                            pv_total = 0
-                if doc_p:
-                    yield flush()
-
-        return blocks.mapInArrow(decode, schema=schema)
+        return blocks.mapInArrow(decode, schema=_POSTINGS_SCHEMA[with_positions])
 
     def _empty_postings(self, with_positions: bool) -> DataFrame:
-        fields = "term string, _docid long, tf int, norm_byte int"
-        if with_positions:
-            fields += ", positions array<long>"
-        return self.spark.createDataFrame([], fields)
+        return self.spark.createDataFrame([], _POSTINGS_SCHEMA[with_positions])

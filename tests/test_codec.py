@@ -95,15 +95,110 @@ def test_for_zero_width():
 
 @_pytest.mark.parametrize("name", ["varint", "for"])
 def test_codec_encode_blocks_roundtrip(name):
-    rng = np.random.RandomState(9)
-    vals = rng.randint(0, 1000, size=1000).astype(np.uint64)
-    starts, ends = _c.block_bounds(1000, 128)
+    import pyarrow as pa
+
     bc = _c.get_codec(name)
-    blocks = bc.encode_blocks(vals, starts, ends)
-    out = np.concatenate(
-        [bc.decode(b, e - s) for b, s, e in zip(blocks, starts, ends)]
-    ).astype(np.uint64)
-    assert np.array_equal(out, vals)
+    for hi, block in [
+        (1000, 128),  # 1-2 byte varints, full 128-value blocks
+        (1, 1),  # 1-doc blocks of zeros (FOR width 0)
+        (1 << 50, 128),  # multi-byte varints (up to 8 bytes), wide FOR
+        (1 << 21, 1),  # 1-value blocks of 1-3 byte varints
+    ]:
+        rng = np.random.RandomState(9)
+        vals = rng.randint(0, hi, size=1000, dtype=np.int64).astype(np.uint64)
+        starts, ends = _c.block_bounds(1000, block)
+        blocks = bc.encode_blocks(vals, starts, ends)
+        out = np.concatenate(
+            [bc.decode(b, e - s) for b, s, e in zip(blocks, starts, ends)]
+        ).astype(np.uint64)
+        assert np.array_equal(out, vals), (hi, block)
+        # batch decode over all blocks == per-block decode
+        counts = ends - starts
+        batch = bc.decode_batch(*_c.bytes_binary(blocks), counts)
+        assert np.array_equal(batch, out), (hi, block)
+        # ... and over an Arrow binary array sliced at a non-zero offset
+        k = 3
+        arr = pa.array([bytes(b) for b in blocks], type=pa.binary()).slice(k)
+        assert arr.offset == k
+        sliced = bc.decode_batch(*_c.arrow_binary(arr), counts[k:])
+        assert np.array_equal(sliced, out[starts[k]:]), (hi, block)
+
+
+def _pos_deltas(pos, tfs):
+    """Per-doc restarted position deltas (the builder's pos_bin values)."""
+    deltas = np.diff(pos, prepend=np.int64(0))
+    first = np.cumsum(tfs) - tfs
+    deltas[first] = pos[first]
+    return deltas
+
+
+def _block_batch(bc, rng, n_docs):
+    """Encode one posting block per entry of ``n_docs`` -> (Arrow batch of
+    block rows, expected per-posting columns)."""
+    import pyarrow as pa
+
+    enc = lambda v: bc.encode_blocks(
+        np.asarray(v).astype(np.uint64), np.array([0]), np.array([len(v)])
+    )[0]
+    rows = {k: [] for k in ("term", "base_doc", "n_docs", "docs_bin", "tfs_bin",
+                            "norms_bin", "pos_bin")}
+    want = {k: [] for k in ("term", "_docid", "tf", "norm_byte", "positions")}
+    for i, n in enumerate(n_docs):
+        base = int(rng.randint(0, 1 << 40, dtype=np.int64))
+        gaps = rng.randint(1, 1 << 20, size=n)  # multi-byte varint gaps
+        gaps[0] = 0
+        tfs = rng.randint(1, 40, size=n)
+        norms = rng.randint(0, 256, size=n).astype(np.uint8)
+        pos = np.concatenate([np.sort(rng.choice(1 << 15, t, replace=False)) for t in tfs])
+        for key, v in (("term", f"t{i // 3}"), ("base_doc", base), ("n_docs", int(n)),
+                       ("docs_bin", enc(gaps)), ("tfs_bin", enc(tfs)),
+                       ("norms_bin", norms.tobytes()), ("pos_bin", enc(_pos_deltas(pos, tfs)))):
+            rows[key].append(v)
+        want["term"] += [f"t{i // 3}"] * int(n)
+        want["_docid"] += (base + np.cumsum(gaps)).tolist()
+        want["tf"] += tfs.tolist()
+        want["norm_byte"] += norms.tolist()
+        ends = np.cumsum(tfs)
+        want["positions"] += [pos[e - t : e].tolist() for t, e in zip(tfs, ends)]
+    types = [pa.string(), pa.int64(), pa.int32()] + [pa.binary()] * 4
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array(v, type=t) for v, t in zip(rows.values(), types)], names=list(rows)
+    )
+    return rb, want
+
+
+@_pytest.mark.parametrize("name", ["varint", "for"])
+@_pytest.mark.parametrize("max_positions", [_c.MAX_BATCH_POSITIONS, 500, 1])
+def test_decode_record_batch_matches_blocks(name, max_positions):
+    """The per-batch kernel over an Arrow batch sliced at a non-zero
+    offset, with 1-doc and full blocks, equals the per-block decode; a
+    batch whose positions pass ``max_positions`` is cut at block
+    boundaries into several outputs, each with list offsets from 0."""
+    import pyarrow as pa
+
+    bc = _c.get_codec(name)
+    rng = np.random.RandomState(5)
+    n_docs = [1, 128, 1, 7, 128, 1, 1, 60, 128, 3]
+    rb, want = _block_batch(bc, rng, n_docs)
+    k = 2
+    sliced = rb.slice(k)
+    skip = sum(n_docs[:k])
+    outs = list(_c.decode_record_batch(sliced, bc, True, max_positions))
+    if max_positions == _c.MAX_BATCH_POSITIONS:
+        assert len(outs) == 1
+    else:
+        assert len(outs) > 1
+    for ob in outs:
+        off = ob.column("positions").offsets.to_numpy()
+        assert off[0] == 0
+        # at most max_positions plus the last block's positions
+        assert off[-1] <= max_positions + 128 * 40
+    got = pa.Table.from_batches(outs).to_pydict()
+    assert got == {k2: v[skip:] for k2, v in want.items()}
+    # without positions: one batch, no positions column
+    (plain,) = _c.decode_record_batch(sliced, bc, False)
+    assert plain.schema.names == ["term", "_docid", "tf", "norm_byte"]
+    assert plain.to_pydict() == {k2: v[skip:] for k2, v in want.items() if k2 != "positions"}
 
 
 def test_for_denser_on_small_gaps():

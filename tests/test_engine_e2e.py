@@ -203,6 +203,30 @@ def test_rank_stable_across_segment_counts(spark, oracle, tmp_path):
     assert_rank_identical(rows, oracle.topk(oracle.match("error handling"), 10))
 
 
+def test_persist_index_without_postings(spark, tmp_path):
+    """An index whose every text is empty has no postings partition;
+    ``persist()`` pins it through the same missing-path guard as an
+    unpersisted read, and searches on it return no hits either way."""
+    from opensearch_spark.index.builder import IndexConfig, build_index
+    from opensearch_spark.index.reader import InvertedIndex
+    from opensearch_spark.query.executor import SearchEngine
+    from opensearch_spark.transcripts import generate, generate_pandas
+
+    schema = generate(spark, 0).schema
+    pdf = generate_pandas([0]).head(2).assign(text="")
+    d = str(tmp_path / "empty_text")
+    build_index(spark, spark.createDataFrame(pdf[schema.fieldNames()], schema=schema), d,
+                IndexConfig(n_segments=2))
+    q = {"match": {"text": "error"}}
+    assert SearchEngine(InvertedIndex(spark, d)).search(q, size=10).collect() == []
+    idx = InvertedIndex(spark, d).persist()
+    try:
+        assert SearchEngine(idx).search(q, size=10).collect() == []
+        assert idx.postings_for_terms(["error"], with_positions=True).collect() == []
+    finally:
+        idx.unpersist()
+
+
 def test_pack_shards_tape_replay(spark):
     """pack_shards = concat-then-chunk on the deterministic
     (id mod stripes, id) tape: the distributed two-phase prefix sum

@@ -438,6 +438,45 @@ def test_exact_phrase_scorer_has_no_python_eval(engine):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
+def _plan_nodes(df) -> list:
+    """Operator names of ``df``'s physical plan.  A cached relation is a
+    leaf (``InMemoryTableScan``): the plan that filled the cache is not
+    walked, because a query over the cache does not run it."""
+    stack, names = [df._jdf.queryExecution().executedPlan()], []
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+            continue
+        names.append(node.nodeName())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
+def test_persisted_postings_run_no_python(spark, index_dir, engine):
+    """A persisted index serves match and phrase postings from the
+    decoded pin: their plans hold no ``MapInArrow`` (no Python worker
+    round trip per query).  The same queries on the unpersisted index
+    decode blocks in a ``MapInArrow``, so the gate is not vacuous."""
+    from opensearch_spark.index.reader import InvertedIndex
+    from opensearch_spark.query.executor import SearchEngine
+
+    queries = [
+        {"match": {"text": "error handling"}},
+        {"match_phrase": {"text": "error handling"}},
+    ]
+    for q in queries:
+        assert "MapInArrow" in _plan_nodes(engine.search(q, size=10)), q
+    idx = InvertedIndex(spark, index_dir).persist()
+    try:
+        for q in queries:
+            nodes = _plan_nodes(SearchEngine(idx).search(q, size=10))
+            assert "InMemoryTableScan" in nodes and "MapInArrow" not in nodes, (q, nodes)
+    finally:
+        idx.unpersist()
+
+
 def test_routed_search_prunes_segment(engine):
     """Routed search (_search?routing=): the _seg predicate must reach
     the postings Parquet scan, and the routed result set must be

@@ -98,19 +98,27 @@ def test_score_monotone_in_tf(oracle):
         prev = s
 
 
-def test_for_codec_index_equivalent(spark, tmp_path, oracle):
+@pytest.fixture(scope="module")
+def codec_dirs(spark, tmp_path_factory):
+    """The same 120-conversation corpus indexed once per block codec."""
+    from opensearch_spark.transcripts import generate
+
+    docs = generate(spark, 120, partitions=4)
+    root = tmp_path_factory.mktemp("codecs")
+    dirs = {}
+    for name in ("varint", "for"):
+        dirs[name] = str(root / name)
+        build_index(spark, docs, dirs[name], IndexConfig(n_segments=4, codec=name))
+    return dirs
+
+
+def test_for_codec_index_equivalent(spark, tmp_path, codec_dirs):
     """An index built with the FOR block codec returns results identical
     to the varint index (format choice is invisible to queries), and
     survives merge/compaction."""
     from opensearch_spark.index.merge import merge_index
-    from opensearch_spark.transcripts import generate
 
-    docs = generate(spark, 120, partitions=4)
-    dirs = {}
-    for name in ("varint", "for"):
-        d = str(tmp_path / name)
-        build_index(spark, docs, d, IndexConfig(n_segments=4, codec=name))
-        dirs[name] = SearchEngine(InvertedIndex(spark, d))
+    dirs = {name: SearchEngine(InvertedIndex(spark, d)) for name, d in codec_dirs.items()}
     for q in [
         {"match": {"text": "error handling"}},
         {"match_phrase": {"text": "error handling"}},
@@ -120,10 +128,65 @@ def test_for_codec_index_equivalent(spark, tmp_path, oracle):
         b = dirs["for"].search(q, size=10).collect()
         assert a == b, q
     md = str(tmp_path / "for_merged")
-    merge_index(spark, str(tmp_path / "for"), md, hot_blocks=2)
+    merge_index(spark, codec_dirs["for"], md, hot_blocks=2)
     meng = SearchEngine(InvertedIndex(spark, md))
     q = {"match_phrase": {"text": "error handling"}}
     assert dirs["for"].search(q, size=10).collect() == meng.search(q, size=10).collect()
+
+
+PINNED_IDENTITY_QUERIES = [
+    {"match": {"text": "handling"}},
+    {"match": {"text": "error handling timeout"}},
+    {"match": {"text": {"query": "error handling", "operator": "and"}}},
+    {"match": {"text": {"query": "slow query planner", "minimum_should_match": 2}}},
+    {"term": {"text": "timeout"}},
+    {"term": {"text": "Timeout"}},  # absent: indexed terms are lower-cased
+    {"match_phrase": {"text": "error handling"}},
+    {"match_phrase": {"text": {"query": "slow planner", "slop": 2}}},
+    {"intervals": {"text": {"match": {"query": "slow planner", "max_gaps": 2}}}},
+    {"span_near": {"clauses": [{"span_term": {"text": "error"}},
+                               {"span_term": {"text": "handling"}}],
+                   "slop": 2, "in_order": True}},
+]
+
+
+@pytest.mark.parametrize("codec_name", ["varint", "for"])
+def test_persisted_postings_identity(spark, codec_dirs, codec_name):
+    """A persisted index serves postings from its decoded pin; an
+    unpersisted one decodes blocks per query.  Every scoring family
+    (term, boolean match, phrase, sloppy phrase, intervals, spans) must
+    return identical rows and scores from both sources."""
+    plain = SearchEngine(InvertedIndex(spark, codec_dirs[codec_name]))
+    idx = InvertedIndex(spark, codec_dirs[codec_name]).persist()
+    try:
+        pinned = SearchEngine(idx)
+        for q in PINNED_IDENTITY_QUERIES:
+            want = plain.search(q, size=50).collect()
+            assert pinned.search(q, size=50).collect() == want, q
+            assert want or q == {"term": {"text": "Timeout"}}, q  # not vacuous
+    finally:
+        idx.unpersist()
+
+
+def test_unpersist_releases_every_pin(spark, codec_dirs):
+    """``unpersist()`` drops every frame ``persist()`` and the WAND
+    ``block_meta()`` pinned: no persistent RDD is left behind, and the
+    cache manager holds none of the frames."""
+    from pyspark import StorageLevel
+
+    jsc = spark.sparkContext._jsc
+    rdds = lambda: set(jsc.getPersistentRDDs().keySet().toArray())
+    before = rdds()
+    idx = InvertedIndex(spark, codec_dirs["varint"]).persist()
+    idx.block_meta().count()
+    pins = ("_postings_df", "_docmap_df", "_dictionary_df", "_decoded_df", "_block_meta_df")
+    frames = [idx.__dict__[k] for k in pins]
+    none = StorageLevel(False, False, False, False, 1)
+    assert len(rdds() - before) == len(pins)
+    assert all(df.storageLevel != none for df in frames)
+    idx.unpersist()
+    assert rdds() == before
+    assert all(df.storageLevel == none for df in frames)
 
 
 def test_simple_query_string_is_lenient():
