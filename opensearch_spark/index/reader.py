@@ -10,7 +10,10 @@ over each Arrow batch of blocks, no per-block Python.
 
 ``persist()`` runs that decode once for the whole index and pins the
 result, so a persisted index serves postings from a JVM-only filter over
-cached columnar batches; unpersisted indexes decode on read.
+cached columnar batches; unpersisted indexes decode on read.  The pins
+are doc-partitioned (hash of ``_docid``), so a persisted index scores
+each partition's docs on their own: the reference's per-shard query
+phase, with no exchange before the coordinator's top-k merge.
 """
 
 from __future__ import annotations
@@ -92,19 +95,46 @@ class InvertedIndex:
         positions when the index stores them.  From then on
         :meth:`postings_for_terms`, positional queries included, reads
         the decoded pin with a JVM-only ``term IN (...)`` scan instead
-        of decoding blocks in a Python worker per query."""
+        of decoding blocks in a Python worker per query.
+
+        The decoded postings and the docmap are hash-partitioned on
+        ``_docid`` into the same number of partitions, the session's
+        ``spark.sql.shuffle.partitions`` at persist time; the decoded
+        pin is also sorted by ``term`` within each partition.  A query
+        then groups by doc and joins the docmap with no exchange
+        (:meth:`docmap` returns the pin with a ``shuffle_hash`` hint, so
+        a join on it stays inside the partitions instead of running a
+        broadcast job per query), the term sort keeps cached-batch
+        pruning for ``term IN (...)``, and each doc's per-term rows
+        arrive in term order, the order the unpersisted scan sums them
+        in.  Later changes to the session's partition count do not
+        re-partition the pins.
+
+        The dictionary pin is also collected to the driver once (one
+        Arrow collect) into the :meth:`term_stats` memo, which is marked
+        complete: a term it lacks is absent from the index, so term
+        statistics never run a Spark job on a persisted index."""
         from pyspark import StorageLevel
 
         level = StorageLevel.MEMORY_AND_DISK
+        n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         pins = self.__dict__
         pins["_postings_df"] = self.postings().persist(level)
-        pins["_docmap_df"] = self.docmap().persist(level)
+        pins["_docmap_df"] = self.docmap().repartition(n, "_docid").persist(level)
+        pins["_docmap_view"] = pins["_docmap_df"].hint("shuffle_hash")
         pins["_dictionary_df"] = self.dictionary().persist(level)
-        pins["_decoded_df"] = self.decode_blocks(
-            pins["_postings_df"], with_positions=self.has_positions
-        ).persist(level)
+        pins["_decoded_df"] = (
+            self.decode_blocks(pins["_postings_df"], with_positions=self.has_positions)
+            .repartition(n, "_docid")
+            .sortWithinPartitions("term")
+            .persist(level)
+        )
         for key in _PINS:
             pins[key].count()  # materialize
+        stats = pins["_dictionary_df"].select("term", "df", "total_tf", "n_blocks").toPandas()
+        values = zip(*(stats[c].tolist() for c in ("df", "total_tf", "n_blocks")))
+        pins.setdefault("_term_stats_cache", {}).update(zip(stats["term"].tolist(), values))
+        pins["_term_stats_complete"] = True
         return self
 
     def unpersist(self) -> "InvertedIndex":
@@ -113,7 +143,11 @@ class InvertedIndex:
         multiple index sizes in one JVM must drop the previous size's
         cache or the unroll of the next one OOMs the shared local heap.
         Frames derived from the block pin go first: uncaching a frame
-        re-plans the cached frames built on it."""
+        re-plans the cached frames built on it.  The :meth:`term_stats`
+        memo stays (the index is immutable), but is no longer marked
+        complete."""
+        self.__dict__.pop("_term_stats_complete", None)
+        self.__dict__.pop("_docmap_view", None)
         for key in ("_block_meta_df",) + _PINS[::-1]:
             df = self.__dict__.pop(key, None)
             if df is not None:
@@ -218,7 +252,7 @@ class InvertedIndex:
         return meta
 
     def docmap(self) -> DataFrame:
-        cached = self.__dict__.get("_docmap_df")
+        cached = self.__dict__.get("_docmap_view")
         if cached is not None:
             return cached
         # a merged/compacted index references the source docmap instead
@@ -271,16 +305,20 @@ class InvertedIndex:
 
     def term_stats(self, terms: Sequence[str]) -> pd.DataFrame:
         """df/total_tf for the given terms (tiny: collected to the driver,
-        then broadcast into the scoring plan — the DFS phase analog).
+        then inlined into the scoring plan — the DFS phase analog).
         Per-term results are memoized driver-side (the reference caches
         term statistics in the query cache; an immutable index makes
-        this always-valid)."""
+        this always-valid).  :meth:`persist` fills the memo with the
+        whole dictionary and marks it complete; a term missing from a
+        complete memo is absent, with no lookup job."""
         if not terms:
             return pd.DataFrame({"term": [], "df": [], "total_tf": [], "n_blocks": []})
         cache = self.__dict__.setdefault("_term_stats_cache", {})
         want = sorted(set(terms))
         missing = [t for t in want if t not in cache]
-        if missing:
+        if missing and self.__dict__.get("_term_stats_complete"):
+            cache.update(dict.fromkeys(missing))  # negative cache: absent
+        elif missing:
             rows = (
                 self.dictionary()
                 .where(_term_in(missing))

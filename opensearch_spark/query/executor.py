@@ -3,13 +3,21 @@
 Query lifecycle (the Spark mapping of SURVEY.md §3.1):
 
   parse (dsl.from_dict) -> analyze query text (same analyzer as the index)
-  -> plan: decode postings for the query's terms (Parquet term-pushdown
-  scan), broadcast the tiny per-term stats (the DFS/global-stats phase),
-  score per (term, doc) with JVM-side BM25 expressions, group by docID
-  (the one scoring shuffle — the per-shard/coordinator partial top-k
-  split), apply boolean semantics, then distributed top-k
-  (TakeOrderedAndProject) and fetch (broadcast join of the k winners back
-  to the docmap — the fetch phase of ``search/fetch/FetchPhase.java:109-143``).
+  -> plan: read postings for the query's terms (a ``term IN (...)`` filter
+  over the persisted index's decoded pin, else a Parquet term-pushdown
+  scan and decode), per-term stats from the reader's driver-side memo
+  ride the plan as map literals (the DFS/global-stats phase), score per
+  (term, doc) with JVM-side BM25 expressions, group by docID, apply
+  boolean semantics, join the docmap's id columns for the tie-break,
+  then distributed top-k (TakeOrderedAndProject) and fetch (broadcast
+  join of the k winners back to the docmap — the fetch phase of
+  ``search/fetch/FetchPhase.java:109-143``).
+
+  On a persisted index the postings and docmap pins are co-partitioned
+  on docID, so the group-by and the id join run inside each partition,
+  the reference's per-shard query phase, and a warm search is one
+  Spark job with no exchange; the coordinator's merge is the top-k.  An
+  unpersisted index shuffles postings by docID to group them.
 
 Determinism: final order is (score DESC, id_cols ASC) — the explicit
 tie-break the reference gets from shard-internal docIDs
@@ -1162,8 +1170,8 @@ def resolve_msm(msm, n_clauses: int) -> int:
 MAX_TERM_EXPANSIONS = 10_000  # safety cap for multi-term dictionary expansion
 
 # term-count ceiling for inlining per-term stats (idf/df/ttf/weight) as
-# CASE literals instead of a broadcast-joined driver DataFrame; above it
-# the CASE would strain codegen and the broadcast join wins
+# map literals instead of a broadcast-joined driver DataFrame; above it
+# the per-row key scan of the map costs more than the broadcast join
 INLINE_STATS_MAX_TERMS = 64
 
 # AUTO-prune threshold: total posting blocks across the query's terms
@@ -2558,7 +2566,7 @@ class SearchEngine:
         """(term, _docid, s float, weight int) BM25 clause scores for the
         given term->weight map, or None when no term exists in the
         corpus.  Shared by the match scorer and cross_fields multi_match
-        (per-field postings decode; stats ride the plan as CASE literals
+        (per-field postings decode; stats ride the plan as map literals
         for small term sets, as a broadcast join above
         INLINE_STATS_MAX_TERMS — no shuffle either way).
 
@@ -2594,17 +2602,18 @@ class SearchEngine:
         ]
         post = self.index.postings_for_terms([r[0] for r in rows])
         if len(rows) <= INLINE_STATS_MAX_TERMS:
-            # the per-term constants are plan-time literals: inline them
-            # as CASE expressions on `term` instead of broadcast-joining
-            # a driver-local DataFrame — Spark materializes a broadcast
+            # the per-term constants are plan-time literals: look them up
+            # in map literals on `term` instead of broadcast-joining a
+            # driver-local DataFrame — Spark materializes a broadcast
             # exchange with a dedicated job (32 tasks for a 2-row frame),
-            # which at interactive scale costs more than the whole scan;
-            # the CASE stays inside whole-stage codegen (one job per
-            # query, not two+).  Large expansion sets (wildcard/fuzzy)
-            # keep the broadcast join: a 10k-branch CASE would blow up
-            # codegen, and there the scan dwarfs the extra job anyway.
+            # which at interactive scale costs more than the whole scan.
+            # A map literal is a referenced object in generated code, so
+            # a query on other terms reuses the compiled class.  Large
+            # expansion sets (wildcard/fuzzy) keep the broadcast join:
+            # each row's lookup scans the map's keys, and there the scan
+            # dwarfs the extra job anyway.
             idf, df, ttf, weight = (
-                sqltext.case_on("term", {r[0]: fmt(r[i]) for r in rows})
+                sqltext.map_lookup("term", {r[0]: fmt(r[i]) for r in rows})
                 for i, fmt in (
                     (1, sqltext.double), (2, sqltext.double),
                     (3, sqltext.double), (4, str),
@@ -4116,28 +4125,18 @@ class SearchEngine:
             msm = resolve_msm(msm, len(b.should))
 
         if has_scoring:
-            parts = []
-            for i, sub in enumerate(b.must):
-                parts.append(
-                    self._score(sub)
-                    .withColumn("cid", F.lit(i))
-                    .withColumn("kind", F.lit("m"))
-                )
-            for j, sub in enumerate(b.should):
-                parts.append(
-                    self._score(sub)
-                    .withColumn("cid", F.lit(j))
-                    .withColumn("kind", F.lit("s"))
-                )
+            # each clause's frame is a docset (unique _docid), so a doc's
+            # rows of one kind count the clauses of that kind it matched
+            parts = [
+                self._score(sub).selectExpr("_docid", "score", f"'{kind}' AS kind")
+                for kind, subs in (("m", b.must), ("s", b.should))
+                for sub in subs
+            ]
             unioned = reduce(DataFrame.unionByName, parts)
             grouped = unioned.groupBy("_docid").agg(
-                F.sum("score").alias("score"),
-                F.count_distinct(
-                    F.when(F.col("kind") == "m", F.col("cid"))
-                ).alias("n_must"),
-                F.count_distinct(
-                    F.when(F.col("kind") == "s", F.col("cid"))
-                ).alias("n_should"),
+                F.expr("sum(score) AS score"),
+                F.expr("count(CASE WHEN kind = 'm' THEN 1 END) AS n_must"),
+                F.expr("count(CASE WHEN kind = 's' THEN 1 END) AS n_should"),
             )
             cond = F.col("n_must") == F.lit(len(b.must))
             if b.should and msm > 0:

@@ -53,7 +53,7 @@ def block_bounds_df(index, terms: List[str], idf_by_term: Dict[str, float], avgd
     reads the executor-memory-pinned ``block_meta()`` frame (the Lucene
     skip-data-in-heap analog), so repeated metadata passes never re-walk
     the postings parquet."""
-    idf = sqltext.case_on("term", {t: sqltext.double(idf_by_term[t]) for t in terms})
+    idf = sqltext.map_lookup("term", {t: sqltext.double(idf_by_term[t]) for t in terms})
     meta = index.block_meta()
 
     def bound(norm: str) -> str:
@@ -95,13 +95,13 @@ def metadata_threshold_df(engine, present, weights, idf_by_term, avgdl, k: int):
         return None
     ach = bm25.term_score_sql(
         "max_tf",
-        sqltext.case_on("term", {t: sqltext.double(idf_by_term[t]) for t in present}),
+        sqltext.map_lookup("term", {t: sqltext.double(idf_by_term[t]) for t in present}),
         bm25.norm_decode_sql("max_tf_norm"),
         avgdl,
         engine.k1,
         engine.b,
     )
-    w_sql = sqltext.case_on("term", {t: sqltext.double(weights[t]) for t in present})
+    w_sql = sqltext.map_lookup("term", {t: sqltext.double(weights[t]) for t in present})
     w = Window.partitionBy("term").orderBy(F.desc("a"))
     return (
         post.filter(F.col("term").isin(list(present)))
@@ -624,13 +624,13 @@ def _score_block_frame(
 def _score_decoded(engine, terms, weights, idf_by_term, avgdl, blocks: DataFrame) -> DataFrame:
     s = bm25.term_score_sql(
         "tf",
-        sqltext.case_on("term", {t: sqltext.double(idf_by_term[t]) for t in terms}),
+        sqltext.map_lookup("term", {t: sqltext.double(idf_by_term[t]) for t in terms}),
         bm25.norm_decode_sql("norm_byte"),
         avgdl,
         engine.k1,
         engine.b,
     )
-    w_sql = sqltext.case_on("term", {t: str(int(weights[t])) for t in terms})
+    w_sql = sqltext.map_lookup("term", {t: str(int(weights[t])) for t in terms})
     return engine.index.decode_blocks(blocks).groupBy("_docid").agg(
         F.expr(f"sum(CAST({s} AS DOUBLE) * ({w_sql})) AS score")
     )

@@ -48,11 +48,14 @@ def ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def case_on(col: str, values: Mapping[str, str]) -> str:
-    """``CASE <col> WHEN <key> THEN <value> ... END`` over string keys;
-    ``values`` maps each key to the SQL text of its result."""
-    whens = " ".join(f"WHEN {string(k)} THEN {v}" for k, v in values.items())
-    return f"CASE {col} {whens} END"
+def map_lookup(col: str, values: Mapping[str, str]) -> str:
+    """``map(<key>, <value>, ...)[<col>]`` over string keys, NULL for a
+    key not in the map; ``values`` maps each key to the SQL text of its
+    value.  The constant map folds to one literal that generated code
+    holds as a referenced object, so the code text, and with it the
+    compiled class, does not depend on the keys or values."""
+    entries = ", ".join(f"{string(k)}, {v}" for k, v in values.items())
+    return f"map({entries})[{col}]"
 
 
 _DECIMAL = re.compile(r"[#0][#,0]*(\.[0#]*)?|\.[0#]+")

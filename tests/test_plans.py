@@ -59,10 +59,10 @@ def test_docmap_filter_pushdown(engine):
 
 def test_term_stats_inline_small_broadcast_large(engine):
     """Per-term stats (idf/df/ttf) are plan-time literals: small queries
-    inline them as CASE expressions — NO broadcast exchange, so scoring
-    is one job, not two (r3 job-count cut).  Large expansion sets
-    (wildcard/fuzzy) keep the broadcast join: a 10k-branch CASE would
-    blow up codegen."""
+    look them up in map literals on ``term`` — NO broadcast exchange, so
+    scoring is one job, not two (r3 job-count cut).  Large expansion
+    sets (wildcard/fuzzy) keep the broadcast join: each row's lookup
+    scans the map's keys."""
     from pyspark.sql import functions as F
 
     from opensearch_spark.query import dsl as Q
@@ -71,7 +71,7 @@ def test_term_stats_inline_small_broadcast_large(engine):
     scored = engine._score(Q.Match("text", "error handling"))
     plan = _formatted(scored)
     assert "BroadcastExchange" not in plan, plan
-    assert "CASE WHEN" in plan
+    assert "map(keys: [error,handling], values: [" in plan, plan
 
     terms = [
         r["term"]
@@ -84,6 +84,40 @@ def test_term_stats_inline_small_broadcast_large(engine):
     big = engine._score_terms_or({t: 1 for t in terms}, required=1)
     plan = _formatted(big)
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+
+
+def _compiles(spark, fn) -> int:
+    """Janino compilations (whole-stage and expression codegen) ``fn``
+    triggers in the driver JVM; a class compiled before is reused from
+    the code cache and does not count."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    count = lambda: metrics.METRIC_COMPILATION_TIME().getCount()  # noqa: E731
+    before = count()
+    fn()
+    return count() - before
+
+
+@pytest.mark.parametrize("persisted", [False, True], ids=["unpersisted", "persisted"])
+def test_match_on_new_terms_compiles_nothing(spark, index_dir, engine, persisted):
+    """Per-term constants are map literals, which generated code holds as
+    referenced objects: once one 2-term match has compiled its shape, a
+    match on two other terms reuses every class (a CASE inlined each
+    query's idf doubles and recompiled per query)."""
+    from opensearch_spark.index.reader import InvertedIndex
+    from opensearch_spark.query.executor import SearchEngine
+
+    idx = InvertedIndex(spark, index_dir).persist() if persisted else engine.index
+    try:
+        eng = SearchEngine(idx)
+        eng.search({"match": {"text": "error handling"}}, size=10).collect()
+        q = {"match": {"text": "timeout planner"}}
+        assert len(idx.term_stats(["timeout", "planner"])) == 2
+        rows = []
+        assert _compiles(spark, lambda: rows.extend(eng.search(q, size=10).collect())) == 0
+        assert rows
+    finally:
+        if persisted:
+            idx.unpersist()
 
 
 def _py4j_round_trips(spark, fn) -> int:
@@ -475,6 +509,52 @@ def test_persisted_postings_run_no_python(spark, index_dir, engine):
             assert "InMemoryTableScan" in nodes and "MapInArrow" not in nodes, (q, nodes)
     finally:
         idx.unpersist()
+
+
+PINNED_ONE_JOB_QUERIES = [
+    {"match": {"text": "handling"}},
+    {"match": {"text": "error handling"}},
+    {"match": {"text": {"query": "error handling", "operator": "and"}}},
+    {"match": {"text": {"query": "slow query planner", "minimum_should_match": 2}}},
+    {"term": {"text": "timeout"}},
+    {"match_phrase": {"text": "error handling"}},
+]
+
+
+def test_persisted_search_is_one_job(spark, index_dir, engine):
+    """A warm search on a persisted index runs as ONE Spark job: the pins
+    are doc-partitioned, so scoring groups by doc and joins the docmap
+    with no exchange and no broadcast, and term statistics come from the
+    driver-side memo ``persist()`` filled.  A first-sight absent term
+    runs no job at all.  The same match on the unpersisted index runs
+    more than one job, so the gate is not vacuous."""
+    from opensearch_spark.index.reader import InvertedIndex
+    from opensearch_spark.query.executor import SearchEngine
+
+    q = {"match": {"text": "error handling"}}
+    engine.search(q, size=10).collect()
+    assert _jobs_in_group(spark, "unpersisted-match",
+                          engine.search(q, size=10).collect) >= 2
+    idx = InvertedIndex(spark, index_dir).persist()
+    try:
+        eng = SearchEngine(idx)
+        for i, pq in enumerate(PINNED_ONE_JOB_QUERIES):
+            eng.search(pq, size=10).collect()
+            rows = []
+            run = lambda: rows.extend(eng.search(pq, size=10).collect())  # noqa: E731
+            assert _jobs_in_group(spark, f"pinned-{i}", run) == 1, pq
+            assert rows, pq
+        absent = lambda: eng.search({"term": {"text": "Planner"}}, size=10).collect()  # noqa: E731
+        assert _jobs_in_group(spark, "pinned-absent", absent) == 0
+        nodes = _plan_nodes(eng.search(q, size=10))
+        assert "InMemoryTableScan" in nodes, nodes
+        assert not {"Exchange", "BroadcastExchange"} & set(nodes), nodes
+    finally:
+        idx.unpersist()
+    # unpersisted, the memo no longer vouches for absence: a term it has
+    # not seen is looked up again
+    lookup = lambda: idx.term_stats(["Handling"])  # noqa: E731
+    assert _jobs_in_group(spark, "unpinned-lookup", lookup) >= 1
 
 
 def test_routed_search_prunes_segment(engine):

@@ -168,6 +168,33 @@ def test_persisted_postings_identity(spark, codec_dirs, codec_name):
         idx.unpersist()
 
 
+def test_persisted_answers_ignore_session_config(spark, codec_dirs):
+    """The pins are partitioned once, at persist time (here into 4); a
+    later partition count of 1 or 8, or AQE off, must not change a
+    persisted index's rows or scores, which equal the unpersisted
+    index's."""
+    plain = SearchEngine(InvertedIndex(spark, codec_dirs["varint"]))
+    want = [plain.search(q, size=50).collect() for q in PINNED_IDENTITY_QUERIES]
+    conf = spark.conf
+    saved = {k: conf.get(k) for k in
+             ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")}
+    idx = InvertedIndex(spark, codec_dirs["varint"])
+    try:
+        conf.set("spark.sql.shuffle.partitions", "4")
+        pinned = SearchEngine(idx.persist())
+        for setting in ({"spark.sql.shuffle.partitions": "1"},
+                        {"spark.sql.shuffle.partitions": "8"},
+                        {"spark.sql.adaptive.enabled": "false"}):
+            for k, v in {**saved, **setting}.items():
+                conf.set(k, v)
+            for q, w in zip(PINNED_IDENTITY_QUERIES, want):
+                assert pinned.search(q, size=50).collect() == w, (setting, q)
+    finally:
+        idx.unpersist()
+        for k, v in saved.items():
+            conf.set(k, v)
+
+
 def test_unpersist_releases_every_pin(spark, codec_dirs):
     """``unpersist()`` drops every frame ``persist()`` and the WAND
     ``block_meta()`` pinned: no persistent RDD is left behind, and the
