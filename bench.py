@@ -293,37 +293,6 @@ def wand_phase_inner(runs: int = 3) -> dict:
             1.0 - stats["kept_blocks"] / stats["total_blocks"], 3
         )
         out["wand_gate_bailed"] = stats.get("bailed")
-
-    # sloppy-phrase A/B on the same 4M-turn corpus: the Arrow-native
-    # lockstep scorer vs the scalar per-doc PhraseQueue simulation
-    # (executor.SLOPPY_BATCH_ENABLED), dense-stopword 3-term phrase ->
-    # ~1.5M candidate docs.  Results must be identical; only the
-    # Python-interpreter ceiling differs.
-    from opensearch_spark.query import executor as _ex
-
-    sq = {"match_phrase": {"text": {"query": "the of and", "slop": 4}}}
-    eng.search(sq, size=10).collect()  # warm
-    tb, ts2 = [], []
-    ident2 = True
-    saved = _ex.SLOPPY_BATCH_ENABLED
-    try:
-        for _ in range(max(2, runs - 1)):
-            res = {}
-            for flag in (True, False):
-                _ex.SLOPPY_BATCH_ENABLED = flag
-                t0 = time.monotonic()
-                rows = eng.search(sq, size=10).collect()
-                (tb if flag else ts2).append(time.monotonic() - t0)
-                res[flag] = [
-                    (r["conv_id"], r["turn_idx"], round(r["score"], 6))
-                    for r in rows
-                ]
-            ident2 = ident2 and res[True] == res[False]
-    finally:
-        _ex.SLOPPY_BATCH_ENABLED = saved
-    out["sloppy_arrow_sec"] = round(min(tb), 4)
-    out["sloppy_scalar_sec"] = round(min(ts2), 4)
-    out["sloppy_rank_identical"] = ident2
     return out
 
 

@@ -131,20 +131,28 @@ class OracleIndex:
         uniq = set(toks)
         if any(t not in self.post for t in uniq):
             return {}
-        idf_sum = sum(self.idf(t) for t in uniq)
         cands = set(self.post[toks[0]])
         for t in uniq:
             cands &= set(self.post[t])
-        out: Dict[int, float] = {}
+        ptf: Dict[int, float] = {}
         for d in cands:
             starts = self.pos[toks[0]][d]
-            ptf = 0
-            for s in starts:
-                if all((s + i) in self.pos[t][d] for i, t in enumerate(toks)):
-                    ptf += 1
-            if ptf:
-                denom = ptf + K1 * (1.0 - B + B * int(self.dl_q[d]) / self.avgdl)
-                out[d] = float(np.float32(idf_sum * (K1 + 1.0) * ptf / denom))
+            ptf[d] = sum(
+                all((s + i) in self.pos[t][d] for i, t in enumerate(toks))
+                for s in starts
+            )
+        return self.clause(ptf, uniq)
+
+    def clause(self, tf: Dict[int, float], terms) -> Dict[int, float]:
+        """One BM25 clause over per-doc frequencies ``tf`` with the idf
+        summed over the distinct ``terms`` — how phrase, interval and
+        span queries score; docs with tf 0 drop out."""
+        idf_sum = sum(self.idf(t) for t in set(terms))
+        out: Dict[int, float] = {}
+        for d, f in tf.items():
+            if f:
+                denom = f + K1 * (1.0 - B + B * int(self.dl_q[d]) / self.avgdl)
+                out[d] = float(np.float32(idf_sum * (K1 + 1.0) * f / denom))
         return out
 
     def topk(
@@ -175,3 +183,234 @@ class OracleIndex:
         if must_not_ids:
             out = {d: s for d, s in out.items() if d not in must_not_ids}
         return out
+
+
+# ---- positional enumerators ----
+#
+# Scalar, per-doc definitions of the interval, span and sloppy-phrase
+# semantics.  The engine scores these shapes with the lockstep Arrow
+# kernels in ``query/executor.py``; the tests pin those kernels to the
+# enumerators below.
+
+
+def find_intervals(
+    pos: dict, terms: List[str], max_gaps: int, ordered: bool,
+    gaps: Optional[List[int]] = None,
+) -> List[Tuple[int, int]]:
+    """Enumerate minimal intervals (start_pos, end_pos) containing all
+    ``terms`` (in order when ``ordered``) with internal gap total
+    (width - #terms) <= max_gaps (-1 = unbounded).  Positions per term
+    are sorted int64 arrays.
+
+    ``gaps[i]`` reserves a fixed run of that many positions between
+    terms[i] and terms[i+1] (``span_gap`` clauses,
+    ``SpanNearQueryBuilder.java:256`` -> ``SpanNearQuery.addGap``): the
+    successor must start >= gaps[i]+1 after the predecessor, and the
+    reserved run counts as matched length, not slop — the budget check
+    becomes (width - #terms - sum(gaps)) <= max_gaps.  Like Lucene,
+    gaps require ordered matching."""
+    uniq = sorted(set(terms))
+    k = len(uniq)
+    out: List[Tuple[int, int]] = []
+    if gaps is not None and not any(gaps):
+        gaps = None
+    if gaps is not None and not ordered:
+        raise ValueError("span gaps require in_order=true (SpanNearQuery.addGap)")
+    if ordered:
+        seq = list(terms)
+        step = [1 + (gaps[i] if gaps else 0) for i in range(len(seq) - 1)]
+        total_len = len(seq) + (sum(gaps) if gaps else 0)
+        cur = -1
+        first = pos[seq[0]]
+        while True:
+            i0 = int(np.searchsorted(first, cur + 1))
+            if i0 >= first.size:
+                break
+            chain = [int(first[i0])]
+            ok = True
+            for ti, t in enumerate(seq[1:]):
+                pt = pos[t]
+                j = int(np.searchsorted(pt, chain[-1] + step[ti]))
+                if j >= pt.size:
+                    ok = False
+                    break
+                chain.append(int(pt[j]))
+            if not ok:
+                break
+            # tighten the start side: walk backward taking the largest
+            # position of each earlier term below its successor
+            for idx in range(len(seq) - 2, -1, -1):
+                pt = pos[seq[idx]]
+                j = int(np.searchsorted(pt, chain[idx + 1] - step[idx] + 1)) - 1
+                chain[idx] = int(pt[j])
+            width = chain[-1] - chain[0] + 1
+            if max_gaps < 0 or (width - total_len) <= max_gaps:
+                out.append((chain[0], chain[-1]))
+            cur = chain[0]
+        return out
+    # unordered: classic sliding minimal-window enumeration over the
+    # merged, term-tagged position stream
+    events = sorted(
+        (int(p), t) for t in uniq for p in pos[t]
+    )
+    n = len(events)
+    need = {t: 0 for t in uniq}
+    have = 0
+    l = 0
+    for r in range(n):
+        t = events[r][1]
+        need[t] += 1
+        if need[t] == 1:
+            have += 1
+        while need[events[l][1]] > 1:
+            need[events[l][1]] -= 1
+            l += 1
+        if have == k:
+            width = events[r][0] - events[l][0] + 1
+            if max_gaps < 0 or (width - k) <= max_gaps:
+                out.append((events[l][0], events[r][0]))
+            # drop the left term to look for the next minimal window
+            need[events[l][1]] -= 1
+            have -= 1
+            l += 1
+    return out
+
+
+FILTER_RELATIONS = (
+    "containing", "not_containing", "contained_by", "not_contained_by",
+    "overlapping", "not_overlapping", "before", "after",
+)
+
+
+def filter_intervals(
+    base: Sequence[Tuple[int, int]], filt: Sequence[Tuple[int, int]], rel: str
+) -> int:
+    """Count of ``base`` intervals kept by the intervals ``filter``
+    relation ``rel`` against the filter source's intervals ``filt``
+    (IntervalFilter.java -> Lucene Intervals.containing/notContaining/
+    containedBy/notContainedBy/overlapping/nonOverlapping/before/after)."""
+
+    def contains(a, b):
+        return a[0] <= b[0] and a[1] >= b[1]
+
+    def overlaps(a, b):
+        return a[0] <= b[1] and b[0] <= a[1]
+
+    tests = {
+        "containing": lambda b, f: contains(b, f),
+        "contained_by": lambda b, f: contains(f, b),
+        "overlapping": overlaps,
+        "before": lambda b, f: f[0] > b[1],
+        "after": lambda b, f: f[1] < b[0],
+    }
+    test = tests[rel[4:] if rel.startswith("not_") else rel]
+    hit = [any(test(b, f) for f in filt) for b in base]
+    if rel.startswith("not_"):
+        hit = [not h for h in hit]
+    return sum(hit)
+
+
+def sloppy_freq(pos: dict, terms: List[str], slop: int) -> float:
+    """Lucene sloppy phrase frequency — a faithful simulation of the
+    published SloppyPhraseMatcher algorithm (Lucene ``phraseFreq()``;
+    reached from the reference via MatchQuery.java:332): every phrase
+    position ``pp`` carries an OFFSET-ADJUSTED position ``pos - offset``;
+    a priority queue ordered by ``(position, offset, ord)`` repeatedly
+    pops the minimum pp and advances it, minimizing
+    ``matchLength = end - min(position)`` (``end`` = the max adjusted
+    position seen, monotone) until the advanced pp passes the
+    second-smallest; each local minimum with ``matchLength <= slop``
+    contributes ``1 / (1 + matchLength)`` to the frequency.  Because
+    positions are offset-adjusted, OUT-OF-ORDER matches are counted
+    exactly as Lucene counts them (a transposition costs 2 moves:
+    "b a" matches "a b"~2 with weight 1/3, does NOT match slop 1) —
+    the r3 ordered-interval deviation is closed.  Phrases with
+    REPEATED terms resolve same-term collisions by advancing the
+    lesser pp of any pair sharing an actual token position (Lucene's
+    ``advanceRpts``/``collide``/``lesser`` rule); exhaustion during
+    collision-resolution ends matching like any other exhaustion.
+    Pinned against hand-traced Lucene outputs by
+    tests/test_sloppy_fixture.py."""
+    n = len(terms)
+    arrs: List[np.ndarray] = []
+    for t in terms:
+        a = pos.get(t)
+        if a is None or len(a) == 0:
+            return 0.0
+        arrs.append(np.asarray(a, dtype=np.int64))
+    # pp state: [adjusted_position, offset, ord, idx_into_arr]
+    pps = [[int(arrs[i][0]) - i, i, i, 0] for i in range(n)]
+    end = max(pp[0] for pp in pps)
+
+    def advance(pp) -> bool:
+        i = pp[3] + 1
+        arr = arrs[pp[2]]
+        if i >= len(arr):
+            return False
+        pp[3] = i
+        pp[0] = int(arr[i]) - pp[1]
+        nonlocal end
+        if pp[0] > end:
+            end = pp[0]
+        return True
+
+    # repeat groups: ords of terms occurring more than once in the phrase
+    by_term: dict = {}
+    for i, t in enumerate(terms):
+        by_term.setdefault(t, []).append(i)
+    rpt_groups = [v for v in by_term.values() if len(v) > 1]
+
+    def resolve_repeats() -> bool:
+        """Advance the lesser of any same-term pp pair colliding on an
+        actual token position until collision-free; False = exhausted."""
+        for grp in rpt_groups:
+            while True:
+                coll = None
+                for x in range(len(grp)):
+                    for y in range(x + 1, len(grp)):
+                        p1, p2 = pps[grp[x]], pps[grp[y]]
+                        if p1[0] + p1[1] == p2[0] + p2[1]:
+                            coll = (p1, p2)
+                            break
+                    if coll:
+                        break
+                if coll is None:
+                    break
+                p1, p2 = coll
+                lesser = p1 if (p1[0], p1[1], p1[2]) <= (p2[0], p2[1], p2[2]) else p2
+                if not advance(lesser):
+                    return False
+        return True
+
+    if rpt_groups and not resolve_repeats():
+        return 0.0
+
+    key = lambda pp: (pp[0], pp[1], pp[2])  # PhraseQueue order
+    live = sorted(pps, key=key)
+    pp = live.pop(0)
+    freq = 0.0
+    match_length = end - pp[0]
+    next_ = live[0][0]
+    while True:
+        if not advance(pp):
+            break
+        if rpt_groups:
+            if not resolve_repeats():
+                break
+            live.sort(key=key)  # collision advances may reorder the queue
+            next_ = live[0][0]
+        if pp[0] > next_:  # done minimizing the current match length
+            if match_length <= slop:
+                freq += 1.0 / (1.0 + match_length)
+            live.append(pp)
+            live.sort(key=key)
+            pp = live.pop(0)
+            next_ = live[0][0]
+            match_length = end - pp[0]
+        else:
+            ml2 = end - pp[0]
+            if ml2 < match_length:
+                match_length = ml2
+    if match_length <= slop:
+        freq += 1.0 / (1.0 + match_length)
+    return float(freq)

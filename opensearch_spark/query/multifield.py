@@ -34,8 +34,6 @@ from __future__ import annotations
 from collections import Counter
 from typing import Dict, List, Optional, Sequence, Tuple
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -204,10 +202,8 @@ class MultiFieldEngine:
         reproduce without cross-field df blending)."""
         from functools import reduce
 
-        from pyspark.sql import types as T
-
         from opensearch_spark.query import bm25
-        from opensearch_spark.query.executor import _count_intervals
+        from opensearch_spark.query.executor import _intervals_count
 
         if not any(f == self.default_field for f, _ in clauses):
             raise ValueError(
@@ -215,7 +211,7 @@ class MultiFieldEngine:
                 "— its norms drive length normalization"
             )
         deng = self.default
-        slot_names = [f"\x00m{i}" for i in range(len(clauses))]
+        slot_names = [f"m{i}" for i in range(len(clauses))]
         idf_sum = 0.0
         parts: List[DataFrame] = []
         for i, (f, t) in enumerate(clauses):
@@ -227,52 +223,18 @@ class MultiFieldEngine:
                 int(st["df"].iloc[0]), eng.index.stats["doc_count"]
             )
             post = eng.index.postings_for_terms([t], with_positions=True)
-            norm_t = post.schema["norm_byte"].dataType
-            norm = (
-                F.col("norm_byte")
-                if f == self.default_field
-                else F.lit(None).cast(norm_t)
-            )
-            parts.append(
-                post.select(
-                    "_docid",
-                    F.lit(slot_names[i]).alias("slot"),
-                    "positions",
-                    norm.alias("norm_byte"),
-                )
-            )
-        unioned = reduce(DataFrame.unionByName, parts)
-        agg = (
-            unioned.groupBy("_docid")
-            .agg(
-                F.collect_list(F.struct("slot", "positions")).alias("tp"),
-                F.min("norm_byte").alias("norm_byte"),  # mask-field norm
-                F.countDistinct("slot").alias("nt"),
-            )
-            .filter(F.col("nt") == F.lit(len(clauses)))
-        )
-        gap_budget, want_ordered = int(slop), bool(in_order)
-        names = list(slot_names)
-
-        @F.pandas_udf(T.IntegerType())
-        def interval_tf(tp: pd.Series) -> pd.Series:
-            def one(entries) -> int:
-                pos = {}
-                for e in entries:
-                    key = e["slot"] if isinstance(e, dict) else e[0]
-                    arr = np.asarray(
-                        e["positions"] if isinstance(e, dict) else e[1],
-                        dtype=np.int64,
-                    )
-                    pos[key] = (
-                        np.unique(np.concatenate([pos[key], arr]))
-                        if key in pos
-                        else arr
-                    )
-                return _count_intervals(pos, names, gap_budget, want_ordered)
-
-            return tp.map(one).astype("int32")
-
-        return deng._bm25_clause(
-            agg.withColumn("itf", interval_tf(F.col("tp"))), "itf", idf_sum, boost
+            norm = "norm_byte" if f == self.default_field else "NULL"
+            parts.append(post.selectExpr(
+                "_docid", f"'{slot_names[i]}' AS term", "positions",
+                f"CAST({norm} AS INT) AS norm_byte",
+            ))
+        # each slot is a pseudo-term of the mask-field doc; its norm is
+        # the only non-null one, so the per-doc min() keeps it
+        slop, in_order = int(slop), bool(in_order)
+        return deng._score_positions(
+            reduce(DataFrame.unionByName, parts),
+            [[s] for s in slot_names],
+            lambda runs, nd: _intervals_count(runs, nd, in_order, slop),
+            idf_sum,
+            boost,
         )

@@ -284,101 +284,150 @@ def test_explain_tombstoned_doc_reports_deleted(spark, tmp_path, corpus_pdf):
     assert out2["matched"] is False
 
 
-def test_ordered_interval_groups_arrow_matches_scalar(engine):
+def _oracle_positional(oracle, groups, tf_of):
+    """Oracle scores of a one-clause positional query, keyed by oracle
+    doc index.  ``groups``: the query's slots, each a list of
+    alternative terms; a candidate doc holds a member of every slot,
+    and ``tf_of(pos)`` gives its tf (``pos(t)``: the doc's sorted
+    positions of ``t``, empty when absent).  idf sums over the distinct
+    member terms in the corpus."""
+    present = [[t for t in g if t in oracle.post] for g in groups]
+    if not all(present):
+        return {}
+    tf = {}
+    for d in set.intersection(
+        *[set().union(*(oracle.post[t] for t in g)) for g in present]
+    ):
+        tf[d] = tf_of(
+            lambda t: np.asarray(oracle.pos.get(t, {}).get(d, []), np.int64)
+        )
+    return oracle.clause(tf, {t for g in present for t in g})
+
+
+def _assert_engine_matches(engine, oracle, body, want):
+    got = {
+        (r["conv_id"], r["turn_idx"]): r["score"]
+        for r in engine.search(body, size=5000).collect()
+    }
+    ids = {(oracle.rows[d]["conv_id"], oracle.rows[d]["turn_idx"]): s
+           for d, s in want.items()}
+    assert set(got) == set(ids), body
+    for key, s in ids.items():
+        assert got[key] == pytest.approx(s, rel=1e-6), (body, key)
+
+
+def test_ordered_interval_groups_arrow_matches_scalar(engine, oracle):
     """Ordered any_of composition and span_multi-in-order span_near run
-    the Arrow lockstep path; forcing the scalar enumerator
-    (SLOPPY_BATCH_ENABLED=False) must give identical scored rows.
-    Guards the JVM slot-union pivot + arrow_gtf wiring end-to-end."""
-    from opensearch_spark.query import executor as ex
+    the Arrow lockstep path over JVM-merged slot columns; their scored
+    rows equal the scalar enumerator's over the oracle postings, each
+    slot the union of its member terms' positions."""
+    from opensearch_spark.oracle import find_intervals
 
-    queries = [
-        Q.from_dict(
-            {
-                "intervals": {
-                    "text": {
-                        "all_of": {
-                            "ordered": True,
-                            "max_gaps": 3,
-                            "intervals": [
-                                {
-                                    "any_of": {
-                                        "intervals": [
-                                            {"match": {"query": "error"}},
-                                            {"match": {"query": "the"}},
-                                        ]
-                                    }
-                                },
-                                {"match": {"query": "handling"}},
-                            ],
-                        }
-                    }
-                }
+    any_of = Q.from_dict({"intervals": {"text": {"all_of": {
+        "ordered": True,
+        "max_gaps": 3,
+        "intervals": [
+            {"any_of": {"intervals": [
+                {"match": {"query": "error"}}, {"match": {"query": "the"}},
+            ]}},
+            {"match": {"query": "handling"}},
+        ],
+    }}}})
+    span_multi = Q.from_dict({"span_near": {
+        "clauses": [
+            {"span_multi": {"match": {"prefix": {"text": "err"}}}},
+            {"span_term": {"text": "handling"}},
+        ],
+        "slop": 2,
+        "in_order": True,
+    }})
+    err = sorted(t for t in oracle.post if t.startswith("err"))
+    for q, groups, gaps in [
+        (any_of, [["error", "the"], ["handling"]], 3),
+        (span_multi, [err, ["handling"]], 2),
+    ]:
+        def tf_of(pos):
+            slots = {
+                f"s{i}": np.unique(np.concatenate([pos(t) for t in g]))
+                for i, g in enumerate(groups)
             }
-        ),
-        Q.from_dict(
-            {
-                "span_near": {
-                    "clauses": [
-                        {"span_multi": {"match": {"prefix": {"text": "err"}}}},
-                        {"span_term": {"text": "handling"}},
-                    ],
-                    "slop": 2,
-                    "in_order": True,
-                }
-            }
-        ),
-    ]
-    total = 0
-    for q in queries:
-        assert ex.SLOPPY_BATCH_ENABLED
-        arrow = {
-            r["_docid"]: round(r["score"], 9) for r in engine._score(q).collect()
-        }
-        ex.SLOPPY_BATCH_ENABLED = False
-        try:
-            scalar = {
-                r["_docid"]: round(r["score"], 9)
-                for r in engine._score(q).collect()
-            }
-        finally:
-            ex.SLOPPY_BATCH_ENABLED = True
-        assert arrow == scalar
-        total += len(arrow)
-    assert total > 0  # non-vacuous: the fixture corpus matches both
+            return len(find_intervals(slots, list(slots), gaps, True))
+
+        want = _oracle_positional(oracle, groups, tf_of)
+        assert want  # non-vacuous: the fixture corpus matches both
+        _assert_engine_matches(engine, oracle, q, want)
 
 
-def test_span_contain_within_arrow_matches_scalar(engine):
+def test_span_contain_within_arrow_matches_scalar(engine, oracle):
     """span_containing / span_within with an in_order big spec run the
     emit-kernel Arrow path; the scalar enumerator must agree exactly."""
-    from opensearch_spark.query import executor as ex
+    _assert_span_contain_matches(engine, oracle, in_order=True)
 
-    big = {
-        "span_near": {
-            "clauses": [
-                {"span_term": {"text": "the"}},
-                {"span_term": {"text": "of"}},
-            ],
-            "slop": 4,
-            "in_order": True,
-        }
-    }
-    total = 0
+
+def test_intervals_filter_relations_match_oracle(engine, oracle):
+    """The 8 intervals ``filter`` relations, over an ordered and an
+    unordered base source and a 1-term and a 2-term filter source, and
+    span_containing / span_within with an unordered big span, score
+    exactly as the scalar enumerators in ``oracle.py`` over the
+    fixture postings.  Every relation has a non-empty answer, and each
+    negated one keeps docs that lack the filter terms altogether."""
+    from opensearch_spark.oracle import (
+        FILTER_RELATIONS, filter_intervals, find_intervals,
+    )
+
+    cases = [
+        # base terms, max_gaps, ordered; filter terms, max_gaps, ordered
+        (["the", "of"], 4, True, ["a"], -1, True),
+        (["and", "is"], 8, False, ["to", "in"], -1, False),
+    ]
+    answered = set()
+    for base, bg, bo, filt, fg, fo in cases:
+        for rel in FILTER_RELATIONS:
+            def tf_of(pos):
+                p = {t: pos(t) for t in set(base) | set(filt)}
+                f_iv = (
+                    find_intervals(p, filt, fg, fo)
+                    if all(p[t].size for t in filt) else []
+                )
+                return filter_intervals(find_intervals(p, base, bg, bo), f_iv, rel)
+
+            want = _oracle_positional(oracle, [[t] for t in base], tf_of)
+            _assert_engine_matches(engine, oracle, {"intervals": {"text": {"match": {
+                "query": " ".join(base), "max_gaps": bg, "ordered": bo,
+                "filter": {rel: {"match": {
+                    "query": " ".join(filt), "max_gaps": fg, "ordered": fo,
+                }}},
+            }}}}, want)
+            if want:
+                answered.add(rel)
+            if rel.startswith("not_"):
+                assert any(
+                    not all(d in oracle.pos.get(t, {}) for t in filt) for d in want
+                ), (base, filt, rel)
+    assert answered == set(FILTER_RELATIONS)
+
+    _assert_span_contain_matches(engine, oracle, in_order=False)
+
+
+def _assert_span_contain_matches(engine, oracle, in_order):
+    from opensearch_spark.oracle import find_intervals
+
+    big, little = ["the", "of"], "a"
     for kind in ("span_containing", "span_within"):
-        q = Q.from_dict(
-            {kind: {"big": big, "little": {"span_term": {"text": "a"}}}}
-        )
-        assert ex.SLOPPY_BATCH_ENABLED
-        arrow = {
-            r["_docid"]: round(r["score"], 9) for r in engine._score(q).collect()
-        }
-        ex.SLOPPY_BATCH_ENABLED = False
-        try:
-            scalar = {
-                r["_docid"]: round(r["score"], 9)
-                for r in engine._score(q).collect()
-            }
-        finally:
-            ex.SLOPPY_BATCH_ENABLED = True
-        assert arrow == scalar, kind
-        total += len(arrow)
-    assert total > 0
+        def tf_of(pos):
+            lp = pos(little)
+            spans = find_intervals({t: pos(t) for t in big}, big, 4, in_order)
+            inside = [lp[(lp >= s) & (lp <= e)] for s, e in spans]
+            if kind == "span_within":
+                return len({int(x) for a in inside for x in a})
+            return sum(a.size > 0 for a in inside)
+
+        want = _oracle_positional(oracle, [[t] for t in big + [little]], tf_of)
+        assert want, (kind, in_order)
+        _assert_engine_matches(engine, oracle, {kind: {
+            "big": {"span_near": {
+                "clauses": [{"span_term": {"text": t}} for t in big],
+                "slop": 4, "in_order": in_order,
+            }},
+            "little": {"span_term": {"text": little}},
+        }}, want)

@@ -692,3 +692,62 @@ def test_scaled_float_predicate_pushes_long_equality(spark, tmp_path):
     f2 = pushed2.replace(" ", "")
     assert "GreaterThanOrEqual(price,301)" in f2 and \
         "LessThanOrEqual(price,1000)" in f2, pushed2
+
+
+def _span_near(clauses, slop, in_order):
+    return {"span_near": {"clauses": clauses, "slop": slop, "in_order": in_order}}
+
+
+def _st(term):
+    return {"span_term": {"text": term}}
+
+
+def _contain(kind, in_order):
+    return {kind: {"big": _span_near([_st("the"), _st("of")], 4, in_order),
+                   "little": _st("a")}}
+
+
+POSITIONAL_SHAPES = {
+    "intervals_match": {"intervals": {"text": {"match": {
+        "query": "error handling", "max_gaps": 3, "ordered": True}}}},
+    "intervals_any_of": {"intervals": {"text": {"any_of": {"intervals": [
+        {"match": {"query": "error"}}, {"match": {"query": "handling"}}]}}}},
+    **{f"intervals_all_of_{'ordered' if o else 'unordered'}": {
+        "intervals": {"text": {"all_of": {"ordered": o, "max_gaps": 3, "intervals": [
+            {"any_of": {"intervals": [{"match": {"query": "error"}},
+                                      {"match": {"query": "the"}}]}},
+            {"match": {"query": "handling"}}]}}}} for o in (True, False)},
+    "intervals_filter": {"intervals": {"text": {"match": {
+        "query": "the of", "max_gaps": 4,
+        "filter": {"not_containing": {"match": {"query": "a"}}}}}}},
+    "span_near_ordered": _span_near([_st("error"), _st("handling")], 2, True),
+    "span_near_unordered": _span_near([_st("error"), _st("handling")], 2, False),
+    "span_near_gaps": _span_near(
+        [_st("the"), {"span_gap": {"text": 1}}, _st("of")], 2, True),
+    "span_near_span_multi": _span_near(
+        [{"span_multi": {"match": {"prefix": {"text": "err"}}}}, _st("handling")],
+        2, True),
+    **{f"{kind}_{'ordered' if o else 'unordered'}": _contain(kind, o)
+       for kind in ("span_containing", "span_within") for o in (True, False)},
+    "sloppy_distinct": {"match_phrase": {"text": {"query": "the of a", "slop": 4}}},
+    "sloppy_repeated": {"match_phrase": {"text": {"query": "the of the", "slop": 4}}},
+}
+
+
+@pytest.mark.parametrize("shape", sorted(POSITIONAL_SHAPES) + ["span_near_masked"])
+def test_positional_scorers_have_no_python_eval(engine, shape):
+    """Interval, span and sloppy-phrase scoring runs on the lockstep
+    Arrow kernels (a ``MapInArrow`` over per-slot position columns) for
+    every shape: no plan carries a per-row Python eval node."""
+    if shape == "span_near_masked":
+        from opensearch_spark.query.multifield import MultiFieldEngine
+
+        meng = MultiFieldEngine({"text": engine, "alias": engine}, "text")
+        df = meng.score_span_near_masked(
+            [("text", "error"), ("alias", "handling")], slop=2, in_order=False
+        )
+    else:
+        df = engine.search(POSITIONAL_SHAPES[shape], size=10)
+    nodes = _plan_nodes(df)
+    assert "ArrowEvalPython" not in nodes and "BatchEvalPython" not in nodes, nodes
+    assert "MapInArrow" in nodes, nodes

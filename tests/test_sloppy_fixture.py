@@ -11,11 +11,11 @@ matches too: a transposition costs 2 moves ("b a" matches "a b"~2
 with weight 1/3 and does NOT match slop 1).
 
 Late r3 the engine implements the full algorithm
-(executor._sloppy_freq — a faithful simulation of the published
+(oracle.sloppy_freq — a faithful simulation of the published
 matcher, including the collide/lesser advance rule for repeated
 terms).  This fixture pins it two ways:
 
-1. ``_sloppy_freq`` is asserted EXACTLY against a table of
+1. ``sloppy_freq`` is asserted EXACTLY against a table of
    hand-traced Lucene outputs (in-order, out-of-order, repeats,
    multi-term reversals), and
 2. the engine's end-to-end slop-2 scores over a built index are
@@ -29,7 +29,7 @@ import pytest
 
 from opensearch_spark.analysis import smallfloat as sfl
 from opensearch_spark.query import bm25
-from opensearch_spark.query.executor import _sloppy_freq
+from opensearch_spark.oracle import find_intervals, sloppy_freq
 
 DOCS = [
     # (conv_id, turn_idx, text)
@@ -53,7 +53,7 @@ def freq_of(text: str, terms, slop: int) -> float:
     pos = {t: _positions(text, t) for t in set(terms)}
     if any(p.size == 0 for p in pos.values()):
         return 0.0
-    return _sloppy_freq(pos, list(terms), slop)
+    return sloppy_freq(pos, list(terms), slop)
 
 
 # hand-traced Lucene SloppyPhraseMatcher outputs (text, phrase, slop, freq)
@@ -134,7 +134,24 @@ def test_engine_matches_lucene_semantics_exactly(sloppy_engine):
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from opensearch_spark.query.executor import _sloppy_freq_2term_batch
+from opensearch_spark.query.executor import (
+    _filter_relation_keep,
+    _intervals_count,
+    _intervals_emit,
+    _ordered_intervals_emit_flat,
+    _sloppy_freq_krow_flat,
+    _sloppy_freq_rpt_flat,
+)
+
+
+def _sloppy_freq_krow_batch(cols, slop):
+    """``_sloppy_freq_krow_flat`` over per-doc lists: ``cols[i]`` holds
+    phrase term i's sorted int64 positions per doc, ALREADY
+    offset-adjusted (raw positions minus i), every array non-empty."""
+    k, nd = len(cols), len(cols[0])
+    lens = np.array([[a.size for a in c] for c in cols], np.int64).T
+    offs = np.concatenate([np.zeros((1, k), np.int64), np.cumsum(lens, 0)[:-1]])
+    return _sloppy_freq_krow_flat([np.concatenate(c) for c in cols], offs, lens, slop)
 
 _poslist = st.lists(st.integers(min_value=0, max_value=40), min_size=1,
                     max_size=8, unique=True).map(sorted)
@@ -146,15 +163,15 @@ _poslist = st.lists(st.integers(min_value=0, max_value=40), min_size=1,
 )
 @settings(max_examples=400, deadline=None)
 def test_2term_batch_equals_scalar(docs, slop):
-    """The vectorized two-term walk is value-identical to the scalar
+    """The vectorized walk at k=2 is value-identical to the scalar
     SloppyPhraseMatcher simulation on arbitrary position sets —
     including shared positions (same token can't be two terms in a
     real index, but the algebra must still agree)."""
     pa = [np.asarray(a, dtype=np.int64) for a, _ in docs]
     pb_raw = [np.asarray(b, dtype=np.int64) for _, b in docs]
-    got = _sloppy_freq_2term_batch(pa, [b - 1 for b in pb_raw], slop)
+    got = _sloppy_freq_krow_batch([pa, [b - 1 for b in pb_raw]], slop)
     for k, (a, b) in enumerate(zip(pa, pb_raw)):
-        want = _sloppy_freq({"t0": a, "t1": b}, ["t0", "t1"], slop)
+        want = sloppy_freq({"t0": a, "t1": b}, ["t0", "t1"], slop)
         assert got[k] == pytest.approx(want, abs=1e-12), (
             f"doc {k}: batch {got[k]} != scalar {want} "
             f"(A={a.tolist()}, B={b.tolist()}, slop={slop})"
@@ -162,7 +179,7 @@ def test_2term_batch_equals_scalar(docs, slop):
 
 
 def test_2term_batch_trace_parity():
-    """The batch path reproduces every two-term hand-traced Lucene row."""
+    """The k=2 batch path reproduces every two-term hand-traced Lucene row."""
     two = [(t, terms, slop, want) for t, terms, slop, want in LUCENE_TRACES
            if len(terms) == 2 and terms[0] != terms[1]]
     assert two
@@ -171,11 +188,10 @@ def test_2term_batch_trace_parity():
         b = _positions(text, terms[1])
         if a.size == 0 or b.size == 0:
             continue
-        got = _sloppy_freq_2term_batch([a], [b - 1], slop)[0]
+        got = _sloppy_freq_krow_batch([[a], [b - 1]], slop)[0]
         assert got == pytest.approx(want, abs=1e-12)
 
 
-from opensearch_spark.query.executor import _sloppy_freq_krow_batch
 
 
 @given(
@@ -194,7 +210,7 @@ def test_3term_batch_equals_scalar(docs, slop):
     got = _sloppy_freq_krow_batch(cols, slop)
     for k, d in enumerate(docs):
         pos = {f"t{i}": np.asarray(d[i], dtype=np.int64) for i in range(3)}
-        want = _sloppy_freq(pos, ["t0", "t1", "t2"], slop)
+        want = sloppy_freq(pos, ["t0", "t1", "t2"], slop)
         assert got[k] == pytest.approx(want, abs=1e-12), (
             f"doc {k}: batch {got[k]} != scalar {want} "
             f"(docs={[list(x) for x in d]}, slop={slop})"
@@ -217,7 +233,7 @@ def test_4term_batch_equals_scalar(docs, slop):
     got = _sloppy_freq_krow_batch(cols, slop)
     for k, d in enumerate(docs):
         pos = {f"t{i}": np.asarray(d[i], dtype=np.int64) for i in range(4)}
-        want = _sloppy_freq(pos, ["t0", "t1", "t2", "t3"], slop)
+        want = sloppy_freq(pos, ["t0", "t1", "t2", "t3"], slop)
         assert got[k] == pytest.approx(want, abs=1e-12)
 
 
@@ -242,7 +258,6 @@ def test_krow_batch_trace_parity():
     assert ran
 
 
-from opensearch_spark.query.executor import _sloppy_freq_rpt_flat
 
 
 def _rpt_flat(docs_per_unique):
@@ -287,7 +302,7 @@ def test_rpt_flat_aba_equals_scalar(docs, slop):
             "a": np.asarray(a, dtype=np.int64),
             "b": np.asarray(b, dtype=np.int64),
         }
-        want = _sloppy_freq(pos, ["a", "b", "a"], slop)
+        want = sloppy_freq(pos, ["a", "b", "a"], slop)
         assert got[k] == pytest.approx(want, abs=1e-12), (
             f"doc {k}: rpt kernel {got[k]} != scalar {want} "
             f"(a={list(a)}, b={list(b)}, slop={slop})"
@@ -305,7 +320,7 @@ def test_rpt_flat_aa_equals_scalar(docs, slop):
     flats, offs, lens = _rpt_flat([docs])
     got = _sloppy_freq_rpt_flat(flats, offs, lens, slop, [0, 0])
     for k, a in enumerate(docs):
-        want = _sloppy_freq(
+        want = sloppy_freq(
             {"a": np.asarray(a, dtype=np.int64)}, ["a", "a"], slop
         )
         assert got[k] == pytest.approx(want, abs=1e-12), (
@@ -330,7 +345,7 @@ def test_rpt_flat_abab_equals_scalar(docs, slop):
             "a": np.asarray(a, dtype=np.int64),
             "b": np.asarray(b, dtype=np.int64),
         }
-        want = _sloppy_freq(pos, ["a", "b", "a", "b"], slop)
+        want = sloppy_freq(pos, ["a", "b", "a", "b"], slop)
         assert got[k] == pytest.approx(want, abs=1e-12)
 
 
@@ -351,7 +366,7 @@ def test_rpt_flat_aab_equals_scalar(docs, slop):
             "a": np.asarray(a, dtype=np.int64),
             "b": np.asarray(b, dtype=np.int64),
         }
-        want = _sloppy_freq(pos, ["a", "a", "b"], slop)
+        want = sloppy_freq(pos, ["a", "a", "b"], slop)
         assert got[k] == pytest.approx(want, abs=1e-12)
 
 
@@ -380,24 +395,25 @@ def test_rpt_flat_trace_parity():
 
 # ------------------------------------------------------- ordered intervals
 
-from opensearch_spark.query.executor import (
-    _find_intervals,
-    _ordered_intervals_count_flat,
-)
-
 
 def _ordered_scalar_count(docs, terms, max_gaps, gaps=None):
     out = []
     for d in docs:
         pos = {t: np.asarray(p, dtype=np.int64) for t, p in zip(terms, d)}
-        out.append(len(_find_intervals(pos, list(terms), max_gaps, True, gaps)))
+        out.append(len(find_intervals(pos, list(terms), max_gaps, True, gaps)))
     return np.asarray(out, dtype=np.int64)
 
 
 def _flatten(docs, slot):
-    vals = np.concatenate([np.asarray(d[slot], dtype=np.int64) for d in docs])
+    vals = np.concatenate(
+        [np.asarray(d[slot], dtype=np.int64) for d in docs] + [np.zeros(0, np.int64)]
+    )
     lens = np.asarray([len(d[slot]) for d in docs], dtype=np.int64)
     return vals, lens
+
+
+def _runs(docs, slots):
+    return [_flatten(docs, s) for s in slots]
 
 
 @given(
@@ -407,9 +423,7 @@ def _flatten(docs, slot):
 @settings(max_examples=300, deadline=None)
 def test_ordered_intervals_batch_k2(docs, max_gaps):
     """Lockstep ordered-interval counts == the scalar enumerator (k=2)."""
-    v0, l0 = _flatten(docs, 0)
-    v1, l1 = _flatten(docs, 1)
-    got = _ordered_intervals_count_flat([v0, v1], [l0, l1], [1], 2, max_gaps)
+    got = _intervals_count(_runs(docs, [0, 1]), len(docs), True, max_gaps)
     want = _ordered_scalar_count(docs, ["t0", "t1"], max_gaps)
     assert (got == want).all(), (docs, max_gaps, got.tolist(), want.tolist())
 
@@ -425,12 +439,7 @@ def test_ordered_intervals_batch_k2(docs, max_gaps):
 def test_ordered_intervals_batch_k3_gaps(docs, max_gaps, gap):
     """k=3 with a span_gap run reserved between slots 0 and 1."""
     gaps = [gap, 0]
-    steps = [1 + gap, 1]
-    total = 3 + gap
-    cols = [_flatten(docs, s) for s in range(3)]
-    got = _ordered_intervals_count_flat(
-        [c[0] for c in cols], [c[1] for c in cols], steps, total, max_gaps
-    )
+    got = _intervals_count(_runs(docs, [0, 1, 2]), len(docs), True, max_gaps, gaps)
     want = _ordered_scalar_count(docs, ["t0", "t1", "t2"], max_gaps, gaps)
     assert (got == want).all(), (docs, max_gaps, gap)
 
@@ -443,41 +452,38 @@ def test_ordered_intervals_batch_k3_gaps(docs, max_gaps, gap):
 def test_ordered_intervals_batch_repeated_term(docs, max_gaps):
     """Sequence [a, b, a]: slots 0 and 2 share one positions array,
     matching the scalar's per-term dict lookup."""
-    v0, l0 = _flatten(docs, 0)
-    v1, l1 = _flatten(docs, 1)
-    got = _ordered_intervals_count_flat(
-        [v0, v1, v0], [l0, l1, l0], [1, 1], 3, max_gaps
-    )
+    got = _intervals_count(_runs(docs, [0, 1, 0]), len(docs), True, max_gaps)
     want = []
     for d in docs:
         pos = {
             "a": np.asarray(d[0], dtype=np.int64),
             "b": np.asarray(d[1], dtype=np.int64),
         }
-        want.append(len(_find_intervals(pos, ["a", "b", "a"], max_gaps, True)))
+        want.append(len(find_intervals(pos, ["a", "b", "a"], max_gaps, True)))
     assert (got == np.asarray(want)).all(), (docs, max_gaps)
 
 
+# Positions far past any real doc length, mixed with small ones in one
+# batch: the doc stride is derived from the batch's largest position,
+# so long docs need no separate route.  2**31 - 2 is the int32 edge.
+HUGE = int(1) << 23
+EDGE = (int(1) << 31) - 2
+
+
 def test_ordered_intervals_huge_position_fallback():
-    """Docs with positions beyond the doc-shift packing range route to
-    the scalar enumerator; the rest of the batch stays lockstep — both
-    count correctly."""
-    big = int(1) << 23  # > _DOC_SHIFT
+    """Docs with positions >= 2**23 (and one near 2**31) count like the
+    scalar enumerator in the same batch as short docs."""
     docs = [
-        ([big + 1, big + 7], [big + 2, big + 9]),  # scalar route
-        ([0, 5], [1, 6]),                          # lockstep route
-        ([2], [30]),                               # lockstep, no match
-        ([0, big + 7], [big + 9, big + 20]),       # scalar route (mixed run)
+        ([HUGE + 1, HUGE + 7], [HUGE + 2, HUGE + 9]),
+        ([0, 5], [1, 6]),
+        ([2], [30]),
+        ([0, HUGE + 7], [HUGE + 9, HUGE + 20]),
+        ([3, EDGE - 1], [4, EDGE]),
     ]
-    v0, l0 = _flatten(docs, 0)
-    v1, l1 = _flatten(docs, 1)
-    got = _ordered_intervals_count_flat([v0, v1], [l0, l1], [1], 2, 1)
+    got = _intervals_count(_runs(docs, [0, 1]), len(docs), True, 1)
     want = _ordered_scalar_count(docs, ["t0", "t1"], 1)
     assert (got == want).all(), (got.tolist(), want.tolist())
-    assert got[0] == 2 and got[1] == 2 and got[2] == 0
-
-
-from opensearch_spark.query.executor import _ordered_intervals_emit_flat
+    assert got.tolist() == [2, 2, 0, 1, 2]
 
 
 @given(
@@ -499,30 +505,34 @@ def test_ordered_intervals_emit_k2(docs, max_gaps):
             "t0": np.asarray(a, dtype=np.int64),
             "t1": np.asarray(b, dtype=np.int64),
         }
-        want = _find_intervals(pos, ["t0", "t1"], max_gaps, True)
+        want = find_intervals(pos, ["t0", "t1"], max_gaps, True)
         assert sorted(got.get(kk, [])) == sorted(want), (kk, docs, max_gaps)
 
 
-def test_ordered_intervals_emit_huge_fallback():
-    """Mixed scalar/lockstep batch through the emit guard."""
-    big = int(1) << 23
-    docs = [([big + 1, big + 5], [big + 2, big + 8]), ([0, 4], [1, 5])]
-    v0, l0 = _flatten(docs, 0)
-    v1, l1 = _flatten(docs, 1)
-    d, s, e = _ordered_intervals_emit_flat([v0, v1], [l0, l1], [1], 2, 2)
-    got = sorted(zip(d.tolist(), s.tolist(), e.tolist()))
+def _emitted(out):
+    return sorted(zip(*(a.tolist() for a in out)))
+
+
+def _scalar_emitted(docs, k, max_gaps, ordered):
+    names = [f"t{t}" for t in range(k)]
     want = []
-    for kk, (a, b) in enumerate(docs):
-        pos = {
-            "t0": np.asarray(a, dtype=np.int64),
-            "t1": np.asarray(b, dtype=np.int64),
-        }
-        for ss, ee in _find_intervals(pos, ["t0", "t1"], 2, True):
-            want.append((kk, ss, ee))
-    assert got == sorted(want)
+    for kk, d in enumerate(docs):
+        pos = {names[t]: np.asarray(d[t], dtype=np.int64) for t in range(k)}
+        if all(p.size for p in pos.values()):
+            want += [(kk, s, e) for s, e in find_intervals(pos, names, max_gaps, ordered)]
+    return sorted(want)
 
 
-from opensearch_spark.query.executor import _unordered_intervals_count_flat
+def test_ordered_intervals_emit_huge_fallback():
+    """Long and short docs in one batch through the emit kernel."""
+    docs = [
+        ([HUGE + 1, HUGE + 5], [HUGE + 2, HUGE + 8]),
+        ([0, 4], [1, 5]),
+        ([EDGE - 3], [EDGE]),
+    ]
+    d, s, e = _ordered_intervals_emit_flat(*zip(*_runs(docs, [0, 1])), [1], 2, 2)
+    assert _emitted((d, s, e)) == _scalar_emitted(docs, 2, 2, True)
+    assert d.size == 5
 
 
 def _unordered_scalar_count(docs, k, max_gaps):
@@ -530,7 +540,7 @@ def _unordered_scalar_count(docs, k, max_gaps):
     names = [f"t{t}" for t in range(k)]
     for d in docs:
         pos = {names[t]: np.asarray(d[t], dtype=np.int64) for t in range(k)}
-        out.append(len(_find_intervals(pos, names, max_gaps, False)))
+        out.append(len(find_intervals(pos, names, max_gaps, False)))
     return np.asarray(out, dtype=np.int64)
 
 
@@ -542,9 +552,7 @@ def _unordered_scalar_count(docs, k, max_gaps):
 def test_unordered_intervals_batch_k2(docs, max_gaps):
     """Lockstep unordered window counts == the scalar sweep (k=2) —
     including tied positions across terms (term-ordinal tie-break)."""
-    v0, l0 = _flatten(docs, 0)
-    v1, l1 = _flatten(docs, 1)
-    got = _unordered_intervals_count_flat([v0, v1], [l0, l1], max_gaps)
+    got = _intervals_count(_runs(docs, [0, 1]), len(docs), False, max_gaps)
     want = _unordered_scalar_count(docs, 2, max_gaps)
     assert (got == want).all(), (docs, max_gaps, got.tolist(), want.tolist())
 
@@ -557,19 +565,79 @@ def test_unordered_intervals_batch_k2(docs, max_gaps):
 )
 @settings(max_examples=300, deadline=None)
 def test_unordered_intervals_batch_k3(docs, max_gaps):
-    cols = [_flatten(docs, s) for s in range(3)]
-    got = _unordered_intervals_count_flat(
-        [c[0] for c in cols], [c[1] for c in cols], max_gaps
-    )
+    got = _intervals_count(_runs(docs, [0, 1, 2]), len(docs), False, max_gaps)
     want = _unordered_scalar_count(docs, 3, max_gaps)
     assert (got == want).all(), (docs, max_gaps)
 
 
 def test_unordered_intervals_huge_fallback():
-    big = int(1) << 23
-    docs = [([big + 3, big + 9], [big + 1, big + 4]), ([2, 9], [0, 3])]
-    v0, l0 = _flatten(docs, 0)
-    v1, l1 = _flatten(docs, 1)
-    got = _unordered_intervals_count_flat([v0, v1], [l0, l1], 2)
+    """Long and short docs in one batch through the unordered kernel."""
+    docs = [
+        ([HUGE + 3, HUGE + 9], [HUGE + 1, HUGE + 4]),
+        ([2, 9], [0, 3]),
+        ([EDGE], [EDGE - 2]),
+    ]
+    got = _intervals_count(_runs(docs, [0, 1]), len(docs), False, 2)
     want = _unordered_scalar_count(docs, 2, 2)
     assert (got == want).all(), (got.tolist(), want.tolist())
+    assert got.tolist() == [2, 2, 1]
+
+
+_maybe_empty = st.lists(
+    st.integers(min_value=0, max_value=40), min_size=0, max_size=8, unique=True
+).map(sorted)
+
+
+@given(
+    docs=st.lists(
+        st.tuples(_maybe_empty, _maybe_empty, _maybe_empty), min_size=1, max_size=10
+    ),
+    max_gaps=st.integers(min_value=-1, max_value=8),
+    k=st.integers(min_value=1, max_value=3),
+)
+@settings(max_examples=300, deadline=None)
+def test_unordered_intervals_emit_equals_scalar(docs, max_gaps, k):
+    """The unordered emit kernel returns exactly the scalar sweep's
+    (start, end) windows per doc, for 1 to 3 terms, tied positions
+    across terms, and docs missing a term (no window)."""
+    out = _intervals_emit(_runs(docs, range(k)), False, max_gaps)
+    assert _emitted(out) == _scalar_emitted(docs, k, max_gaps, False)
+
+
+@given(
+    docs=st.lists(
+        st.tuples(_maybe_empty, _maybe_empty, _maybe_empty, _maybe_empty),
+        min_size=1, max_size=10,
+    ),
+    b_ord=st.booleans(),
+    f_ord=st.booleans(),
+    b_gaps=st.integers(min_value=-1, max_value=6),
+    f_gaps=st.integers(min_value=-1, max_value=6),
+    f_k=st.integers(min_value=1, max_value=2),
+)
+@settings(max_examples=300, deadline=None)
+def test_filter_relation_keep_equals_scalar(docs, b_ord, f_ord, b_gaps, f_gaps, f_k):
+    """The vectorized intervals-``filter`` relation test keeps exactly
+    the base intervals the scalar relation loop keeps, for all 8
+    relations: ordered and unordered sources, a 1- and a 2-term filter
+    source, tied positions, and docs without the filter terms."""
+    from opensearch_spark.oracle import FILTER_RELATIONS, filter_intervals
+
+    nd = len(docs)
+    base = _intervals_emit(_runs(docs, [0, 1]), b_ord, b_gaps)
+    filt = _intervals_emit(_runs(docs, [2, 3][:f_k]), f_ord, f_gaps)
+    fnames = ["t2", "t3"][:f_k]
+    for rel in FILTER_RELATIONS:
+        keep = _filter_relation_keep(rel, base, filt, nd)
+        got = np.bincount(base[0][keep], minlength=nd)
+        for kk, d in enumerate(docs):
+            pos = {f"t{t}": np.asarray(d[t], dtype=np.int64) for t in range(4)}
+            b_iv = (
+                find_intervals(pos, ["t0", "t1"], b_gaps, b_ord)
+                if pos["t0"].size and pos["t1"].size else []
+            )
+            f_iv = (
+                find_intervals(pos, fnames, f_gaps, f_ord)
+                if all(pos[t].size for t in fnames) else []
+            )
+            assert got[kk] == filter_intervals(b_iv, f_iv, rel), (rel, kk, d)
