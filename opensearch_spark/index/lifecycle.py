@@ -41,7 +41,9 @@ def delete_by_query(engine, query) -> int:
     the same delete appends already-deleted ids which the distinct
     read-side union ignores."""
     ddir = deletes_dir(engine.index.index_dir)
-    matched = engine._score_with_deletes_applied(query).select("_docid")
+    # a fresh handle: the engine's own is a snapshot that misses docs
+    # appended since it was opened
+    matched = engine.reopened()._score_with_deletes_applied(query).select("_docid")
     n = matched.count()
     matched.write.mode("append").parquet(ddir)
     with open(os.path.join(ddir, f"_delete-{int(time.time()*1000)}.json"), "w") as f:
@@ -102,6 +104,7 @@ def update_by_query(
     reference's scroll+bulk only ever sees live docs, so a tombstoned
     doc must not be resurrected by an unrelated update — the rewritten
     index starts with no tombstones and no deleted content."""
+    engine = engine.reopened()  # every doc committed so far
     dm = engine.index.docmap()
     dels = tombstone_docids(spark, engine.index.index_dir)
     if dels is not None:
@@ -160,7 +163,9 @@ def update_doc(
 
     index_dir = engine.index.index_dir
     _complete_pending_updates(spark, index_dir)
-    dm = engine.index.docmap()
+    # the live docmap, not the engine's snapshot: a doc this engine's
+    # handle predates (an earlier update or upsert) must be found
+    dm = engine.index.reopen().docmap()
     cond = None
     for k, v in id_values.items():
         c = F.col(k) == F.lit(v)

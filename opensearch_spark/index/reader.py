@@ -14,10 +14,19 @@ cached columnar batches; unpersisted indexes decode on read.  The pins
 are doc-partitioned (hash of ``_docid``), so a persisted index scores
 each partition's docs on their own: the reference's per-shard query
 phase, with no exchange before the coordinator's top-k merge.
+
+A handle is a snapshot of the index: it opens each table (postings,
+docmap, dictionary) once, at first use, and keeps it, as it keeps the
+plan and the statistics; a handle opened before an append does not see
+the appended batch, a new handle does.  The docmap, and the decoded
+postings pin once persisted, are registered under temp views named per
+handle (:meth:`InvertedIndex.view`), so a search's query phase reads
+them from one SQL statement.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 from functools import cached_property
@@ -58,6 +67,7 @@ _POSTINGS_SCHEMA = {
 
 # frames pinned by InvertedIndex.persist, in materialization order
 _PINS = ("_postings_df", "_docmap_df", "_dictionary_df", "_decoded_df")
+_HANDLES = itertools.count()
 
 
 class InvertedIndex:
@@ -67,6 +77,16 @@ class InvertedIndex:
         self.spark = spark
         self.index_dir = index_dir
         self.paths = _paths(index_dir)
+        self._views: Dict[str, str] = {}
+        self._view_prefix = f"_osidx{next(_HANDLES)}"
+
+    def reopen(self) -> "InvertedIndex":
+        """A new handle on the same directory (and routing segment): it
+        sees every commit made since this one took its snapshot."""
+        fresh = InvertedIndex(self.spark, self.index_dir)
+        if "_route_seg" in self.__dict__:
+            fresh.__dict__["_route_seg"] = self.__dict__["_route_seg"]
+        return fresh
 
     @cached_property
     def plan(self) -> Dict:
@@ -93,9 +113,10 @@ class InvertedIndex:
         and its pruned decode read them), the docmap, the dictionary,
         and the DECODED postings — every block unpacked once here, with
         positions when the index stores them.  From then on
-        :meth:`postings_for_terms`, positional queries included, reads
-        the decoded pin with a JVM-only ``term IN (...)`` scan instead
-        of decoding blocks in a Python worker per query.
+        :meth:`postings_for_terms` and :meth:`postings_relation`,
+        positional queries included, read the decoded pin with a
+        JVM-only ``term IN (...)`` scan instead of decoding blocks in a
+        Python worker per query.
 
         The decoded postings and the docmap are hash-partitioned on
         ``_docid`` into the same number of partitions, the session's
@@ -110,14 +131,17 @@ class InvertedIndex:
         in.  Later changes to the session's partition count do not
         re-partition the pins.
 
-        The dictionary pin is also collected to the driver once (one
-        Arrow collect) into the :meth:`term_stats` memo, which is marked
-        complete: a term it lacks is absent from the index, so term
-        statistics never run a Spark job on a persisted index."""
+        The handle's views (:meth:`view`) are re-registered over the
+        pins and stay until :meth:`unpersist`: a search never replaces
+        or drops them, which would uncache the frame they read.  The
+        dictionary pin goes to the driver through the same loader a
+        first :meth:`term_stats` miss uses, so term statistics never run
+        a Spark job on a persisted index."""
         from pyspark import StorageLevel
 
         level = StorageLevel.MEMORY_AND_DISK
         n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        self._drop_views()
         pins = self.__dict__
         pins["_postings_df"] = self.postings().persist(level)
         pins["_docmap_df"] = self.docmap().repartition(n, "_docid").persist(level)
@@ -131,10 +155,9 @@ class InvertedIndex:
         )
         for key in _PINS:
             pins[key].count()  # materialize
-        stats = pins["_dictionary_df"].select("term", "df", "total_tf", "n_blocks").toPandas()
-        values = zip(*(stats[c].tolist() for c in ("df", "total_tf", "n_blocks")))
-        pins.setdefault("_term_stats_cache", {}).update(zip(stats["term"].tolist(), values))
-        pins["_term_stats_complete"] = True
+        for table in ("docmap", "decoded"):
+            self.view(table)
+        self._load_term_stats()
         return self
 
     def unpersist(self) -> "InvertedIndex":
@@ -142,10 +165,12 @@ class InvertedIndex:
         (the cache-eviction twin of :meth:`persist`) — benches that walk
         multiple index sizes in one JVM must drop the previous size's
         cache or the unroll of the next one OOMs the shared local heap.
-        Frames derived from the block pin go first: uncaching a frame
-        re-plans the cached frames built on it.  The :meth:`term_stats`
-        memo stays (the index is immutable), but is no longer marked
-        complete."""
+        The handle's views go first (they re-register over the unpinned
+        tables on next use), then the frames derived from the block pin:
+        uncaching a frame re-plans the cached frames built on it.  The
+        :meth:`term_stats` memo stays (the handle is a snapshot), but is
+        no longer marked complete."""
+        self._drop_views()
         self.__dict__.pop("_term_stats_complete", None)
         self.__dict__.pop("_docmap_view", None)
         for key in ("_block_meta_df",) + _PINS[::-1]:
@@ -154,15 +179,30 @@ class InvertedIndex:
                 df.unpersist()
         return self
 
+    def view(self, table: str) -> str:
+        """Name of this handle's temp view over ``table``: "docmap" (the
+        pin when persisted, else the handle's table) or "decoded" (the
+        decoded postings pin; persisted handles only).  Registered on
+        first use; the name is stable for the handle's life."""
+        name = self._views.get(table)
+        if name is None:
+            frame = self.docmap() if table == "docmap" else self.__dict__["_decoded_df"]
+            name = f"{self._view_prefix}_{table}"
+            frame.createOrReplaceTempView(name)
+            self._views[table] = name
+        return name
+
+    def _drop_views(self) -> None:
+        sqltext.drop_views(self.spark, list(self._views.values()))
+        self._views.clear()
+
     @property
     def has_positions(self) -> bool:
         """Whether the blocks carry term positions (``store_positions``)."""
         return bool(self.plan.get("store_positions", True))
 
-    def postings(self) -> DataFrame:
-        cached = self.__dict__.get("_postings_df")
-        if cached is not None:
-            return self._routed_filter(cached)
+    @cached_property
+    def _postings_table(self) -> DataFrame:
         path = self.paths["postings"]
         if not os.path.exists(path):
             # all-empty text field -> zero posting rows -> the _row=p
@@ -175,6 +215,10 @@ class InvertedIndex:
                 .drop("_row")
             )
         return self._routed_filter(self.spark.read.parquet(path))
+
+    def postings(self) -> DataFrame:
+        cached = self.__dict__.get("_postings_df")
+        return self._postings_table if cached is None else cached
 
     # ---- routed search (custom routing -> one-segment pruning) ----
 
@@ -251,19 +295,23 @@ class InvertedIndex:
         self.__dict__["_block_meta_df"] = meta
         return meta
 
-    def docmap(self) -> DataFrame:
-        cached = self.__dict__.get("_docmap_view")
-        if cached is not None:
-            return cached
+    @cached_property
+    def _docmap_table(self) -> DataFrame:
         # a merged/compacted index references the source docmap instead
         # of copying it (opensearch_spark.index.merge.merge_index)
         d = self.plan.get("docmap_dir") or self.paths["docmap"]
         return self._routed_filter(self.spark.read.parquet(d))
 
+    def docmap(self) -> DataFrame:
+        cached = self.__dict__.get("_docmap_view")
+        return self._docmap_table if cached is None else cached
+
     def dictionary(self) -> DataFrame:
         cached = self.__dict__.get("_dictionary_df")
-        if cached is not None:
-            return cached
+        return self._dictionary_table if cached is None else cached
+
+    @cached_property
+    def _dictionary_table(self) -> DataFrame:
         d = self.spark.read.parquet(self.paths["dictionary"])
         if self.plan.get("incremental"):
             # streaming builds append per-batch deltas; aggregate on read
@@ -306,29 +354,21 @@ class InvertedIndex:
     def term_stats(self, terms: Sequence[str]) -> pd.DataFrame:
         """df/total_tf for the given terms (tiny: collected to the driver,
         then inlined into the scoring plan — the DFS phase analog).
-        Per-term results are memoized driver-side (the reference caches
-        term statistics in the query cache; an immutable index makes
-        this always-valid).  :meth:`persist` fills the memo with the
-        whole dictionary and marks it complete; a term missing from a
-        complete memo is absent, with no lookup job."""
+        Answered from a driver-side memo of the whole dictionary (the
+        reference caches term statistics in the query cache; the handle
+        is a snapshot, so the memo stays valid): the first miss loads it
+        (:meth:`_load_term_stats`, which :meth:`persist` also calls) and
+        marks it complete, after which a term it lacks is absent, with
+        no lookup job."""
         if not terms:
             return pd.DataFrame({"term": [], "df": [], "total_tf": [], "n_blocks": []})
         cache = self.__dict__.setdefault("_term_stats_cache", {})
         want = sorted(set(terms))
         missing = [t for t in want if t not in cache]
-        if missing and self.__dict__.get("_term_stats_complete"):
-            cache.update(dict.fromkeys(missing))  # negative cache: absent
-        elif missing:
-            rows = (
-                self.dictionary()
-                .where(_term_in(missing))
-                .selectExpr("term", "df", "total_tf", "n_blocks")
-                .collect()
-            )
-            for r in rows:
-                cache[r["term"]] = (int(r["df"]), int(r["total_tf"]), int(r["n_blocks"]))
-            for t in missing:
-                cache.setdefault(t, None)  # negative cache: absent term
+        if missing and not self.__dict__.get("_term_stats_complete"):
+            self._load_term_stats()
+        for t in missing:
+            cache.setdefault(t, None)  # negative cache: absent term
         hit = [(t, cache[t]) for t in want if cache[t] is not None]
         return pd.DataFrame(
             {
@@ -338,6 +378,35 @@ class InvertedIndex:
                 "n_blocks": [v[2] for _, v in hit],
             }
         )
+
+    def _load_term_stats(self) -> None:
+        """Collect the whole dictionary (one Arrow collect) into the
+        :meth:`term_stats` memo and mark it complete."""
+        stats = self.dictionary().select("term", "df", "total_tf", "n_blocks").toPandas()
+        values = zip(*(stats[c].astype("int64").tolist() for c in ("df", "total_tf", "n_blocks")))
+        self.__dict__.setdefault("_term_stats_cache", {}).update(
+            zip(stats["term"].tolist(), values)
+        )
+        self.__dict__["_term_stats_complete"] = True
+
+    def postings_relation(
+        self, terms: Sequence[str], with_positions: bool = False
+    ) -> sqltext.Relation:
+        """:meth:`postings_for_terms` as a relation for a SQL statement.
+        On a persisted handle it is SQL text over the decoded pin's view
+        (no DataFrame is built); otherwise the block decode, whose
+        ``mapInArrow`` a ``term IN (...)`` filter would not pass, enters
+        through a request view."""
+        terms = sorted(set(terms))
+        if terms and self._serves_decoded(with_positions):
+            cols = ", ".join(_POSTINGS_SCHEMA[with_positions].fieldNames())
+            return sqltext.Relation(
+                f"(SELECT {cols} FROM {self.view('decoded')} WHERE {_term_in(terms)})"
+            )
+        return sqltext.Relation.of(self.postings_for_terms(terms, with_positions))
+
+    def _serves_decoded(self, with_positions: bool) -> bool:
+        return "_decoded_df" in self.__dict__ and (self.has_positions or not with_positions)
 
     def postings_for_terms(
         self, terms: Sequence[str], with_positions: bool = False
@@ -353,9 +422,8 @@ class InvertedIndex:
         terms = sorted(set(terms))
         if not terms:
             return self._empty_postings(with_positions)
-        decoded = self.__dict__.get("_decoded_df")
-        if decoded is not None and (self.has_positions or not with_positions):
-            return decoded.where(_term_in(terms)).select(
+        if self._serves_decoded(with_positions):
+            return self.__dict__["_decoded_df"].where(_term_in(terms)).select(
                 *_POSTINGS_SCHEMA[with_positions].fieldNames()
             )
         blocks = self.postings().where(_term_in(terms))

@@ -1,17 +1,29 @@
-"""Compile DSL queries to DataFrame plans and run top-k retrieval.
+"""Compile DSL queries to Spark plans and run top-k retrieval.
 
 Query lifecycle (the Spark mapping of SURVEY.md §3.1):
 
   parse (dsl.from_dict) -> analyze query text (same analyzer as the index)
-  -> plan: read postings for the query's terms (a ``term IN (...)`` filter
-  over the persisted index's decoded pin, else a Parquet term-pushdown
-  scan and decode), per-term stats from the reader's driver-side memo
-  ride the plan as map literals (the DFS/global-stats phase), score per
-  (term, doc) with JVM-side BM25 expressions, group by docID, apply
-  boolean semantics, join the docmap's id columns for the tie-break,
-  then distributed top-k (TakeOrderedAndProject) and fetch (broadcast
-  join of the k winners back to the docmap — the fetch phase of
-  ``search/fetch/FetchPhase.java:109-143``).
+  -> query phase: ONE Spark SQL statement (``SearchEngine.search``) over
+  the scored relation: the tombstone anti-join, ``terminate_after``,
+  ``min_score``, ``search_after``, the join of the docmap's id and sort
+  columns for the tie-break, and the distributed top-k
+  (TakeOrderedAndProject) with its offset -> fetch phase: DataFrame
+  operations on the k winners only (stored fields by a broadcast join
+  back to the docmap, ``script_fields``, docvalue formats — the fetch
+  phase of ``search/fetch/FetchPhase.java:109-143``).
+
+  The term family (match OR/AND/minimum_should_match, text term, fused
+  dis_max, the empty relation) is rendered as SQL text (``sqltext``):
+  postings for the query's terms (a ``term IN (...)`` filter over the
+  persisted index's decoded pin, else a Parquet term-pushdown scan and
+  decode), per-term stats from the reader's driver-side memo as map
+  literals (the DFS/global-stats phase), per (term, doc) JVM-side BM25
+  expressions, a GROUP BY docID with the boolean semantics.  Every
+  other scorer builds a DataFrame that enters the statement through a
+  request-scoped temp view (``sqltext.Relation``).  The index tables
+  are views the handle registers once (``InvertedIndex.view``), so a
+  warm search on a persisted index is one parse, one analysis and a
+  handful of py4j round trips.
 
   On a persisted index the postings and docmap pins are co-partitioned
   on docID, so the group-by and the id join run inside each partition,
@@ -27,6 +39,7 @@ tie-break the reference gets from shard-internal docIDs
 from __future__ import annotations
 
 import contextlib
+import copy
 import fnmatch
 from collections import Counter
 from functools import reduce
@@ -780,6 +793,14 @@ INLINE_STATS_MAX_TERMS = 64
 WAND_AUTO_MIN_BLOCKS = 262_144
 
 
+# a constant-false relation the optimizer can prove empty: it folds the
+# whole search plan above it to an empty LocalRelation, so collecting
+# runs no job (an RDD-backed empty frame still runs its jobs)
+_EMPTY = sqltext.Relation(
+    "(SELECT CAST(NULL AS BIGINT) AS _docid, CAST(NULL AS DOUBLE) AS score WHERE false)"
+)
+
+
 class SearchEngine:
     def __init__(
         self,
@@ -825,6 +846,15 @@ class SearchEngine:
         # Spark SQL expression appended to the docmap for the duration
         # of one request via the derived_fields() context manager
         self._derived: Dict[str, str] = {}
+
+    def reopened(self) -> "SearchEngine":
+        """This engine over a new handle on its index directory
+        (:meth:`InvertedIndex.reopen`): it sees every commit made since
+        this engine's handle took its snapshot.  Write paths read the
+        index through it."""
+        fresh = copy.copy(self)
+        fresh.index = self.index.reopen()
+        return fresh
 
     def release_caches(self) -> None:
         """Unpersist every intermediate this engine pinned (explicit
@@ -915,6 +945,12 @@ class SearchEngine:
         (score desc, id_cols asc). Default size 10 / from 0 mirrors
         ``SearchSourceBuilder.java:168-170``.
 
+        The query phase is one SQL statement over the scored relation
+        (:meth:`_relation`) and the handle's docmap view; the fetch
+        phase (stored fields, ``script_fields``, docvalue formats) runs
+        on its k rows.  Tombstones are read per request; everything
+        else comes from the handle's snapshot of the index.
+
         ``sort`` = [(field, "asc"|"desc"), ...] switches to field sort
         (``FieldSortBuilder.java``: doc-values sort, missing last,
         ``_score`` usable as a key); id columns always tie-break.
@@ -958,6 +994,9 @@ class SearchEngine:
             # prune decision so 0 keeps the WAND fast path eligible
             terminate_after = None
         q = Q.from_dict(query) if isinstance(query, dict) else query
+        from opensearch_spark.index.lifecycle import tombstone_docids
+
+        dels = tombstone_docids(self.spark, self.index.index_dir)
         scored = None
         if prune is None:
             prune = self._wand_auto(q)
@@ -972,7 +1011,7 @@ class SearchEngine:
             # drops docs by score bound — composing them would cap a
             # different (score-biased) subset than the reference collects
             and terminate_after is None
-            and not self._has_deletes()
+            and dels is None
             # block-max bounds are derived from the BM25 formula; any other
             # configured similarity scores densely (similarities.py scope)
             and self.similarity.is_bm25
@@ -982,9 +1021,79 @@ class SearchEngine:
             # overshooting t and pruning blocks holding live top-k docs —
             # fall back to dense scoring until compaction expunges them
             scored = self._score_pruned(q, size + from_)
-        if scored is None:
-            scored = self._score(q)
-        scored = self._apply_deletes(scored)
+        rel = self._relation(q) if scored is None else sqltext.Relation.of(scored)
+        # the docmap: the handle's view, or this request's derived columns
+        dm = (
+            sqltext.Relation.of(self.docmap()) if self._derived
+            else sqltext.Relation(self.index.view("docmap"))
+        )
+        fetch_cols = list(source_cols) if source_cols else self.id_cols
+        fetch_cols = [c for c in dict.fromkeys(self.id_cols + list(fetch_cols))]
+        sort_cols: List[str] = []
+        # column-valued sort keys, computed on the scored docs before
+        # they enter the statement
+        col_keys: Dict[str, Column] = {}
+        order: List[Tuple[str, str]] = []  # (key column, direction), nulls last
+        for si, (col, direction) in enumerate(sort or ()):
+            if isinstance(col, dict) and "_geo_distance" in col:
+                # ``_geo_distance`` sort (GeoDistanceSortBuilder.java):
+                # a computed haversine-km column over the doc-values
+                # lat/lon pair, arc distance like the geo_distance query
+                spec = col["_geo_distance"]
+                gfield = next(k for k in spec if k not in ("order", "unit"))
+                pt = spec[gfield]
+                lat_c, lon_c = _geo_cols(gfield)
+                name = f"_geo_km_{si}"
+                col_keys[name] = _haversine_km(
+                    lat_c, lon_c, float(pt["lat"]), float(pt["lon"])
+                )
+                sort_cols.extend(_geo_col_names(gfield))
+            elif isinstance(col, dict) and "_script" in col:
+                # script sort (ScriptSortBuilder.java): a computed
+                # Spark SQL expression (the lang-painless analog,
+                # SURVEY §2.9) over doc-values columns; ``fields``
+                # declares the columns the expression reads (the
+                # reference's doc['field'] accesses made explicit)
+                spec = col["_script"]
+                name = f"_script_sort_{si}"
+                col_keys[name] = painless.script_expr(
+                    spec["source"], spec.get("lang"),
+                    params=spec.get("params"), score=F.col("score"),
+                )
+                sort_cols.extend(spec.get("fields", []))
+                sort_cols.extend(painless.extract_doc_fields(spec["source"]))
+            elif col == "_score":
+                name = "score"
+            else:
+                name = col
+                sort_cols.append(col)
+            order.append((name, direction))
+        if not sort:
+            order = [("score", "desc")]
+        # tie-break needs the id columns: the docmap's id and sort
+        # columns join the scored docs before the distributed top-k
+        # (TakeOrderedAndProject)
+        dm_cols = list(dict.fromkeys(list(self.id_cols) + sort_cols))
+        s_cols = ["_docid", "score"]
+        if col_keys:
+            keyed = self._frame(rel).join(self.docmap().select("_docid", *dm_cols), "_docid")
+            rel = sqltext.Relation.of(keyed.select(
+                "_docid", "score", *dm_cols, *[e.alias(n) for n, e in col_keys.items()]
+            ))
+            s_cols += dm_cols + list(col_keys)
+
+        def cols(qual: str) -> str:
+            return ", ".join(f"{qual}{sqltext.ident(c)}" for c in s_cols)
+
+        src = rel
+        if dels is not None:
+            # soft deletes: a tombstone anti-join, read per request
+            tomb = sqltext.Relation.of(dels)
+            src = src.query(
+                f"SELECT /*+ BROADCAST(t) */ {cols('s.')} FROM {src.sql} s"
+                f" LEFT ANTI JOIN {tomb.sql} t ON s._docid = t._docid",
+                tomb,
+            )
         if terminate_after is not None:
             # ``terminate_after`` (SearchSourceBuilder.java:106,534;
             # QueryPhase's EarlyTerminatingCollector): each shard stops
@@ -995,102 +1104,36 @@ class SearchEngine:
             # shard" subset, computed declaratively (Spark has no
             # mid-scan collector abort; the cap bounds downstream work
             # — fetch, ranking — which is where the reference saves too)
-            from pyspark.sql import Window as _W
-
-            seg = self.docmap().select("_docid", "_seg")
-            w = _W.partitionBy("_seg").orderBy(F.asc("_docid"))
-            scored = (
-                scored.join(seg, "_docid")
-                .withColumn("_ta_rn", F.row_number().over(w))
-                .filter(F.col("_ta_rn") <= int(terminate_after))
-                .drop("_ta_rn", "_seg")
+            src = src.query(
+                f"SELECT {cols('')} FROM (SELECT {cols('s.')}, row_number() OVER"
+                " (PARTITION BY d._seg ORDER BY s._docid) AS _ta_rn"
+                f" FROM {src.sql} s JOIN {dm.sql} d ON s._docid = d._docid)"
+                f" WHERE _ta_rn <= {int(terminate_after)}",
+                dm,
             )
+        if not col_keys:
+            src = src.query(
+                f"SELECT {cols('s.')}, {', '.join('d.' + sqltext.ident(c) for c in dm_cols)}"
+                f" FROM {src.sql} s JOIN {dm.sql} d ON s._docid = d._docid",
+                dm,
+            )
+        where = []
         if min_score is not None:
             # ``min_score`` (SearchSourceBuilder.java minScore; applied
             # post-scoring like the reference's MinScoreCollector) —
             # safe under WAND pruning, which only ever drops LOWER-
             # scoring docs than the returned top-k
-            scored = scored.filter(F.col("score") >= F.lit(float(min_score)))
-        fetch_cols = list(source_cols) if source_cols else self.id_cols
-        fetch_cols = [c for c in dict.fromkeys(self.id_cols + list(fetch_cols))]
-        sort_cols: List[str] = []
-        geo_sort_exprs: Dict[str, Column] = {}
-        if sort:
-            order = []
-            for si, (col, direction) in enumerate(sort):
-                if isinstance(col, dict) and "_geo_distance" in col:
-                    # ``_geo_distance`` sort (GeoDistanceSortBuilder.java):
-                    # a computed haversine-km column over the doc-values
-                    # lat/lon pair, arc distance like the geo_distance
-                    # query; the source columns ride the docmap join and
-                    # the expression is added post-join
-                    spec = col["_geo_distance"]
-                    gfield = next(k for k in spec if k not in ("order", "unit"))
-                    pt = spec[gfield]
-                    lat_c, lon_c = _geo_cols(gfield)
-                    name = f"_geo_km_{si}"
-                    geo_sort_exprs[name] = _haversine_km(
-                        lat_c, lon_c, float(pt["lat"]), float(pt["lon"])
-                    )
-                    sort_cols.extend(_geo_col_names(gfield))
-                    c = F.col(name)
-                elif isinstance(col, dict) and "_script" in col:
-                    # script sort (ScriptSortBuilder.java): a computed
-                    # Spark SQL expression (the lang-painless analog,
-                    # SURVEY §2.9) over doc-values columns; ``fields``
-                    # declares the columns the expression reads (the
-                    # reference's doc['field'] accesses made explicit)
-                    spec = col["_script"]
-                    name = f"_script_sort_{si}"
-                    geo_sort_exprs[name] = painless.script_expr(
-                        spec["source"], spec.get("lang"),
-                        params=spec.get("params"), score=F.col("score"),
-                    )
-                    sort_cols.extend(spec.get("fields", []))
-                    sort_cols.extend(painless.extract_doc_fields(spec["source"]))
-                    c = F.col(name)
-                elif col == "_score":
-                    c = F.col("score")
-                else:
-                    c = F.col(col)
-                    sort_cols.append(col)
-                order.append(
-                    c.desc_nulls_last() if direction == "desc" else c.asc_nulls_last()
-                )
-            order += [F.asc(c) for c in self.id_cols]
-        else:
-            order = [F.desc("score")] + [F.asc(c) for c in self.id_cols]
-        # tie-break needs the id columns: join a column-pruned projection of
-        # the docmap before the distributed top-k (TakeOrderedAndProject)
-        dm_ids = self.docmap().select(
-            "_docid", *dict.fromkeys(list(self.id_cols) + sort_cols)
-        )
-        joined = scored.join(dm_ids, "_docid")
-        for name, expr in geo_sort_exprs.items():
-            joined = joined.withColumn(name, expr)
+            where.append(f"score >= {sqltext.double(min_score)}")
+        args: Optional[dict] = None
         if search_after is not None:
-            keys = []
-            if sort:
-                for si, ((col, direction), val) in enumerate(
-                    zip(sort, search_after)
-                ):
-                    if isinstance(col, dict) and "_geo_distance" in col:
-                        keys.append((f"_geo_km_{si}", direction, val))
-                    elif isinstance(col, dict) and "_script" in col:
-                        keys.append((f"_script_sort_{si}", direction, val))
-                    else:
-                        keys.append((col if col != "_score" else "score", direction, val))
-                for c, val in zip(self.id_cols, search_after[len(sort):]):
-                    keys.append((c, "asc", val))
-            else:
-                keys.append(("score", "desc", search_after[0]))
-                for c, val in zip(self.id_cols, search_after[1:]):
-                    keys.append((c, "asc", val))
+            # keys bind as parameters: each keeps the type F.lit gives it
+            keys = [(c, d, v) for (c, d), v in zip(order, search_after)]
+            keys += [(c, "asc", v) for c, v in zip(self.id_cols, search_after[len(order):])]
             nanos = self._mapping_info().get("nanos", {})
-            cond = F.lit(False)
-            eq = F.lit(True)
-            for col, direction, val in keys:
-                c = F.col(col)
+            args = {}
+            cond, eq = "false", "true"
+            for i, (col, direction, val) in enumerate(keys):
+                c = sqltext.ident(col)
                 if isinstance(val, str) and col in nanos:
                     # date_nanos search_after accepts the field's own
                     # date format as well as the epoch-nanos long
@@ -1115,23 +1158,30 @@ class SearchEngine:
                 if val is None:
                     # a null key sorts LAST (missing=_last default);
                     # nothing follows it on this key
-                    cmp = F.lit(False)
-                    key_eq = c.isNull()
+                    cmp, key_eq = "false", f"{c} IS NULL"
                 else:
                     # null keys sort after every concrete value in
                     # BOTH directions (nulls-last), so they remain
                     # reachable past any non-null search_after
-                    cmp = c.isNull() | (
-                        (c < F.lit(val)) if direction == "desc"
-                        else (c > F.lit(val))
-                    )
-                    key_eq = c.eqNullSafe(F.lit(val))
-                cond = cond | (eq & cmp)
-                eq = eq & key_eq
-            joined = joined.filter(cond)
-        topk = joined.orderBy(*order).limit(from_ + size)
-        if from_:
-            topk = topk.offset(from_)
+                    args[f"sa{i}"] = val
+                    op = "<" if direction == "desc" else ">"
+                    cmp = f"({c} IS NULL OR {c} {op} :sa{i})"
+                    key_eq = f"{c} <=> :sa{i}"
+                cond = f"({cond} OR ({eq} AND {cmp}))"
+                eq = f"({eq} AND {key_eq})"
+            where.append(cond)
+        order_sql = [
+            f"{sqltext.ident(c)} {'DESC' if d == 'desc' else 'ASC'} NULLS LAST"
+            for c, d in order
+        ] + [f"{sqltext.ident(c)} ASC NULLS FIRST" for c in self.id_cols]
+        topk = src.query(
+            f"SELECT * FROM {src.sql}"
+            + (f" WHERE {' AND '.join(where)}" if where else "")
+            + f" ORDER BY {', '.join(order_sql)} LIMIT {int(size)}"
+            + (f" OFFSET {int(from_)}" if from_ else "")
+        )
+        # ---- fetch phase: stored fields, script_fields and formats on
+        # the k winners
         fetch_cols = list(dict.fromkeys(fetch_cols + sort_cols))
         # script_fields (SearchSourceBuilder scriptFields; the fetch-phase
         # projection UDF context of SURVEY §2.9): each value is
@@ -1155,29 +1205,6 @@ class SearchEngine:
         docvalue_fields = docvalue_fields or {}
         fetch_cols = list(dict.fromkeys(fetch_cols + list(docvalue_fields)))
         extra = [c for c in fetch_cols if c not in self.id_cols and c not in sort_cols]
-        if extra:
-            # fetch phase: the k winners are tiny -> broadcast them into the
-            # docmap join so the stored-fields lookup is a map-side join.
-            # Doc-value names resolve struct paths (`obj.leaf`) and the
-            # synthetic `.keyword` multifield (same stored value as its
-            # text parent — TextFieldMapper's keyword sub-field), each
-            # aliased back to the REQUESTED name so the response keys
-            # echo the request
-            dm_cols = set(self.docmap().columns)
-
-            def _dv_in(name):
-                if name in dm_cols:
-                    return F.col(f"`{name}`")
-                path = name[:-8] if name.endswith(".keyword") else name
-                return F.col(path).alias(name)
-
-            dm = self.docmap().select("_docid", *[_dv_in(c) for c in extra])
-            topk = dm.join(F.broadcast(topk), "_docid")
-        for name, spec in script_fields.items():
-            topk = topk.withColumn(name, painless.script_expr(
-                spec["source"], spec.get("lang"),
-                params=spec.get("params"), score=F.col("score"),
-            ))
         # docvalue formats render in the FINAL projection, after the
         # Sort: formatting in place before orderBy would sort (and feed
         # search_after) string renderings instead of the raw values
@@ -1233,11 +1260,43 @@ class SearchEngine:
                 )
             return f"date_format(CAST({c} AS TIMESTAMP), {sqltext.string(fmt)}) AS {c}"
 
+        out_cols = [_out(c) for c in list(fetch_cols) + list(script_fields)]
+        if not (extra or script_fields) and all(isinstance(c, str) for c in out_cols):
+            # nothing to fetch: the projection closes the statement
+            return self._frame(
+                topk.query(f"SELECT {', '.join(out_cols)}, score FROM {topk.sql}"), args
+            )
+        topk = self._frame(topk, args)
+        if extra:
+            # fetch phase: the k winners are tiny -> broadcast them into the
+            # docmap join so the stored-fields lookup is a map-side join.
+            # Doc-value names resolve struct paths (`obj.leaf`) and the
+            # synthetic `.keyword` multifield (same stored value as its
+            # text parent — TextFieldMapper's keyword sub-field), each
+            # aliased back to the REQUESTED name so the response keys
+            # echo the request
+            names = set(self.docmap().columns)
+
+            def _dv_in(name):
+                if name in names:
+                    return F.col(f"`{name}`")
+                path = name[:-8] if name.endswith(".keyword") else name
+                return F.col(path).alias(name)
+
+            stored = self.docmap().select("_docid", *[_dv_in(c) for c in extra])
+            topk = stored.join(F.broadcast(topk), "_docid")
+        for name, spec in script_fields.items():
+            topk = topk.withColumn(name, painless.script_expr(
+                spec["source"], spec.get("lang"),
+                params=spec.get("params"), score=F.col("score"),
+            ))
         if extra or script_fields:
             # the fetch join does not keep the top-k order: sort the k
             # rows again (a plain top-k is already in order)
-            topk = topk.orderBy(*order)
-        out_cols = [_out(c) for c in list(fetch_cols) + list(script_fields)]
+            topk = topk.orderBy(*[
+                F.col(c).desc_nulls_last() if d == "desc" else F.col(c).asc_nulls_last()
+                for c, d in order
+            ], *[F.asc(c) for c in self.id_cols])
         return topk.select(
             *[F.expr(c) if isinstance(c, str) else c for c in out_cols], "score"
         )
@@ -1704,11 +1763,6 @@ class SearchEngine:
             return False
         return int(stats["n_blocks"].sum()) >= WAND_AUTO_MIN_BLOCKS
 
-    def _has_deletes(self) -> bool:
-        from opensearch_spark.index.lifecycle import tombstone_docids
-
-        return tombstone_docids(self.spark, self.index.index_dir) is not None
-
     def _apply_deletes(self, scored: DataFrame) -> DataFrame:
         """Hide soft-deleted docs (tombstone anti-join; stats stay
         unchanged until compaction — the reference's soft-delete
@@ -1759,6 +1813,27 @@ class SearchEngine:
         field-partitioned layout)."""
         self.__dict__.setdefault("_field_engines", {})[field] = engine
 
+    def _frame(self, rel: sqltext.Relation, args: Optional[dict] = None) -> DataFrame:
+        return sqltext.run(self.spark, rel, args)
+
+    def _relation(self, q) -> sqltext.Relation:
+        """The scored relation (_docid, score) of ``q`` for a statement.
+        The term family (match, text term, fused dis_max, match_none)
+        is SQL text, with no DataFrame built; every other scorer builds
+        its DataFrame, which enters through a request view."""
+        if not self.__dict__.get("_field_engines"):
+            if isinstance(q, Q.Match):
+                return self._match_sql(q)
+            if isinstance(q, Q.Term) and q.field == self.text_col:
+                return self._terms_or_sql({str(q.value): 1}, required=1, boost=q.boost)
+            if isinstance(q, Q.MatchNone):
+                return _EMPTY
+            if isinstance(q, Q.DisMax):
+                fused = self._dismax_fused_sql(q)
+                if fused is not None:
+                    return fused
+        return sqltext.Relation.of(self._score(q))
+
     def _score(self, q) -> DataFrame:
         """DataFrame (_docid long, score double) of matching docs."""
         fe = self.__dict__.get("_field_engines")
@@ -1776,7 +1851,7 @@ class SearchEngine:
                 )
                 return mfe.score_multi_match(q)
         if isinstance(q, Q.Match):
-            return self._score_match(q)
+            return self._frame(self._match_sql(q))
         if isinstance(q, Q.MatchPhrase):
             return self._score_phrase(q)
         if isinstance(q, Q.MatchPhrasePrefix):
@@ -2132,7 +2207,7 @@ class SearchEngine:
 
     # ---- leaf scorers ----
 
-    def _score_match(self, m: Q.Match) -> DataFrame:
+    def _match_sql(self, m: Q.Match) -> sqltext.Relation:
         if m.field != self.text_col:
             raise ValueError(
                 f"match targets the indexed text field {self.text_col!r}, got {m.field!r}"
@@ -2140,7 +2215,7 @@ class SearchEngine:
         tokens = self.index.analyze(m.query)
         if not tokens:
             # zero_terms_query = NONE default (MatchQuery.java:381-390)
-            return self._empty_scored()
+            return _EMPTY
         weights = dict(Counter(tokens))
         n_clauses = len(tokens)
         if m.operator == "and":
@@ -2151,15 +2226,15 @@ class SearchEngine:
                 if m.minimum_should_match is None
                 else max(1, resolve_msm(m.minimum_should_match, n_clauses))
             )
-        return self._score_terms_or(weights, required=required, boost=m.boost)
+        return self._terms_or_sql(weights, required=required, boost=m.boost)
 
     def _per_term_scores(
         self, weights: dict, stats_override: Optional[dict] = None
-    ) -> Optional[DataFrame]:
+    ) -> Optional[sqltext.Relation]:
         """(term, _docid, s float, weight int) BM25 clause scores for the
         given term->weight map, or None when no term exists in the
         corpus.  Shared by the match scorer and cross_fields multi_match
-        (per-field postings decode; stats ride the plan as map literals
+        (per-field postings; stats ride the statement as map literals
         for small term sets, as a broadcast join above
         INLINE_STATS_MAX_TERMS — no shuffle either way).
 
@@ -2193,7 +2268,7 @@ class SearchEngine:
             )
             for t, df_, ttf_ in zip(stats["term"], stats["df"], stats["total_tf"])
         ]
-        post = self.index.postings_for_terms([r[0] for r in rows])
+        post = self.index.postings_relation([r[0] for r in rows])
         if len(rows) <= INLINE_STATS_MAX_TERMS:
             # the per-term constants are plan-time literals: look them up
             # in map literals on `term` instead of broadcast-joining a
@@ -2213,10 +2288,14 @@ class SearchEngine:
                 )
             )
         else:
-            stats_df = self.spark.createDataFrame(
+            stats_df = sqltext.Relation.of(self.spark.createDataFrame(
                 rows, "term string, idf double, df double, ttf double, weight int"
+            ))
+            post = post.query(
+                "SELECT /*+ BROADCAST(st) */ p.*, st.idf, st.df, st.ttf, st.weight"
+                f" FROM {post.sql} p JOIN {stats_df.sql} st ON p.term = st.term",
+                stats_df,
             )
-            post = post.join(F.broadcast(stats_df), "term")
             idf, df, ttf, weight = "idf", "df", "ttf", "weight"
         dl = bm25.norm_decode_sql("norm_byte")
         from opensearch_spark.query.similarities import Scripted
@@ -2224,20 +2303,20 @@ class SearchEngine:
         if isinstance(sim, Scripted):
             # a user function of Columns: the constants stay SQL, the
             # score is the function's own Column tree
-            return post.selectExpr(
-                "term", "_docid", "tf", f"{dl} AS dl", f"{df} AS df",
-                f"{ttf} AS ttf", f"{weight} AS weight",
-            ).select(
+            return sqltext.Relation.of(self._frame(post.query(
+                f"SELECT term, _docid, tf, {dl} AS dl, {df} AS df, {ttf} AS ttf,"
+                f" {weight} AS weight FROM {post.sql}"
+            )).select(
                 "term", "_docid",
                 sim.score_full_col(
                     F.col("tf"), F.col("dl"), F.col("df"), F.col("ttf"),
                     float(N), sum_dl, float(avgdl),
                 ).alias("s"),
                 "weight",
-            )
-        return post.selectExpr(
-            "term", "_docid", f"{sim.score_sql('tf', idf, dl)} AS s",
-            f"{weight} AS weight",
+            ))
+        return post.query(
+            f"SELECT term, _docid, {sim.score_sql('tf', idf, dl)} AS s,"
+            f" {weight} AS weight FROM {post.sql}"
         )
 
     def _score_common_terms(self, q: "Q.CommonTerms") -> DataFrame:
@@ -2310,22 +2389,21 @@ class SearchEngine:
     def _score_terms_or(
         self, weights: dict, required: int, boost: float = 1.0
     ) -> DataFrame:
+        return self._frame(self._terms_or_sql(weights, required, boost))
+
+    def _terms_or_sql(
+        self, weights: dict, required: int, boost: float = 1.0
+    ) -> sqltext.Relation:
         """OR/AND/minimum_should_match over weighted term scoring clauses
         (MatchQuery.java:182,321; Operator.java:53-58)."""
         per = self._per_term_scores(weights)
         if per is None:
-            return self._empty_scored()
-        score = F.expr(
-            f"sum(CAST(s AS DOUBLE) * weight) * {sqltext.double(boost)} AS score"
-        )
-        grouped = per.groupBy("_docid")
-        if required <= 1:
-            # every grouped doc matched at least one clause (weight >= 1)
-            return grouped.agg(score)
-        return (
-            grouped.agg(score, F.expr("sum(weight) AS matched_clauses"))
-            .where(f"matched_clauses >= {int(required)}")
-            .selectExpr("_docid", "score")
+            return _EMPTY
+        # every grouped doc matched at least one clause (weight >= 1)
+        having = f" HAVING sum(weight) >= {int(required)}" if required > 1 else ""
+        return per.query(
+            f"SELECT _docid, sum(CAST(s AS DOUBLE) * weight) * {sqltext.double(boost)}"
+            f" AS score FROM {per.sql} GROUP BY _docid{having}"
         )
 
     def _score_phrase(self, p: Q.MatchPhrase) -> DataFrame:
@@ -3400,10 +3478,14 @@ class SearchEngine:
         )
 
     def _score_dismax_fused(self, q: Q.DisMax) -> Optional[DataFrame]:
+        fused = self._dismax_fused_sql(q)
+        return None if fused is None else self._frame(fused)
+
+    def _dismax_fused_sql(self, q: Q.DisMax) -> Optional[sqltext.Relation]:
         """Single-scan dis_max for all-simple clauses (plain match-OR /
-        text term): decode the UNION of the clauses' terms once and
+        text term): read the UNION of the clauses' terms once and
         compute every clause's sum as a conditional aggregate in the
-        same groupBy — one postings scan + one shuffle instead of one
+        same GROUP BY — one postings scan + one shuffle instead of one
         scan per clause plus a union (the p99 driver q11_dismax plan).
         Returns None when any clause needs its own scorer (AND/msm
         semantics, phrases, non-text fields, ...) — the union path
@@ -3425,43 +3507,42 @@ class SearchEngine:
             else:
                 return None
         if not clauses:
-            return self._empty_scored()
+            return _EMPTY
         union_w = {t: 1 for w, _ in clauses for t in w}
         per = self._per_term_scores(union_w)
         if per is None:
-            return self._empty_scored()
+            return _EMPTY
+        # per-clause weight (query-term multiplicity, 0 for another
+        # clause's term) looked up in a map literal on the term column,
+        # so new terms reuse the compiled class; projected once, as a
+        # lookup repeated in the aggregates would be a common
+        # subexpression whose generated name follows the map's hash
+        weights = ", ".join(
+            "coalesce({}, 0.0D) AS _w{}".format(sqltext.map_lookup(
+                "term", {t: sqltext.double(float(c)) for t, c in w.items()}
+            ), i)
+            for i, (w, _) in enumerate(clauses)
+        )
+        per = per.query(f"SELECT _docid, s, {weights} FROM {per.sql}")
         aggs = []
-        for i, (w, b) in enumerate(clauses):
-            # per-clause weight (query-term multiplicity) as a CASE over
-            # the term column; stays inside whole-stage codegen
-            weight = F.lit(0.0)
-            for t, c in w.items():
-                weight = F.when(F.col("term") == t, F.lit(float(c))).otherwise(weight)
-            aggs.append(
-                F.sum(F.col("s").cast("double") * weight * F.lit(b)).alias(f"_c{i}")
-            )
-            aggs.append(
-                F.max(
-                    F.when(F.col("term").isin(list(w)), F.lit(1)).otherwise(0)
-                ).alias(f"_m{i}")
-            )
-        grouped = per.groupBy("_docid").agg(*aggs)
+        for i, (_, b) in enumerate(clauses):
+            aggs.append(f"sum(CAST(s AS DOUBLE) * _w{i} * {sqltext.double(b)}) AS _c{i}")
+            aggs.append(f"max(CASE WHEN _w{i} > 0.0D THEN 1 ELSE 0 END) AS _m{i}")
         # best/total over MATCHED clauses only (an unmatched clause's
         # conditional sum is 0.0, which must not count as a score)
-        svals = [
-            F.when(F.col(f"_m{i}") == 1, F.col(f"_c{i}"))
-            for i in range(len(clauses))
-        ]
-        best = F.greatest(*svals) if len(svals) > 1 else svals[0]
-        total = reduce(
-            lambda a, c: a + F.coalesce(c, F.lit(0.0)),
-            svals,
-            F.lit(0.0),
+        svals = [f"CASE WHEN _m{i} = 1 THEN _c{i} END" for i in range(len(clauses))]
+        best = f"greatest({', '.join(svals)})" if len(svals) > 1 else svals[0]
+        total = "0.0D"
+        for v in svals:
+            total = f"({total} + coalesce({v}, 0.0D))"
+        score = (
+            f"CAST(({best} + {sqltext.double(q.tie_breaker)} * ({total} - {best}))"
+            f" * {sqltext.double(q.boost)} AS DOUBLE)"
         )
-        score = best + F.lit(float(q.tie_breaker)) * (total - best)
-        return grouped.select(
-            "_docid", (score * F.lit(float(q.boost))).cast("double").alias("score")
+        grouped = per.query(
+            f"SELECT _docid, {', '.join(aggs)} FROM {per.sql} GROUP BY _docid"
         )
+        return grouped.query(f"SELECT _docid, {score} AS score FROM {grouped.sql}")
 
     def _score_boosting(self, q: Q.Boosting) -> DataFrame:
         pos = self._score(q.positive)
@@ -4192,14 +4273,7 @@ class SearchEngine:
         )
 
     def _empty_scored(self) -> DataFrame:
-        # a constant-false relation the optimizer can prove empty: it
-        # folds the whole search plan above it to an empty
-        # LocalRelation, so collecting runs no job (an RDD-backed empty
-        # frame still runs its jobs)
-        return self.spark.sql(
-            "SELECT CAST(NULL AS BIGINT) AS _docid, CAST(NULL AS DOUBLE) AS score"
-            " WHERE false"
-        )
+        return self._frame(_EMPTY)
 
     def _bm25_clause(
         self, base: DataFrame, tf: str, idf, boost: float = 1.0
@@ -4208,7 +4282,9 @@ class SearchEngine:
         clause (_docid, score): rows with tf 0 drop out, ``idf`` is a
         float or SQL text; one SQL projection, no Column tree."""
         if not isinstance(idf, str):
-            idf = sqltext.double(idf)
+            # a per-query constant: held in a map literal, not inlined
+            # into the generated code, so new terms compile nothing
+            idf = sqltext.held_double(idf, f"{tf} > 0")
         s = bm25.term_score_sql(
             tf, idf, bm25.norm_decode_sql("norm_byte"),
             self.index.stats["avgdl"], self.k1, self.b,

@@ -132,11 +132,12 @@ class MultiFieldEngine:
                 blended[t] = (max(prev[0], int(df_)), prev[1] + int(ttf_))
         parts = []
         for f, boost in fields:
-            per = self.engines[f]._per_term_scores(weights, stats_override=blended)
+            eng = self.engines[f]
+            per = eng._per_term_scores(weights, stats_override=blended)
             if per is None:
                 continue
             parts.append(
-                per.withColumn("s", F.col("s").cast("double") * F.lit(float(boost)))
+                eng._frame(per).withColumn("s", F.col("s").cast("double") * F.lit(float(boost)))
             )
         if not parts:
             return self.default._empty_scored()

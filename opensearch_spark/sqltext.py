@@ -15,13 +15,21 @@ exactly the value given, whatever the session config:
   (``CAST(X'..' AS STRING)``): backslash escapes depend on
   ``spark.sql.parser.escapedStringLiterals`` and Spark SQL has no
   quote-doubling, a hex literal has neither problem and cannot inject.
+
+A :class:`Relation` is a table expression in that text plus the
+DataFrames it reads through request-scoped temp views; :func:`run`
+turns it into a DataFrame with one ``spark.sql`` call.
 """
 
 from __future__ import annotations
 
+import itertools
 import math
 import re
-from typing import Mapping, Optional, Tuple
+from typing import TYPE_CHECKING, Mapping, NamedTuple, Optional, Tuple
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
 
 _PLAIN = re.compile(r"[0-9A-Za-z_]*")
 
@@ -72,3 +80,61 @@ def decimal_pattern(fmt: str) -> Optional[Tuple[str, int, str]]:
     if not m:
         return None
     return fmt[: m.start()], len(m.group(0).partition(".")[2]), fmt[m.end():]
+
+
+_REQUEST_VIEWS = itertools.count()
+
+
+class Relation(NamedTuple):
+    """A table expression (a view name or a parenthesized query) and
+    the request-scoped views it reads: ``(name, DataFrame)`` pairs that
+    :func:`run` registers for the one statement and drops after it."""
+
+    sql: str
+    frames: Tuple[Tuple[str, "DataFrame"], ...] = ()
+
+    @classmethod
+    def of(cls, df: "DataFrame") -> "Relation":
+        """A DataFrame as a relation: a fresh request view over it."""
+        name = f"_osreq{next(_REQUEST_VIEWS)}"
+        return cls(name, ((name, df),))
+
+    def query(self, sql: str, *others: "Relation") -> "Relation":
+        """The relation of the query ``sql`` (which reads this relation
+        and ``others``), carrying all of their views."""
+        frames = self.frames + tuple(f for o in others for f in o.frames)
+        return Relation(f"({sql})", frames)
+
+
+def run(spark: "SparkSession", rel: Relation, args: Optional[dict] = None) -> "DataFrame":
+    """``SELECT * FROM <rel>`` as a DataFrame: one parse and one analysis
+    for the whole relation.  ``args`` binds named parameter markers
+    (``:name``) with the value semantics of ``F.lit``.  Request views
+    are dropped once the statement is analyzed (the DataFrame holds the
+    resolved plan), with :func:`drop_views`."""
+    for name, df in rel.frames:
+        df.createOrReplaceTempView(name)
+    try:
+        return spark.sql(f"SELECT * FROM {rel.sql}", args)
+    finally:
+        drop_views(spark, [name for name, _ in rel.frames])
+
+
+def drop_views(spark: "SparkSession", names) -> None:
+    """Drop the temp views ``names`` without touching the cache.  The
+    public ``Catalog.dropTempView`` (and replacing a view) also uncaches
+    every cached frame whose plan equals the view's, which would drop a
+    pin that another view, or another handle on the same directory,
+    still serves from."""
+    if names:
+        catalog = spark._jsparkSession.sessionState().catalog()
+        for name in names:
+            catalog.dropTempView(name)
+
+
+def held_double(x: float, guard: str) -> str:
+    """A DOUBLE equal to ``x`` on every row where the boolean SQL
+    ``guard`` holds: the constant rides a map literal looked up by the
+    row's guard, so it is not folded into the generated code, and a new
+    value reuses the compiled class (see :func:`map_lookup`)."""
+    return f"map(true, {double(x)})[{guard}]"

@@ -336,3 +336,63 @@ def test_update_doc_crash_before_tombstone_heals(spark, lifecycle_idx):
     assert dels.filter(F.col("_docid") == victim_docid).count() == 1
     mdir = os.path.join(lifecycle_idx, "manifests")
     assert not [f for f in os.listdir(mdir) if f.startswith("update-intent-")]
+
+
+def test_handle_is_a_snapshot(spark, lifecycle_idx, monkeypatch):
+    """A handle keeps the tables it opened: a second search on it reads
+    no parquet, and after ``append_batch`` it still answers from its
+    snapshot (same doc count, same postings, same rows and scores),
+    while a reopened handle sees the batch."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from opensearch_spark.index.lifecycle import _append_cfg
+    from opensearch_spark.streaming.incremental import append_batch
+
+    idx = InvertedIndex(spark, lifecycle_idx)
+    eng = SearchEngine(idx)
+    q = {"match": {"text": "error"}}
+    before = eng.search(q, size=1000).collect()
+    n_docs = idx.stats["n_docs"]
+    reads = []
+    parquet = DataFrameReader.parquet
+
+    def counted(self, *paths, **kw):
+        reads.append(paths)
+        return parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counted)
+    assert eng.search(q, size=1000).collect() == before
+    assert reads == []
+    monkeypatch.undo()
+    batch = generate(spark, 160, partitions=2).filter(F.col("conv_id") >= "conv-00000120")
+    append_batch(spark, batch, lifecycle_idx, _append_cfg(eng), batch_id=0)
+    assert idx.stats["n_docs"] == n_docs
+    assert eng.search(q, size=1000).collect() == before
+    fresh = idx.reopen()
+    assert fresh.stats["n_docs"] > n_docs
+    ids = lambda rows: {(r["conv_id"], r["turn_idx"]) for r in rows}  # noqa: E731
+    after = SearchEngine(fresh).search(q, size=1000).collect()
+    assert any(c >= "conv-00000120" for c, _ in ids(after) - ids(before))
+
+
+def test_update_doc_twice_on_one_engine(spark, lifecycle_idx):
+    """``update_doc`` reads the live docmap, not the engine's snapshot:
+    an upsert then an update of the same new id through one engine
+    give ``created`` then ``updated``, leaving one live version."""
+    from opensearch_spark.index.lifecycle import update_doc
+
+    eng = SearchEngine(InvertedIndex(spark, lifecycle_idx))
+    assert eng.search({"match": {"text": "error"}}, size=5).collect()
+    row = dict(eng.index.docmap().select(
+        *eng.index.plan["input_fields"]
+    ).limit(1).collect()[0].asDict())
+    row.update({"conv_id": "c-twice", "turn_idx": 0, "text": "first twice version"})
+    ids = {"conv_id": "c-twice", "turn_idx": 0}
+    assert update_doc(spark, eng, ids, doc={"text": "x"}, upsert=row) == {"result": "created"}
+    assert update_doc(spark, eng, ids, doc={"text": "second twice version"}) == {
+        "result": "updated"}
+    fresh = SearchEngine(InvertedIndex(spark, lifecycle_idx))
+    rows = fresh.search({"term": {"conv_id": "c-twice"}}, size=10,
+                        source_cols=["text"]).collect()
+    assert [(r["conv_id"], r["turn_idx"], r["text"]) for r in rows] == [
+        ("c-twice", 0, "second twice version")]

@@ -115,9 +115,30 @@ def test_match_on_new_terms_compiles_nothing(spark, index_dir, engine, persisted
         rows = []
         assert _compiles(spark, lambda: rows.extend(eng.search(q, size=10).collect())) == 0
         assert rows
+        # phrase idf and fused dis_max clause weights are held in map
+        # literals too: a warmed shape on new terms compiles nothing
+        for warm, new in NEW_TERM_SHAPES:
+            eng.search(warm, size=10).collect()
+            rows = []
+            run = lambda: rows.extend(eng.search(new, size=10).collect())  # noqa: E731
+            assert _compiles(spark, run) == 0, new
+            assert rows, new
     finally:
         if persisted:
             idx.unpersist()
+
+
+def _dis_max(match, term):
+    return {"dis_max": {"queries": [{"match": {"text": match}},
+                                    {"term": {"text": term}}],
+                        "tie_breaker": 0.3}}
+
+
+# (warming query, same shape on other terms); every term is in the corpus
+NEW_TERM_SHAPES = [
+    ({"match_phrase": {"text": "error handling"}}, {"match_phrase": {"text": "slow query"}}),
+    (_dis_max("error handling", "timeout"), _dis_max("slow query", "planner")),
+]
 
 
 def _py4j_round_trips(spark, fn) -> int:
@@ -156,6 +177,25 @@ def test_match_plan_build_py4j_budget(engine):
     engine.search(q, size=10)
     calls = _py4j_round_trips(engine.spark, lambda: engine.search(q, size=10))
     assert calls <= 300, calls
+
+
+def test_persisted_match_py4j_budget(spark, index_dir):
+    """On a persisted handle, ``search()`` of a warm 2-term match is one
+    SQL statement over the handle's views: at most 30 py4j round trips
+    (about 106 when the query phase was a chain of DataFrame
+    operations)."""
+    from opensearch_spark.index.reader import InvertedIndex
+    from opensearch_spark.query.executor import SearchEngine
+
+    idx = InvertedIndex(spark, index_dir).persist()
+    try:
+        eng = SearchEngine(idx)
+        q = {"match": {"text": "error handling"}}
+        eng.search(q, size=10).collect()
+        calls = _py4j_round_trips(spark, lambda: eng.search(q, size=10))
+        assert calls <= 30, calls
+    finally:
+        idx.unpersist()
 
 
 def _jobs_in_group(spark, group: str, fn) -> int:
@@ -751,3 +791,76 @@ def test_positional_scorers_have_no_python_eval(engine, shape):
     nodes = _plan_nodes(df)
     assert "ArrowEvalPython" not in nodes and "BatchEvalPython" not in nodes, nodes
     assert "MapInArrow" in nodes, nodes
+
+
+PIN_SURVIVAL_SEARCHES = [
+    ({"match": {"text": "error handling"}}, {}),
+    ({"match": {"text": {"query": "error handling", "operator": "and"}}}, {}),
+    ({"match": {"text": {"query": "slow query planner", "minimum_should_match": 2}}}, {}),
+    ({"term": {"text": "timeout"}}, {}),
+    ({"term": {"text": "Timeout"}}, {}),
+    ({"match_phrase": {"text": "error handling"}}, {}),
+    ({"match_phrase": {"text": {"query": "slow planner", "slop": 2}}}, {}),
+    (_dis_max("error handling", "timeout"), {}),
+    ({"dis_max": {"queries": [{"match_phrase": {"text": "error handling"}},
+                              {"match": {"text": "the"}}]}}, {}),
+    ({"bool": {"must": [{"match": {"text": "error"}}],
+               "filter": [{"term": {"role": "user"}}]}}, {}),
+    ({"bool": {"should": [{"match": {"text": "timeout"}}],
+               "must_not": [{"match": {"text": "error"}}]}}, {}),
+    ({"match_all": {}}, {}),
+    ({"intervals": {"text": {"match": {"query": "slow planner", "max_gaps": 2}}}}, {}),
+    ({"match": {"text": "error handling"}}, {"source_cols": ["role", "text"]}),
+    ({"match": {"text": "error"}}, {"sort": [("turn_idx", "asc")]}),
+    ({"match": {"text": "error"}}, {"search_after": [5.0, "conv-00000100", 0]}),
+    ({"match": {"text": "error"}}, {"min_score": 3.0, "from_": 2}),
+    ({"match": {"text": "error"}}, {"terminate_after": 3}),
+    ({"match": {"text": "error"}}, {"derived": {"tl": "length(text)"},
+                                    "source_cols": ["tl"]}),
+    ({"match": {"text": "error"}}, {"script_fields": {"twice": {
+        "source": "score * 2", "fields": []}}}),
+]
+
+
+def test_pins_survive_searches(spark, index_dir):
+    """Searches never drop or replace a view over a pin (either would
+    uncache it): after 20 searches of mixed shapes and options on a
+    persisted handle, the session cache manager still finds every pin
+    and the docmap view."""
+    from opensearch_spark.index.reader import _PINS, InvertedIndex
+    from opensearch_spark.query.executor import SearchEngine
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    found = lambda df: cache.lookupCachedData(df._jdf).isDefined()  # noqa: E731
+    idx = InvertedIndex(spark, index_dir).persist()
+    try:
+        eng = SearchEngine(idx)
+        assert len(PIN_SURVIVAL_SEARCHES) == 20
+        for q, kw in PIN_SURVIVAL_SEARCHES:
+            eng.search(q, size=10, **kw).collect()
+        for key in _PINS:
+            assert found(idx.__dict__[key]), key
+        assert found(spark.table(idx.view("docmap")))
+    finally:
+        idx.unpersist()
+
+
+def test_term_stats_load_once_per_handle(spark, index_dir, monkeypatch):
+    """The first term-stats miss loads the whole dictionary into the
+    handle's memo and marks it complete, unpersisted handles too: a
+    second search with new terms on the same handle runs no dictionary
+    job, and a term the memo lacks is absent without a lookup."""
+    from opensearch_spark.index.reader import InvertedIndex
+    from opensearch_spark.query.executor import SearchEngine
+
+    idx = InvertedIndex(spark, index_dir)
+    eng = SearchEngine(idx)
+    assert eng.search({"match": {"text": "error handling"}}, size=10).collect()
+    assert idx.__dict__.get("_term_stats_complete")
+    loads = []
+    monkeypatch.setattr(idx, "_load_term_stats", lambda: loads.append(1))
+    assert eng.search({"match": {"text": "timeout planner"}}, size=10).collect()
+    lookup = lambda: idx.term_stats(["slow", "query", "Unseen"])  # noqa: E731
+    assert _jobs_in_group(spark, "memo-lookup", lookup) == 0
+    assert len(idx.term_stats(["slow", "query", "Unseen"])) == 2
+    assert loads == []

@@ -195,6 +195,36 @@ def test_persisted_answers_ignore_session_config(spark, codec_dirs):
             conf.set(k, v)
 
 
+def test_statement_answers_ignore_session_config(spark, codec_dirs):
+    """A search's query phase is one SQL statement with literals
+    rendered by ``sqltext``: under backslash-escaped string literals, a
+    non-UTC session time zone and AQE off, persisted and unpersisted
+    handles return the rows and scores of the default config."""
+    d = codec_dirs["varint"]
+    want = [SearchEngine(InvertedIndex(spark, d)).search(q, size=50).collect()
+            for q in PINNED_IDENTITY_QUERIES]
+    conf = spark.conf
+    saved = {k: conf.get(k) for k in (
+        "spark.sql.parser.escapedStringLiterals", "spark.sql.session.timeZone",
+        "spark.sql.adaptive.enabled")}
+    idx = InvertedIndex(spark, d)
+    try:
+        engines = {"unpersisted": SearchEngine(InvertedIndex(spark, d)),
+                   "persisted": SearchEngine(idx.persist())}
+        for setting in ({"spark.sql.parser.escapedStringLiterals": "true"},
+                        {"spark.sql.session.timeZone": "Asia/Kolkata"},
+                        {"spark.sql.adaptive.enabled": "false"}):
+            for k, v in {**saved, **setting}.items():
+                conf.set(k, v)
+            for name, eng in engines.items():
+                for q, w in zip(PINNED_IDENTITY_QUERIES, want):
+                    assert eng.search(q, size=50).collect() == w, (setting, name, q)
+    finally:
+        idx.unpersist()
+        for k, v in saved.items():
+            conf.set(k, v)
+
+
 def test_unpersist_releases_every_pin(spark, codec_dirs):
     """``unpersist()`` drops every frame ``persist()`` and the WAND
     ``block_meta()`` pinned: no persistent RDD is left behind, and the
