@@ -81,8 +81,8 @@ def byte4_to_int(b: np.ndarray) -> np.ndarray:
     return out
 
 
-# byte -> decoded length, for all 256 byte values (used as a Spark literal
-# array so decode happens JVM-side with element_at, no Python in the hot path)
+# byte -> decoded length, for all 256 byte values (the reference the SQL
+# decode, bm25.norm_decode_sql, is tested against)
 DECODE_TABLE: np.ndarray = byte4_to_int(np.arange(256, dtype=np.int64))
 
 

@@ -151,7 +151,9 @@ def update_doc(
     - ``detect_noop`` (partial-doc updates only, like the reference):
       merged == existing -> ``{"result": "noop"}`` with ZERO writes.
 
-    Returns ``{"result": "updated" | "created" | "noop", ...}``.
+    Returns ``{"result": "updated" | "created" | "noop", ...}``.  After
+    a write, ``engine`` searches a new handle that sees it (its old
+    handle, a snapshot, would miss the appended version).
 
     Scale note: the write path is one tombstone append + one 1-row
     ``append_batch`` (exactly-once manifest commit) — O(1) jobs, no
@@ -163,8 +165,8 @@ def update_doc(
 
     index_dir = engine.index.index_dir
     _complete_pending_updates(spark, index_dir)
-    # the live docmap, not the engine's snapshot: a doc this engine's
-    # handle predates (an earlier update or upsert) must be found
+    # the live docmap, not the engine's snapshot: a doc appended since
+    # the engine's handle was opened must be found
     dm = engine.index.reopen().docmap()
     cond = None
     for k, v in id_values.items():
@@ -233,6 +235,7 @@ def update_doc(
             [(int(rows[0]["_docid"]),)], "_docid BIGINT"
         ).write.mode("append").parquet(deletes_dir(index_dir))
         os.remove(ipath)
+        engine.index = engine.index.reopen()
         return {"result": "updated"}
 
     if upsert is None and not doc_as_upsert:
@@ -248,6 +251,7 @@ def update_doc(
     _append(
         source, batch_id if batch_id is not None else _next_batch_id(index_dir)
     )
+    engine.index = engine.index.reopen()
     return {"result": "created"}
 
 

@@ -18,10 +18,12 @@ phase, with no exchange before the coordinator's top-k merge.
 A handle is a snapshot of the index: it opens each table (postings,
 docmap, dictionary) once, at first use, and keeps it, as it keeps the
 plan and the statistics; a handle opened before an append does not see
-the appended batch, a new handle does.  The docmap, and the decoded
-postings pin once persisted, are registered under temp views named per
-handle (:meth:`InvertedIndex.view`), so a search's query phase reads
-them from one SQL statement.
+the appended batch, a new handle (:meth:`InvertedIndex.reopen`) does.
+A persisted handle registers its docmap and decoded postings pins under
+temp views named per handle, which a search's query phase reads from
+one SQL statement (:meth:`InvertedIndex.docmap_relation`,
+:meth:`InvertedIndex.postings_relation`); an unpersisted handle
+registers none, its tables enter each statement through request views.
 """
 
 from __future__ import annotations
@@ -88,6 +90,10 @@ class InvertedIndex:
             fresh.__dict__["_route_seg"] = self.__dict__["_route_seg"]
         return fresh
 
+    # what a segment view shares with its handle: the same snapshot's
+    # plan, statistics and term-statistics memo
+    _SNAPSHOT = ("plan", "stats", "_term_stats_cache", "_term_stats_complete")
+
     @cached_property
     def plan(self) -> Dict:
         with open(self.paths["plan"]) as f:
@@ -131,12 +137,12 @@ class InvertedIndex:
         in.  Later changes to the session's partition count do not
         re-partition the pins.
 
-        The handle's views (:meth:`view`) are re-registered over the
-        pins and stay until :meth:`unpersist`: a search never replaces
-        or drops them, which would uncache the frame they read.  The
-        dictionary pin goes to the driver through the same loader a
-        first :meth:`term_stats` miss uses, so term statistics never run
-        a Spark job on a persisted index."""
+        The docmap and decoded pins are registered under the handle's
+        temp views, which stay until :meth:`unpersist`: a search never
+        replaces or drops them, which would uncache the frame they
+        read.  The dictionary pin goes to the driver through the same
+        loader a first :meth:`term_stats` miss uses, so term statistics
+        never run a Spark job on a persisted index."""
         from pyspark import StorageLevel
 
         level = StorageLevel.MEMORY_AND_DISK
@@ -155,8 +161,9 @@ class InvertedIndex:
         )
         for key in _PINS:
             pins[key].count()  # materialize
-        for table in ("docmap", "decoded"):
-            self.view(table)
+        for table, key in (("docmap", "_docmap_view"), ("decoded", "_decoded_df")):
+            self._views[table] = f"{self._view_prefix}_{table}"
+            pins[key].createOrReplaceTempView(self._views[table])
         self._load_term_stats()
         return self
 
@@ -165,8 +172,8 @@ class InvertedIndex:
         (the cache-eviction twin of :meth:`persist`) — benches that walk
         multiple index sizes in one JVM must drop the previous size's
         cache or the unroll of the next one OOMs the shared local heap.
-        The handle's views go first (they re-register over the unpinned
-        tables on next use), then the frames derived from the block pin:
+        The handle's views go first, then the frames derived from the
+        block pin:
         uncaching a frame re-plans the cached frames built on it.  The
         :meth:`term_stats` memo stays (the handle is a snapshot), but is
         no longer marked complete."""
@@ -179,18 +186,16 @@ class InvertedIndex:
                 df.unpersist()
         return self
 
-    def view(self, table: str) -> str:
-        """Name of this handle's temp view over ``table``: "docmap" (the
-        pin when persisted, else the handle's table) or "decoded" (the
-        decoded postings pin; persisted handles only).  Registered on
-        first use; the name is stable for the handle's life."""
-        name = self._views.get(table)
-        if name is None:
-            frame = self.docmap() if table == "docmap" else self.__dict__["_decoded_df"]
-            name = f"{self._view_prefix}_{table}"
-            frame.createOrReplaceTempView(name)
-            self._views[table] = name
-        return name
+    @property
+    def is_persisted(self) -> bool:
+        """Whether :meth:`persist` pinned this handle's tables."""
+        return "_decoded_df" in self.__dict__
+
+    def docmap_relation(self) -> sqltext.Relation:
+        """:meth:`docmap` as a relation for a SQL statement: the pin's
+        view on a persisted handle, else a request view."""
+        name = self._views.get("docmap")
+        return sqltext.Relation.of(self.docmap()) if name is None else sqltext.Relation(name)
 
     def _drop_views(self) -> None:
         sqltext.drop_views(self.spark, list(self._views.values()))
@@ -236,6 +241,9 @@ class InvertedIndex:
         column is file-clustered)."""
         v = InvertedIndex(self.spark, self.index_dir)
         v.__dict__["_route_seg"] = int(seg)
+        # this handle's snapshot: term statistics are global, so a
+        # routed search reuses the memo instead of loading its own
+        v.__dict__.update((k, self.__dict__[k]) for k in self._SNAPSHOT if k in self.__dict__)
         return v
 
     def routed(self, routing_value) -> "InvertedIndex":
@@ -401,12 +409,12 @@ class InvertedIndex:
         if terms and self._serves_decoded(with_positions):
             cols = ", ".join(_POSTINGS_SCHEMA[with_positions].fieldNames())
             return sqltext.Relation(
-                f"(SELECT {cols} FROM {self.view('decoded')} WHERE {_term_in(terms)})"
+                f"(SELECT {cols} FROM {self._views['decoded']} WHERE {_term_in(terms)})"
             )
         return sqltext.Relation.of(self.postings_for_terms(terms, with_positions))
 
     def _serves_decoded(self, with_positions: bool) -> bool:
-        return "_decoded_df" in self.__dict__ and (self.has_positions or not with_positions)
+        return self.is_persisted and (self.has_positions or not with_positions)
 
     def postings_for_terms(
         self, terms: Sequence[str], with_positions: bool = False

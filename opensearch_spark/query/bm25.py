@@ -15,13 +15,12 @@ rounded to float32 — the same double-compute-then-narrow Lucene does —
 then summed across terms in float64.
 
 Both the norm decode and the score are SQL text, not Column trees:
-the 256-entry norm table is one constant array literal rendered once at
-import (``NORM_TABLE_SQL``), and ``term_score_sql`` holds the formula
-once for every BM25 clause (term, phrase, span, intervals, WAND bounds).
-A caller puts them into a ``selectExpr``, so a scoring projection costs
-a handful of py4j round trips to build instead of one per literal, and
-the decode (``element_at``) stays inside whole-stage codegen: no Python
-in the per-posting hot path.
+``norm_decode_sql`` is SmallFloat's byte4 decode as integer arithmetic,
+and ``term_score_sql`` holds the formula once for every BM25 clause
+(term, phrase, span, intervals, WAND bounds).  A caller puts them into
+a ``selectExpr`` or a statement, so a scoring projection costs a
+handful of py4j round trips to build, and the decode stays inside
+whole-stage codegen: no Python in the per-posting hot path.
 """
 
 from __future__ import annotations
@@ -42,15 +41,21 @@ def idf(df: int, doc_count: int) -> float:
     return math.log(1.0 + (doc_count - df + 0.5) / (df + 0.5))
 
 
-# the SmallFloat byte4 decode table as ONE constant SQL array: every
-# caller shares this string, so no request re-creates the 256 literals
-NORM_TABLE_SQL = "array(" + ", ".join(str(int(v)) for v in sfl.DECODE_TABLE) + ")"
-
-
 def norm_decode_sql(norm_byte: str) -> str:
-    """Quantized doc length from the 1-byte norm column ``norm_byte``
-    (SQL text; element_at is 1-indexed)."""
-    return f"element_at({NORM_TABLE_SQL}, {norm_byte} + 1)"
+    """Quantized doc length (INT) from the 1-byte norm column
+    ``norm_byte`` (0..255): SmallFloat.byte4ToInt as integer arithmetic.
+    Values below ``NUM_FREE_VALUES`` are stored as-is; above, the byte is
+    a 4-bit float (3 mantissa bits, subnormal below 8).  A handful of
+    expression nodes where a 256-entry literal table costs every
+    analyzer and optimizer pass of every statement that decodes norms;
+    ``tests/test_smallfloat.py`` checks all 256 bytes against
+    ``smallfloat.DECODE_TABLE``."""
+    free = sfl.NUM_FREE_VALUES
+    x = f"({norm_byte} - {free})"
+    return (
+        f"(CASE WHEN {norm_byte} < {free + 8} THEN {norm_byte}"
+        f" ELSE {free} + shiftleft(({x} & 7) | 8, shiftright({x}, 3) - 1) END)"
+    )
 
 
 def term_score_sql(

@@ -20,15 +20,18 @@ Query lifecycle (the Spark mapping of SURVEY.md §3.1):
   literals (the DFS/global-stats phase), per (term, doc) JVM-side BM25
   expressions, a GROUP BY docID with the boolean semantics.  Every
   other scorer builds a DataFrame that enters the statement through a
-  request-scoped temp view (``sqltext.Relation``).  The index tables
-  are views the handle registers once (``InvertedIndex.view``), so a
-  warm search on a persisted index is one parse, one analysis and a
-  handful of py4j round trips.
+  request-scoped temp view (``sqltext.Relation``).  A persisted
+  handle's pins are views it registers once (``InvertedIndex.persist``),
+  so a warm search on a persisted index is one parse, one analysis and
+  a handful of py4j round trips; an unpersisted handle's tables enter
+  through request views too.
 
   On a persisted index the postings and docmap pins are co-partitioned
   on docID, so the group-by and the id join run inside each partition,
   the reference's per-shard query phase, and a warm search is one
-  Spark job with no exchange; the coordinator's merge is the top-k.  An
+  Spark job with no exchange; the coordinator's merge is the top-k.
+  Its physical plan is built at once, with adaptive execution off
+  (``SearchEngine._planned``): there is no exchange to adapt.  An
   unpersisted index shuffles postings by docID to group them.
 
 Determinism: final order is (score DESC, id_cols ASC) — the explicit
@@ -41,6 +44,7 @@ from __future__ import annotations
 import contextlib
 import copy
 import fnmatch
+import threading
 from collections import Counter
 from functools import reduce
 from typing import Dict, List, Optional, Sequence, Tuple
@@ -793,6 +797,9 @@ INLINE_STATS_MAX_TERMS = 64
 WAND_AUTO_MIN_BLOCKS = 262_144
 
 
+_AQE = "spark.sql.adaptive.enabled"
+_AQE_LOCK = threading.Lock()
+
 # a constant-false relation the optimizer can prove empty: it folds the
 # whole search plan above it to an empty LocalRelation, so collecting
 # runs no job (an RDD-backed empty frame still runs its jobs)
@@ -946,10 +953,13 @@ class SearchEngine:
         ``SearchSourceBuilder.java:168-170``.
 
         The query phase is one SQL statement over the scored relation
-        (:meth:`_relation`) and the handle's docmap view; the fetch
-        phase (stored fields, ``script_fields``, docvalue formats) runs
-        on its k rows.  Tombstones are read per request; everything
-        else comes from the handle's snapshot of the index.
+        (:meth:`_relation`) and the handle's docmap; the fetch phase
+        (stored fields, ``script_fields``, docvalue formats) runs on its
+        k rows.  Tombstones are read per request; everything else comes
+        from the handle's snapshot of the index, so a long-lived engine
+        sees an append only through :meth:`reopened` (``update_doc``
+        through the engine refreshes it).  On a persisted handle the
+        result's physical plan is already built (:meth:`_planned`).
 
         ``sort`` = [(field, "asc"|"desc"), ...] switches to field sort
         (``FieldSortBuilder.java``: doc-values sort, missing last,
@@ -1022,10 +1032,10 @@ class SearchEngine:
             # fall back to dense scoring until compaction expunges them
             scored = self._score_pruned(q, size + from_)
         rel = self._relation(q) if scored is None else sqltext.Relation.of(scored)
-        # the docmap: the handle's view, or this request's derived columns
+        # the docmap, with this request's derived columns if any
         dm = (
             sqltext.Relation.of(self.docmap()) if self._derived
-            else sqltext.Relation(self.index.view("docmap"))
+            else self.index.docmap_relation()
         )
         fetch_cols = list(source_cols) if source_cols else self.id_cols
         fetch_cols = [c for c in dict.fromkeys(self.id_cols + list(fetch_cols))]
@@ -1085,15 +1095,7 @@ class SearchEngine:
         def cols(qual: str) -> str:
             return ", ".join(f"{qual}{sqltext.ident(c)}" for c in s_cols)
 
-        src = rel
-        if dels is not None:
-            # soft deletes: a tombstone anti-join, read per request
-            tomb = sqltext.Relation.of(dels)
-            src = src.query(
-                f"SELECT /*+ BROADCAST(t) */ {cols('s.')} FROM {src.sql} s"
-                f" LEFT ANTI JOIN {tomb.sql} t ON s._docid = t._docid",
-                tomb,
-            )
+        src = self._without_deletes(rel, s_cols, dels)
         if terminate_after is not None:
             # ``terminate_after`` (SearchSourceBuilder.java:106,534;
             # QueryPhase's EarlyTerminatingCollector): each shard stops
@@ -1263,9 +1265,9 @@ class SearchEngine:
         out_cols = [_out(c) for c in list(fetch_cols) + list(script_fields)]
         if not (extra or script_fields) and all(isinstance(c, str) for c in out_cols):
             # nothing to fetch: the projection closes the statement
-            return self._frame(
+            return self._planned(self._frame(
                 topk.query(f"SELECT {', '.join(out_cols)}, score FROM {topk.sql}"), args
-            )
+            ))
         topk = self._frame(topk, args)
         if extra:
             # fetch phase: the k winners are tiny -> broadcast them into the
@@ -1297,9 +1299,32 @@ class SearchEngine:
                 F.col(c).desc_nulls_last() if d == "desc" else F.col(c).asc_nulls_last()
                 for c, d in order
             ], *[F.asc(c) for c in self.id_cols])
-        return topk.select(
+        return self._planned(topk.select(
             *[F.expr(c) if isinstance(c, str) else c for c in out_cols], "score"
-        )
+        ))
+
+    def _planned(self, df: DataFrame) -> DataFrame:
+        """A search result on a persisted handle with its physical plan
+        built now, with adaptive query execution off.  Its plan reads
+        co-partitioned pins with no exchange for AQE to re-plan, while
+        AQE's stage bookkeeping costs 20-40 ms of driver time per
+        collect.  The session setting is switched only while this plan
+        is built, under a lock so that concurrent searches restore it in
+        order; the DataFrame keeps the plan, and a frame derived from it
+        plans under the session's own setting."""
+        if not self.index.is_persisted:
+            return df
+        conf = self.spark.conf
+        with _AQE_LOCK:
+            prev = conf.get(_AQE)
+            if prev.strip().lower() != "true":
+                return df
+            conf.set(_AQE, "false")
+            try:
+                df._jdf.queryExecution().executedPlan()
+            finally:
+                conf.set(_AQE, prev)
+        return df
 
     def scan(self, query, batch_size: int = 500, source_cols=None,
              slice: Optional[Dict] = None):
@@ -1763,16 +1788,34 @@ class SearchEngine:
             return False
         return int(stats["n_blocks"].sum()) >= WAND_AUTO_MIN_BLOCKS
 
+    @staticmethod
+    def _without_deletes(
+        rel: sqltext.Relation, cols: Sequence[str], dels: Optional[DataFrame]
+    ) -> sqltext.Relation:
+        """``rel`` (columns ``cols``) without the soft-deleted docs of
+        the tombstone set ``dels`` (None: nothing deleted): a broadcast
+        anti-join.  Corpus statistics stay unchanged until compaction —
+        the reference's soft-delete semantics, SURVEY.md §2.1."""
+        if dels is None:
+            return rel
+        tomb = sqltext.Relation.of(dels)
+        return rel.query(
+            f"SELECT /*+ BROADCAST(t) */ {', '.join('s.' + sqltext.ident(c) for c in cols)}"
+            f" FROM {rel.sql} s LEFT ANTI JOIN {tomb.sql} t ON s._docid = t._docid",
+            tomb,
+        )
+
     def _apply_deletes(self, scored: DataFrame) -> DataFrame:
-        """Hide soft-deleted docs (tombstone anti-join; stats stay
-        unchanged until compaction — the reference's soft-delete
-        semantics, SURVEY.md §2.1)."""
+        """``scored`` without soft-deleted docs (:meth:`_without_deletes`),
+        tombstones read now."""
         from opensearch_spark.index.lifecycle import tombstone_docids
 
         dels = tombstone_docids(self.spark, self.index.index_dir)
         if dels is None:
             return scored
-        return scored.join(F.broadcast(dels), "_docid", "anti")
+        return self._frame(
+            self._without_deletes(sqltext.Relation.of(scored), scored.columns, dels)
+        )
 
     def _score_with_deletes_applied(self, query) -> DataFrame:
         q = Q.from_dict(query) if isinstance(query, dict) else query
@@ -1817,22 +1860,25 @@ class SearchEngine:
         return sqltext.run(self.spark, rel, args)
 
     def _relation(self, q) -> sqltext.Relation:
-        """The scored relation (_docid, score) of ``q`` for a statement.
-        The term family (match, text term, fused dis_max, match_none)
-        is SQL text, with no DataFrame built; every other scorer builds
-        its DataFrame, which enters through a request view."""
-        if not self.__dict__.get("_field_engines"):
-            if isinstance(q, Q.Match):
-                return self._match_sql(q)
-            if isinstance(q, Q.Term) and q.field == self.text_col:
-                return self._terms_or_sql({str(q.value): 1}, required=1, boost=q.boost)
-            if isinstance(q, Q.MatchNone):
-                return _EMPTY
-            if isinstance(q, Q.DisMax):
-                fused = self._dismax_fused_sql(q)
-                if fused is not None:
-                    return fused
-        return sqltext.Relation.of(self._score(q))
+        """The scored relation (_docid, score) of ``q`` for a statement:
+        the term family as SQL text (:meth:`_term_family_sql`), with no
+        DataFrame built; every other scorer's DataFrame enters through
+        a request view."""
+        rel = None if self.__dict__.get("_field_engines") else self._term_family_sql(q)
+        return sqltext.Relation.of(self._score(q)) if rel is None else rel
+
+    def _term_family_sql(self, q) -> Optional[sqltext.Relation]:
+        """The SQL-text scorers: match, text term, match_none and the
+        fused dis_max; None for every other query."""
+        if isinstance(q, Q.Match):
+            return self._match_sql(q)
+        if isinstance(q, Q.Term) and q.field == self.text_col:
+            return self._terms_or_sql({str(q.value): 1}, required=1, boost=q.boost)
+        if isinstance(q, Q.MatchNone):
+            return _EMPTY
+        if isinstance(q, Q.DisMax):
+            return self._dismax_fused_sql(q)
+        return None
 
     def _score(self, q) -> DataFrame:
         """DataFrame (_docid long, score double) of matching docs."""
@@ -1850,8 +1896,9 @@ class SearchEngine:
                     {self.text_col: self, **fe}, self.text_col
                 )
                 return mfe.score_multi_match(q)
-        if isinstance(q, Q.Match):
-            return self._frame(self._match_sql(q))
+        rel = self._term_family_sql(q)
+        if rel is not None:
+            return self._frame(rel)
         if isinstance(q, Q.MatchPhrase):
             return self._score_phrase(q)
         if isinstance(q, Q.MatchPhrasePrefix):
@@ -2144,8 +2191,6 @@ class SearchEngine:
             )
         if isinstance(q, Q.MatchAll):
             return self._all_docs(q.boost)
-        if isinstance(q, Q.MatchNone):
-            return self._empty_scored()
         if isinstance(q, Q.ScriptQuery):
             # filter context: constant score where the Catalyst
             # expression holds (ScriptQueryBuilder.java; Painless ->
@@ -2160,8 +2205,6 @@ class SearchEngine:
         if isinstance(q, Q.CommonTerms):
             return self._score_common_terms(q)
         if isinstance(q, Q.Term):
-            if q.field == self.text_col:
-                return self._score_terms_or({str(q.value): 1}, required=1, boost=q.boost)
             pred = self._predicate(q)
             return self._pred_docset(pred, q.boost)
         if isinstance(q, Q.Terms):
@@ -2389,6 +2432,8 @@ class SearchEngine:
     def _score_terms_or(
         self, weights: dict, required: int, boost: float = 1.0
     ) -> DataFrame:
+        """:meth:`_terms_or_sql` as a DataFrame, for the scorers that
+        build DataFrames."""
         return self._frame(self._terms_or_sql(weights, required, boost))
 
     def _terms_or_sql(
@@ -3459,9 +3504,7 @@ class SearchEngine:
         return scored
 
     def _score_dismax(self, q: Q.DisMax) -> DataFrame:
-        fused = self._score_dismax_fused(q)
-        if fused is not None:
-            return fused
+        # the fused single-scan form is _dismax_fused_sql (_term_family_sql)
         parts = [
             self._score(sub).withColumn("cid", F.lit(i))
             for i, sub in enumerate(q.queries)
@@ -3476,10 +3519,6 @@ class SearchEngine:
         return grouped.select(
             "_docid", (score * F.lit(float(q.boost))).alias("score")
         )
-
-    def _score_dismax_fused(self, q: Q.DisMax) -> Optional[DataFrame]:
-        fused = self._dismax_fused_sql(q)
-        return None if fused is None else self._frame(fused)
 
     def _dismax_fused_sql(self, q: Q.DisMax) -> Optional[sqltext.Relation]:
         """Single-scan dis_max for all-simple clauses (plain match-OR /
@@ -4273,6 +4312,8 @@ class SearchEngine:
         )
 
     def _empty_scored(self) -> DataFrame:
+        """The empty scored relation as a DataFrame, for the scorers
+        that build DataFrames."""
         return self._frame(_EMPTY)
 
     def _bm25_clause(

@@ -9,7 +9,9 @@ Spark mapping: the "serialized response" is the collected Arrow/pandas
 result of the search DataFrame; the "reader cache key" is a fingerprint
 of the index commit's file metadata (path, size, mtime) including the
 tombstone directory, so ``delete_by_query`` / append / compaction all
-invalidate exactly like a reader reopen.  A cache hit rebuilds the
+invalidate exactly like a reader reopen — and a miss under a new key
+searches through a reopened engine (``SearchEngine.reopened``), since
+an index handle is a snapshot of the commit it opened.  A cache hit rebuilds the
 DataFrame from the cached pandas batch — **zero Spark jobs**, the same
 economics as the reference returning cached response bytes.
 
@@ -38,6 +40,8 @@ class RequestCache:
 
     def __init__(self, engine, max_entries: int = 256):
         self.engine = engine
+        # the commit the engine's handle is taken to have opened
+        self._engine_key = self._reader_key()
         self.max_entries = int(max_entries)
         self._entries: "OrderedDict[Tuple[str, str], Tuple[object, object]]" = (
             OrderedDict()
@@ -98,6 +102,10 @@ class RequestCache:
             pdf, schema = hit
             return self.engine.spark.createDataFrame(pdf, schema=schema)
         self.stats["misses"] += 1
+        if rkey[1] != self._engine_key:
+            # the commit changed: the engine's handle predates it
+            self.engine = self.engine.reopened()
+            self._engine_key = rkey[1]
         df = self.engine.search(query, **kw)
         pdf = df.toPandas()
         self._entries[rkey] = (pdf, df.schema)

@@ -378,7 +378,8 @@ def test_handle_is_a_snapshot(spark, lifecycle_idx, monkeypatch):
 def test_update_doc_twice_on_one_engine(spark, lifecycle_idx):
     """``update_doc`` reads the live docmap, not the engine's snapshot:
     an upsert then an update of the same new id through one engine
-    give ``created`` then ``updated``, leaving one live version."""
+    give ``created`` then ``updated``, leaving one live version, which
+    that engine's own search and count then find."""
     from opensearch_spark.index.lifecycle import update_doc
 
     eng = SearchEngine(InvertedIndex(spark, lifecycle_idx))
@@ -391,8 +392,35 @@ def test_update_doc_twice_on_one_engine(spark, lifecycle_idx):
     assert update_doc(spark, eng, ids, doc={"text": "x"}, upsert=row) == {"result": "created"}
     assert update_doc(spark, eng, ids, doc={"text": "second twice version"}) == {
         "result": "updated"}
-    fresh = SearchEngine(InvertedIndex(spark, lifecycle_idx))
-    rows = fresh.search({"term": {"conv_id": "c-twice"}}, size=10,
+    want = [("c-twice", 0, "second twice version")]
+    for e in (eng, SearchEngine(InvertedIndex(spark, lifecycle_idx))):
+        rows = e.search({"term": {"conv_id": "c-twice"}}, size=10,
                         source_cols=["text"]).collect()
-    assert [(r["conv_id"], r["turn_idx"], r["text"]) for r in rows] == [
-        ("c-twice", 0, "second twice version")]
+        assert [(r["conv_id"], r["turn_idx"], r["text"]) for r in rows] == want
+    assert eng.count({"match": {"text": "second twice version"}}) >= 1
+    assert eng.count({"term": {"conv_id": "c-twice"}}) == 1
+
+
+def test_request_cache_sees_appended_docs(spark, lifecycle_idx):
+    """A request cache over a long-lived engine answers a miss after
+    ``append_batch`` from the new commit, not from the engine's
+    snapshot, and caches that answer."""
+    from opensearch_spark.index.lifecycle import _append_cfg
+    from opensearch_spark.query.request_cache import RequestCache
+    from opensearch_spark.streaming.incremental import append_batch
+
+    eng = SearchEngine(InvertedIndex(spark, lifecycle_idx))
+    cache = RequestCache(eng)
+    q = {"match": {"text": "quokka"}}
+    assert cache.search(q, size=10).collect() == []
+    row = dict(eng.index.docmap().select(
+        *eng.index.plan["input_fields"]
+    ).limit(1).collect()[0].asDict())
+    row.update({"conv_id": "c-quokka", "turn_idx": 0, "text": "a quokka appears"})
+    batch = spark.createDataFrame([row], eng.index.docmap().select(
+        *eng.index.plan["input_fields"]).schema)
+    append_batch(spark, batch, lifecycle_idx, _append_cfg(eng), batch_id=7)
+    for _ in range(2):  # a miss on the new commit, then a hit
+        rows = cache.search(q, size=10).collect()
+        assert [(r["conv_id"], r["turn_idx"]) for r in rows] == [("c-quokka", 0)]
+    assert cache.stats["misses"] == 2 and cache.stats["hits"] == 1

@@ -840,7 +840,7 @@ def test_pins_survive_searches(spark, index_dir):
             eng.search(q, size=10, **kw).collect()
         for key in _PINS:
             assert found(idx.__dict__[key]), key
-        assert found(spark.table(idx.view("docmap")))
+        assert found(spark.table(idx.docmap_relation().sql))
     finally:
         idx.unpersist()
 
@@ -864,3 +864,29 @@ def test_term_stats_load_once_per_handle(spark, index_dir, monkeypatch):
     assert _jobs_in_group(spark, "memo-lookup", lookup) == 0
     assert len(idx.term_stats(["slow", "query", "Unseen"])) == 2
     assert loads == []
+
+
+def test_unpersisted_searches_leave_no_views(spark, index_dir, monkeypatch):
+    """An unpersisted handle registers no views of its own: its tables
+    enter each statement through request views, which are dropped, so
+    searches through per-request handles (a routed search opens one
+    each time) leave the session catalog as they found it.  A routed
+    handle shares its parent's term-statistics memo and loads none."""
+    from opensearch_spark.index.reader import InvertedIndex
+    from opensearch_spark.query.executor import SearchEngine
+
+    def temp_views():
+        return sorted(t.name for t in spark.catalog.listTables() if t.isTemporary)
+
+    before = temp_views()
+    idx = InvertedIndex(spark, index_dir)
+    eng = SearchEngine(idx)
+    for q, kw in PIN_SURVIVAL_SEARCHES[:4] + PIN_SURVIVAL_SEARCHES[13:]:
+        eng.search(q, size=10, **kw).collect()
+    loads = []
+    monkeypatch.setattr(InvertedIndex, "_load_term_stats", lambda self: loads.append(1))
+    for conv in ("conv-00000001", "conv-00000002"):
+        routed = SearchEngine(idx.routed(conv))
+        routed.search({"match": {"text": "error handling"}}, size=10).collect()
+    assert loads == []
+    assert temp_views() == before

@@ -144,9 +144,9 @@ def test_dismax_fused_equals_union_path(engine):
             }
         }
     )
-    fused = engine._score_dismax_fused(q)
+    fused = engine._dismax_fused_sql(q)
     assert fused is not None
-    got = {r["_docid"]: r["score"] for r in fused.collect()}
+    got = {r["_docid"]: r["score"] for r in engine._frame(fused).collect()}
     # force the union path by bypassing the fused dispatch
     from functools import reduce as _red
 
@@ -180,7 +180,7 @@ def test_dismax_falls_back_for_complex_clauses(engine):
             }
         }
     )
-    assert engine._score_dismax_fused(q) is None
+    assert engine._dismax_fused_sql(q) is None
     # and the public path still answers
     assert engine.search({"dis_max": {"queries": [
         {"match_phrase": {"text": "error handling"}},
@@ -205,7 +205,7 @@ def test_dismax_non_text_match_clause_raises_like_union_path(engine):
             }
         }
     )
-    assert engine._score_dismax_fused(q) is None
+    assert engine._dismax_fused_sql(q) is None
     with pytest.raises(ValueError, match="match targets the indexed text field"):
         engine.search(
             {"dis_max": {"queries": [

@@ -41,3 +41,15 @@ def test_relative_error_bounded():
     q = sf.quantize_len(v)
     rel = (v - q) / v
     assert rel.max() < 0.125
+
+
+def test_norm_decode_sql_matches_table(spark):
+    """The SQL norm decode the scorers use equals the byte4 decode on
+    every byte, as an INT."""
+    from opensearch_spark.query.bm25 import norm_decode_sql
+
+    df = spark.range(256).selectExpr("CAST(id AS INT) AS n").selectExpr(
+        f"{norm_decode_sql('n')} AS dl"
+    )
+    assert df.schema["dl"].dataType.simpleString() == "int"
+    assert [r["dl"] for r in df.collect()] == sf.DECODE_TABLE.tolist()
