@@ -183,7 +183,8 @@ def test_persisted_match_py4j_budget(spark, index_dir):
     """On a persisted handle, ``search()`` of a warm 2-term match is one
     SQL statement over the handle's views: at most 30 py4j round trips
     (about 106 when the query phase was a chain of DataFrame
-    operations)."""
+    operations).  Its physical plan is already built, without AQE, and
+    the session's AQE setting is left as it was."""
     from opensearch_spark.index.reader import InvertedIndex
     from opensearch_spark.query.executor import SearchEngine
 
@@ -194,6 +195,11 @@ def test_persisted_match_py4j_budget(spark, index_dir):
         eng.search(q, size=10).collect()
         calls = _py4j_round_trips(spark, lambda: eng.search(q, size=10))
         assert calls <= 30, calls
+        # the plan is built without AQE; the session keeps its setting
+        aqe = spark.conf.get("spark.sql.adaptive.enabled")
+        plan = eng.search(q, size=10)._jdf.queryExecution().executedPlan()
+        assert plan.nodeName() != "AdaptiveSparkPlan"
+        assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
     finally:
         idx.unpersist()
 
