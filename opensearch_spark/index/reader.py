@@ -32,7 +32,7 @@ import itertools
 import json
 import os
 from functools import cached_property
-from typing import Dict, List, Optional, Sequence
+from typing import Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
@@ -368,16 +368,7 @@ class InvertedIndex:
         (:meth:`_load_term_stats`, which :meth:`persist` also calls) and
         marks it complete, after which a term it lacks is absent, with
         no lookup job."""
-        if not terms:
-            return pd.DataFrame({"term": [], "df": [], "total_tf": [], "n_blocks": []})
-        cache = self.__dict__.setdefault("_term_stats_cache", {})
-        want = sorted(set(terms))
-        missing = [t for t in want if t not in cache]
-        if missing and not self.__dict__.get("_term_stats_complete"):
-            self._load_term_stats()
-        for t in missing:
-            cache.setdefault(t, None)  # negative cache: absent term
-        hit = [(t, cache[t]) for t in want if cache[t] is not None]
+        hit = self._term_stats_hits(terms)
         return pd.DataFrame(
             {
                 "term": [t for t, _ in hit],
@@ -386,6 +377,25 @@ class InvertedIndex:
                 "n_blocks": [v[2] for _, v in hit],
             }
         )
+
+    def n_blocks(self, terms: Sequence[str]) -> int:
+        """Posting blocks of the distinct ``terms`` in all, from the
+        :meth:`term_stats` memo (absent terms count 0)."""
+        return sum(v[2] for _, v in self._term_stats_hits(terms))
+
+    def _term_stats_hits(self, terms: Sequence[str]) -> List[Tuple[str, tuple]]:
+        """[(term, (df, total_tf, n_blocks))] for the distinct present
+        ``terms``, sorted, from the memo :meth:`term_stats` describes."""
+        if not terms:
+            return []
+        cache = self.__dict__.setdefault("_term_stats_cache", {})
+        want = sorted(set(terms))
+        missing = [t for t in want if t not in cache]
+        if missing and not self.__dict__.get("_term_stats_complete"):
+            self._load_term_stats()
+        for t in missing:
+            cache.setdefault(t, None)  # negative cache: absent term
+        return [(t, cache[t]) for t in want if cache[t] is not None]
 
     def _load_term_stats(self) -> None:
         """Collect the whole dictionary (one Arrow collect) into the

@@ -302,17 +302,24 @@ class PointInTime:
         self.pit_dir = pit_dir
         self.pit_id = os.path.basename(pit_dir)
         self._closed = False
+        self._engine = None
 
     def engine(self):
+        """The one SearchEngine over the pinned view: its directory never
+        changes, so the handle (dictionary memo, opened tables) serves
+        every search until ``close()``."""
         from opensearch_spark.index.reader import InvertedIndex
         from opensearch_spark.query.executor import SearchEngine
 
         if self._closed:
             raise ValueError(f"point in time {self.pit_id} is closed")
-        return SearchEngine(InvertedIndex(self.spark, self.pit_dir))
+        if self._engine is None:
+            self._engine = SearchEngine(InvertedIndex(self.spark, self.pit_dir))
+        return self._engine
 
     def close(self) -> None:
         if not self._closed:
+            self._engine = None
             shutil.rmtree(self.pit_dir, ignore_errors=True)
             self._closed = True
 

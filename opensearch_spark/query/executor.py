@@ -1771,22 +1771,16 @@ class SearchEngine:
     def _wand_auto(self, q) -> bool:
         """AUTO prune decision: True for WAND-able query shapes whose
         terms' posting lists total >= WAND_AUTO_MIN_BLOCKS blocks
-        (``n_blocks`` comes from the dictionary via the memoized
-        term-stats cache — metadata only, no decode).  Below the
-        threshold the two-pass pruned plan costs more in job overhead
-        than it saves in decode."""
+        (``InvertedIndex.n_blocks``: the memoized dictionary — metadata
+        only, no decode).  Below the threshold the two-pass pruned plan
+        costs more in job overhead than it saves in decode."""
         if isinstance(q, Q.Match) and q.operator != "and" and not q.minimum_should_match:
             tokens = self.index.analyze(q.query)
         elif isinstance(q, Q.Term) and q.field == self.text_col:
             tokens = [str(q.value)]
         else:
             return False
-        if not tokens:
-            return False
-        stats = self.index.term_stats(tokens)
-        if stats.empty or "n_blocks" not in stats:
-            return False
-        return int(stats["n_blocks"].sum()) >= WAND_AUTO_MIN_BLOCKS
+        return self.index.n_blocks(tokens) >= WAND_AUTO_MIN_BLOCKS
 
     @staticmethod
     def _without_deletes(

@@ -6,12 +6,19 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "opensearch_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
+    """The engine's session.  Its Python workers start from
+    :mod:`opensearch_spark.pyworker`, which takes Spark's zip/jar
+    archives off their import path: with them on it, every task re-reads
+    each archive's directory (``importlib.invalidate_caches``) and waits
+    ~250 ms before it runs."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
@@ -23,6 +30,10 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", "opensearch_spark.pyworker")
+        # workers import the daemon module, like the engine's task code,
+        # from the directory this driver imported the package from
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         # committer v1: job-level atomic rename.  v2 commits task output
         # directly to the destination, so a failed wave/batch leaves
         # partial files and task-commit retries can duplicate them

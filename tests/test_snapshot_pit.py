@@ -148,6 +148,24 @@ def test_pit_survives_concurrent_deletes(spark, built):
         pit.engine()
 
 
+def test_pit_keeps_one_engine(spark, index_dir, tmp_path, monkeypatch):
+    """A PIT's directory never changes, so ``engine()`` hands out one
+    engine for the PIT's life: a second search loads no dictionary."""
+    with snap.open_pit(spark, index_dir, str(tmp_path / "pits")) as pit:
+        first = pit.engine()
+        before = _hits(first)
+        loads = []
+        real = InvertedIndex._load_term_stats
+        monkeypatch.setattr(
+            InvertedIndex, "_load_term_stats", lambda self: loads.append(1) or real(self)
+        )
+        assert pit.engine() is first
+        assert _hits(pit.engine()) == before
+        assert loads == []
+    with pytest.raises(ValueError, match="closed"):
+        pit.engine()
+
+
 def test_delete_snapshot_skips_gc_while_snapshot_in_progress(spark, index_dir, tmp_path):
     """Blob GC must not collect shared blobs while another snapshot is
     mid-flight (its manifest is uncommitted, so the live set cannot be

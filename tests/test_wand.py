@@ -64,3 +64,21 @@ def test_pruned_rare_term_fallback(engine):
     assert [(r["conv_id"], r["turn_idx"]) for r in dense] == [
         (r["conv_id"], r["turn_idx"]) for r in pruned
     ]
+
+
+@pytest.mark.parametrize("qi", range(len(QUERIES)))
+def test_auto_prune_decision_sums_dictionary_blocks(engine, monkeypatch, qi):
+    """AUTO prunes exactly when the query terms' dictionary ``n_blocks``
+    reach ``WAND_AUTO_MIN_BLOCKS``; on the test index no query does."""
+    from opensearch_spark.query import dsl as Q
+    from opensearch_spark.query import executor
+
+    q = Q.from_dict(QUERIES[qi])
+    tokens = engine.index.analyze(q.query) if isinstance(q, Q.Match) else [str(q.value)]
+    blocks = int(engine.index.term_stats(tokens)["n_blocks"].sum())
+    assert blocks == engine.index.n_blocks(tokens) > 0
+    assert not engine._wand_auto(q)
+    monkeypatch.setattr(executor, "WAND_AUTO_MIN_BLOCKS", blocks)
+    assert engine._wand_auto(q)
+    monkeypatch.setattr(executor, "WAND_AUTO_MIN_BLOCKS", blocks + 1)
+    assert not engine._wand_auto(q)
