@@ -69,7 +69,9 @@ def tombstone_docids(spark: SparkSession, index_dir: str) -> Optional[DataFrame]
     files = [f for f in files if f.endswith(".parquet") or "part-" in f]
     if not files:
         return None
-    return spark.read.parquet(ddir).select("_docid").distinct()
+    # every writer writes this schema: giving it spares a search an
+    # inference job
+    return spark.read.schema("_docid BIGINT").parquet(ddir).distinct()
 
 
 def reindex(

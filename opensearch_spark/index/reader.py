@@ -24,6 +24,17 @@ temp views named per handle, which a search's query phase reads from
 one SQL statement (:meth:`InvertedIndex.docmap_relation`,
 :meth:`InvertedIndex.postings_relation`); an unpersisted handle
 registers none, its tables enter each statement through request views.
+
+Opening a handle runs no Spark job, so the first search on a fresh
+handle runs only its own query's jobs.  Each table is opened with a
+schema read from its parquet footers on the driver
+(:func:`_footer_schema`, pyarrow), not inferred by a Spark job, and the
+term-statistics memo is read from the dictionary files with
+``pyarrow.dataset`` on the driver (:meth:`InvertedIndex._load_term_stats`;
+an incremental dictionary's per-batch deltas are summed per term
+there), the analog of the reference loading a segment's terms index
+into heap when it opens the segment.  Both need the index directory on
+a local file system, as reading ``plan.json`` already does.
 """
 
 from __future__ import annotations
@@ -36,6 +47,9 @@ from typing import Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -50,6 +64,56 @@ def _term_in(terms: Sequence[str]) -> str:
     """SQL ``term IN (...)`` over literal terms: one parse on the JVM
     instead of a Column tree, and still pushed into the Parquet scan."""
     return "term IN (" + ", ".join(sqltext.string(t) for t in terms) + ")"
+
+
+def _parquet_files(path: str) -> List[str]:
+    """The data files of the parquet table at ``path``, sorted by name;
+    like Spark, it skips names starting with ``_`` or ``.``."""
+    if not os.path.isdir(path):
+        return []
+    return sorted(
+        e.path for e in os.scandir(path) if e.is_file() and not e.name.startswith(("_", "."))
+    )
+
+
+# the footer key under which Spark's parquet writer stores the schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str) -> Optional[T.StructType]:
+    """The Spark schema of the parquet table at ``path``, read from its
+    files' footers on the driver (no Spark job): the schema Spark's
+    writer stores in each footer, which Spark's own inference reads
+    too (an Arrow-type conversion would read a ``timestamp_ntz`` column
+    as ``timestamp``).  Files whose schemas differ (an incremental
+    dictionary's base has ``tlen``, its deltas ``_batch``) are unified,
+    widest schema first and ties broken by the schema's JSON, so the
+    result does not depend on file names; Spark's inference reads a
+    single file's footer.  None when there is no file or a file
+    Spark did not write: the caller lets Spark infer.  Spark reads
+    every field of the schema given as nullable, as it reads its own."""
+    files = _parquet_files(path)
+    if not files:
+        return None
+    stored = set()
+    for f in files:
+        schema = (pq.read_schema(f).metadata or {}).get(_SPARK_SCHEMA_KEY)
+        if schema is None:
+            return None
+        stored.add(schema)
+    schemas = [T.StructType.fromJson(json.loads(s)) for s in stored]
+    fields: Dict[str, T.StructField] = {}
+    for schema in sorted(schemas, key=lambda s: (-len(s.fields), s.json())):
+        for field in schema.fields:
+            fields.setdefault(field.name, field)
+    return T.StructType(list(fields.values()))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` given :func:`_footer_schema`'s schema,
+    so opening the table runs no schema inference job."""
+    schema = _footer_schema(path)
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
 
 
 _POSTING_FIELDS = [
@@ -140,9 +204,9 @@ class InvertedIndex:
         The docmap and decoded pins are registered under the handle's
         temp views, which stay until :meth:`unpersist`: a search never
         replaces or drops them, which would uncache the frame they
-        read.  The dictionary pin goes to the driver through the same
-        loader a first :meth:`term_stats` miss uses, so term statistics
-        never run a Spark job on a persisted index."""
+        read.  The :meth:`term_stats` memo is loaded here, by the same
+        driver-side read of the dictionary files a first miss on an
+        unpersisted handle makes."""
         from pyspark import StorageLevel
 
         level = StorageLevel.MEMORY_AND_DISK
@@ -219,7 +283,7 @@ class InvertedIndex:
                 .filter(F.col("_row") == "p")
                 .drop("_row")
             )
-        return self._routed_filter(self.spark.read.parquet(path))
+        return self._routed_filter(_read_parquet(self.spark, path))
 
     def postings(self) -> DataFrame:
         cached = self.__dict__.get("_postings_df")
@@ -308,7 +372,7 @@ class InvertedIndex:
         # a merged/compacted index references the source docmap instead
         # of copying it (opensearch_spark.index.merge.merge_index)
         d = self.plan.get("docmap_dir") or self.paths["docmap"]
-        return self._routed_filter(self.spark.read.parquet(d))
+        return self._routed_filter(_read_parquet(self.spark, d))
 
     def docmap(self) -> DataFrame:
         cached = self.__dict__.get("_docmap_view")
@@ -320,7 +384,7 @@ class InvertedIndex:
 
     @cached_property
     def _dictionary_table(self) -> DataFrame:
-        d = self.spark.read.parquet(self.paths["dictionary"])
+        d = _read_parquet(self.spark, self.paths["dictionary"])
         if self.plan.get("incremental"):
             # streaming builds append per-batch deltas; aggregate on read
             # (collapsed to dense rows by merge_index compaction)
@@ -398,12 +462,21 @@ class InvertedIndex:
         return [(t, cache[t]) for t in want if cache[t] is not None]
 
     def _load_term_stats(self) -> None:
-        """Collect the whole dictionary (one Arrow collect) into the
-        :meth:`term_stats` memo and mark it complete."""
-        stats = self.dictionary().select("term", "df", "total_tf", "n_blocks").toPandas()
-        values = zip(*(stats[c].astype("int64").tolist() for c in ("df", "total_tf", "n_blocks")))
+        """Read the whole dictionary into the :meth:`term_stats` memo and
+        mark it complete: its files read with ``pyarrow.dataset`` on the
+        driver, no Spark job, and an incremental dictionary's per-batch
+        deltas summed per term, as :meth:`dictionary` sums them."""
+        stats = ("df", "total_tf", "n_blocks")
+        schema = pa.schema([("term", pa.string())] + [(c, pa.int64()) for c in stats])
+        files = _parquet_files(self.paths["dictionary"])
+        table = ds.dataset(files, schema=schema, format="parquet").to_table()
+        cols = stats
+        if self.plan.get("incremental"):
+            table = table.group_by("term").aggregate([(c, "sum") for c in stats])
+            cols = [f"{c}_sum" for c in stats]
+        values = zip(*(table[c].to_pylist() for c in cols))
         self.__dict__.setdefault("_term_stats_cache", {}).update(
-            zip(stats["term"].tolist(), values)
+            zip(table["term"].to_pylist(), values)
         )
         self.__dict__["_term_stats_complete"] = True
 

@@ -30,6 +30,41 @@ from typing import Dict, Optional, Tuple
 from pyspark.sql import DataFrame
 
 
+def commit_fingerprint(index_dir: str) -> str:
+    """Commit fingerprint of an index (the readerCacheKeyId analog), from
+    the commit MARKERS only — plan.json, stats.json, the manifests
+    listing and the deletes listing — not the data files.
+
+    Sufficient because data/dictionary files are immutable once
+    committed: every mutation path either rewrites plan/stats
+    (resize, restore-in-place), appends a manifest (build wave,
+    incremental batch — whose data files are only visible once the
+    manifest commits), or appends a tombstone file
+    (delete_by_query).  This keeps the per-request cost
+    O(segments), not O(data files) — at 100 TB the difference
+    between a few dozen stat calls and walking millions of parquet
+    parts on every cached search."""
+    parts = []
+    for f in ("plan.json", "stats.json"):
+        try:
+            st = os.stat(os.path.join(index_dir, f))
+            parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
+        except OSError:
+            parts.append(f"{f}:gone")
+    for member in ("manifests", "deletes"):
+        root = os.path.join(index_dir, member)
+        if not os.path.isdir(root):
+            parts.append(f"{member}:absent")
+            continue
+        for name in sorted(os.listdir(root)):
+            try:
+                st = os.stat(os.path.join(root, name))
+                parts.append(f"{member}/{name}:{st.st_size}:{st.st_mtime_ns}")
+            except OSError:
+                parts.append(f"{member}/{name}:gone")
+    return "|".join(parts)
+
+
 class RequestCache:
     """LRU of search results for one engine, invalidated by commit change.
 
@@ -51,39 +86,7 @@ class RequestCache:
     # ---- keys
 
     def _reader_key(self) -> str:
-        """Commit fingerprint (the readerCacheKeyId analog), from the
-        commit MARKERS only — plan.json, stats.json, the manifests
-        listing and the deletes listing — not the data files.
-
-        Sufficient because data/dictionary files are immutable once
-        committed: every mutation path either rewrites plan/stats
-        (resize, restore-in-place), appends a manifest (build wave,
-        incremental batch — whose data files are only visible once the
-        manifest commits), or appends a tombstone file
-        (delete_by_query).  This keeps the per-request cost
-        O(segments), not O(data files) — at 100 TB the difference
-        between a few dozen stat calls and walking millions of parquet
-        parts on every cached search."""
-        d = self.engine.index.index_dir
-        parts = []
-        for f in ("plan.json", "stats.json"):
-            try:
-                st = os.stat(os.path.join(d, f))
-                parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-            except OSError:
-                parts.append(f"{f}:gone")
-        for member in ("manifests", "deletes"):
-            root = os.path.join(d, member)
-            if not os.path.isdir(root):
-                parts.append(f"{member}:absent")
-                continue
-            for name in sorted(os.listdir(root)):
-                try:
-                    st = os.stat(os.path.join(root, name))
-                    parts.append(f"{member}/{name}:{st.st_size}:{st.st_mtime_ns}")
-                except OSError:
-                    parts.append(f"{member}/{name}:gone")
-        return "|".join(parts)
+        return commit_fingerprint(self.engine.index.index_dir)
 
     @staticmethod
     def _request_key(query, kw: Dict) -> str:

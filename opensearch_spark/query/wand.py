@@ -29,6 +29,15 @@ score ``>= t`` is the exact top-k, exactly scored.  Docs with a pruned
 contribution may be under-scored but are filtered by ``>= t`` and
 provably below rank k.
 
+Dictionary gate (before pass 0): the term-stats memo holds each term's
+  block count, so the driver path knows for free when pruning cannot
+  pay.  When no query term has k blocks (so no metadata threshold
+  exists) and the pass-1 sample would cover more than
+  ``MAX_KEPT_FRACTION`` of the query's blocks, the query is scored
+  densely before ``block_meta()`` is pinned or any block decoded, and
+  ``LAST_PRUNE_STATS["bailed"]`` records it, as the post-threshold cost
+  gate does.
+
 At 100 TB this is the difference between decoding a stopword's
 billion-doc posting list and decoding a few hundred blocks: the prune
 predicate is evaluated on block *metadata* (tiny columnar scan), and
@@ -151,7 +160,8 @@ def pruned_match_topk(
     if not present:
         return engine._empty_scored()
 
-    n_blocks_total = int(stats["n_blocks"].sum()) if "n_blocks" in stats else 0
+    n_blocks = {t: int(n) for t, n in zip(stats["term"], stats["n_blocks"])}
+    n_blocks_total = sum(n_blocks.values())
     if n_blocks_total > MAX_DRIVER_META_BLOCKS:
         bounds = block_bounds_df(
             engine.index, present, idf_by_term, avgdl, engine.k1, engine.b
@@ -159,6 +169,20 @@ def pruned_match_topk(
         return _pruned_distributed(
             engine, present, weights, idf_by_term, avgdl, bounds, k, sample_blocks_per_term
         )
+    # ---- dictionary gate: bail before any metadata job -------------
+    # with no term of >= k blocks there is no metadata threshold, so
+    # the threshold would come from decoding a sample of up to
+    # sample_blocks_per_term blocks per term; when that sample alone
+    # covers more than MAX_KEPT_FRACTION of the query's blocks, pruning
+    # cannot pay for its passes — known from the term-stats memo,
+    # before block_meta() is pinned or a block decoded
+    sample = sum(min(n_blocks[t], sample_blocks_per_term) for t in present)
+    if max(n_blocks[t] for t in present) < k and sample > MAX_KEPT_FRACTION * n_blocks_total:
+        LAST_PRUNE_STATS.clear()
+        LAST_PRUNE_STATS.update(
+            {"kept_blocks": sample, "total_blocks": n_blocks_total, "bailed": True}
+        )
+        return engine._score_terms_or(weights, required=1)
     # ---- driver path: ONE metadata action + pass 2 -------------------
     # block metadata for the query's terms is pulled once from the
     # executor-pinned block_meta frame (<= MAX_DRIVER_META_BLOCKS rows,

@@ -30,7 +30,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from typing import Dict, List, Optional
+from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from opensearch_spark.index.builder import IndexConfig
 from opensearch_spark.index.reader import InvertedIndex
 from opensearch_spark.query.executor import SearchEngine
+from opensearch_spark.query.request_cache import commit_fingerprint
 from opensearch_spark.streaming import incremental as inc
 
 
@@ -48,6 +49,8 @@ class DataStream:
         self.spark = spark
         self.root = root
         self.cfg = cfg
+        # generation -> (commit fingerprint, engine), see _engine
+        self._engines: Dict[int, Tuple[str, SearchEngine]] = {}
 
     # ---- manifest ----
 
@@ -132,23 +135,31 @@ class DataStream:
 
     # ---- search ----
 
-    def engines(self) -> List[SearchEngine]:
-        """One engine per non-empty generation (an empty write index has
-        no stats to score with and matches nothing)."""
-        out = []
-        for g in self._live_generations():
-            idx = InvertedIndex(self.spark, self._gen_dir(g))
-            out.append(SearchEngine(idx))
-        return out
+    def _engine(self, gen: int) -> SearchEngine:
+        """The generation's engine, kept until the generation's commit
+        fingerprint changes (``RequestCache``'s rule): its handle's term
+        statistics and opened tables serve every search until then, and
+        an append reopens only the write generation."""
+        key = commit_fingerprint(self._gen_dir(gen))
+        held = self._engines.get(gen)
+        if held is None or held[0] != key:
+            held = (key, SearchEngine(InvertedIndex(self.spark, self._gen_dir(gen))))
+            self._engines[gen] = held
+        return held[1]
 
-    def _live_generations(self) -> List[int]:
-        """Generation numbers with >= 1 doc, aligned with engines()."""
+    def _live(self) -> List[Tuple[int, SearchEngine]]:
+        """(generation, engine) of each non-empty generation (an empty
+        write index has no stats to score with and matches nothing)."""
         out = []
         for g in self.generations():
-            idx = InvertedIndex(self.spark, self._gen_dir(g))
-            if int(idx.stats["n_docs"]) > 0:
-                out.append(g)
+            eng = self._engine(g)
+            if int(eng.index.stats["n_docs"]) > 0:
+                out.append((g, eng))
         return out
+
+    def engines(self) -> List[SearchEngine]:
+        """One engine per non-empty generation."""
+        return [eng for _, eng in self._live()]
 
     def search(
         self,
@@ -172,7 +183,7 @@ class DataStream:
         stream's generations."""
         boosts = {int(k): float(v) for k, v in (indices_boost or {}).items()}
         parts = []
-        for gen, eng in zip(self._live_generations(), self.engines()):
+        for gen, eng in self._live():
             scored = eng._score_with_deletes_applied(query)
             b = boosts.get(gen, 1.0)
             if b != 1.0:

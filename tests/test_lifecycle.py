@@ -44,6 +44,24 @@ def test_soft_delete_hides_docs(spark, lifecycle_idx):
     assert delete_by_query(eng, {"ids": {"values": [list(victim)]}}) == 0
 
 
+def test_tombstone_frame_runs_no_job(spark, lifecycle_idx):
+    """Tombstones are read with the schema every writer writes, so
+    building the frame a search anti-joins runs no inference job."""
+    from opensearch_spark.index.lifecycle import tombstone_docids
+
+    from test_plans import _jobs_in_group
+
+    eng = SearchEngine(InvertedIndex(spark, lifecycle_idx))
+    hit = eng.search({"match": {"text": "timeout"}}, size=1).collect()[0]
+    assert delete_by_query(eng, {"ids": {"values": [[hit["conv_id"], hit["turn_idx"]]]}}) == 1
+    dels = []
+    assert _jobs_in_group(
+        spark, "tombstones", lambda: dels.append(tombstone_docids(spark, lifecycle_idx))
+    ) == 0
+    assert dels[0].schema.simpleString() == "struct<_docid:bigint>"
+    assert dels[0].count() == 1
+
+
 def test_merge_expunges_deletes(spark, lifecycle_idx, tmp_path):
     eng = SearchEngine(InvertedIndex(spark, lifecycle_idx))
     q = {"match": {"text": "timeout"}}

@@ -192,6 +192,36 @@ def test_data_stream_rollover_and_fanout_search(spark, tmp_path):
     assert len(ds.search({"match": {"text": "error handling"}}, size=5).collect()) == 5
 
 
+def test_data_stream_keeps_one_engine_per_generation(spark, tmp_path, monkeypatch):
+    """A generation's engine serves the stream's searches until that
+    generation's commit changes: a second search loads no dictionary,
+    and an append reopens only the write generation."""
+    from opensearch_spark.streaming.datastream import DataStream
+
+    docs = generate(spark, 20, partitions=2)
+    cfg = IndexConfig(n_segments=2)
+    ds = DataStream(spark, str(tmp_path / "ds"), cfg).create(docs.schema)
+    ds.append(docs, batch_id=0)
+    assert ds.rollover(max_docs=1, schema=docs.schema)
+    later = generate(spark, 6, seed=7, partitions=1)
+    ds.append(later, batch_id=0)
+    q = {"match": {"text": "error handling"}}
+    first = ds.search(q, size=10).collect()
+    engines = ds.engines()
+    loads = []
+    real = InvertedIndex._load_term_stats
+    monkeypatch.setattr(
+        InvertedIndex, "_load_term_stats", lambda self: loads.append(self.index_dir) or real(self)
+    )
+    assert ds.search(q, size=10).collect() == first
+    assert loads == []
+    ds.append(later.withColumn("conv_id", F.concat(F.lit("b1-"), "conv_id")), batch_id=1)
+    ds.search(q, size=10).collect()
+    assert loads == [ds.write_index()]
+    after = ds.engines()
+    assert after[0] is engines[0] and after[1] is not engines[1]
+
+
 def test_incremental_index_sort_honored_and_guarded(spark, tmp_path):
     """Appends to a sorted incremental index keep each new segment in
     the configured order; a cfg whose index_sort disagrees with the

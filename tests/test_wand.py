@@ -82,3 +82,41 @@ def test_auto_prune_decision_sums_dictionary_blocks(engine, monkeypatch, qi):
     assert engine._wand_auto(q)
     monkeypatch.setattr(executor, "WAND_AUTO_MIN_BLOCKS", blocks + 1)
     assert not engine._wand_auto(q)
+
+
+def test_dictionary_gate_bails_before_metadata(spark, index_dir):
+    """A query whose terms all have fewer than k blocks has no metadata
+    threshold, and its decode sample would cover most of its blocks:
+    the driver path scores it densely, decided from the term-stats memo
+    before ``block_meta()`` is pinned or any job runs, and the answer
+    equals dense."""
+    from opensearch_spark.index.reader import InvertedIndex
+    from opensearch_spark.query.executor import SearchEngine
+
+    from test_plans import _jobs_in_group
+
+    idx = InvertedIndex(spark, index_dir)
+    idx._load_term_stats()
+    memo = idx.__dict__["_term_stats_cache"]
+    # the two most frequent terms a 4-block sample would mostly cover
+    few = [t for t, v in memo.items()
+           if v and v[2] < 10 and min(v[2], 4) > wand.MAX_KEPT_FRACTION * v[2]]
+    terms = sorted(few, key=lambda t: (-memo[t][0], t))[:2]
+    assert len(terms) == 2 and min(memo[t][0] for t in terms) >= 10, terms
+    q = {"match": {"text": " ".join(terms)}}
+    dense = SearchEngine(InvertedIndex(spark, index_dir)).search(q, size=10).collect()
+
+    eng = SearchEngine(idx)
+    wand.LAST_PRUNE_STATS.clear()
+    planned = []
+    assert _jobs_in_group(
+        spark, "dictionary-gate", lambda: planned.append(eng.search(q, size=10, prune=True))
+    ) == 0
+    assert wand.LAST_PRUNE_STATS["bailed"]
+    assert "_block_meta_df" not in idx.__dict__
+    pruned = planned[0].collect()
+    assert [(r["conv_id"], r["turn_idx"]) for r in dense] == [
+        (r["conv_id"], r["turn_idx"]) for r in pruned
+    ]
+    for a, b in zip(dense, pruned):
+        assert a["score"] == pytest.approx(b["score"], rel=1e-9)
